@@ -42,7 +42,7 @@ import graft.store.{Collection, GraftError, SPath}
   *    distribution on the index column, so Spark range-partitions +
   *    sorts the replacement rows: each period lands in ~one task (one
   *    file per period per salt-equivalent, the same file shape
-  *    `commitMonths` produces) and files stay sorted by index for
+  *    a period commit produces) and files stay sorted by index for
   *    row-group stat locality.
   *
   * Cost scales with the periods the predicate can touch, not item

@@ -133,6 +133,22 @@ object Collection {
   private[graft] def opTag(op: String): Map[String, JValue] =
     Map(History.OpKey -> Meta.jv(op))
 
+  /** What a [[Collection.publish]] swaps in: the item's whole data dir
+    * (`partitioned` when the staging holds period subdirs), or only the
+    * listed periods — a listed period absent from the staging is a
+    * removal. */
+  private[graft] sealed trait CommitScope
+  private[graft] final case class Full(partitioned: Boolean) extends CommitScope
+  private[graft] final case class Periods(months: Seq[String]) extends CommitScope
+
+  /** What a scope's swap step hands back to [[Collection.publish]]: the
+    * periods the history entry names, the sidecar's new `_period_gens`
+    * (None keeps what `meta` carries), and the cleanup that may run
+    * only once the commit-point sidecar write has landed. */
+  private final case class Swapped(touched: Seq[String],
+                                   periodGens: Option[Map[String, Long]],
+                                   cleanup: () => Unit)
+
   private[graft] def reservedSuffixOf(name: String): Option[String] = {
     val i = name.lastIndexOf('$')
     if (i <= 0 || i == name.length - 1) None
@@ -431,9 +447,9 @@ object Collection {
 
   /** Publish-point observer for the CALLING thread: fired with
     * (collection, item, newGeneration) immediately after a commit
-    * point lands (the sidecar write in [[Collection.publishFull]] /
-    * [[Collection.publishMonths]]), BEFORE any post-commit work that
-    * may still throw (stats read-back, cleanup). [[graft.transactions
+    * point lands (the sidecar write in [[Collection.publish]]), BEFORE
+    * any post-commit work that may still throw (stats read-back,
+    * cleanup). [[graft.transactions
     * .Transaction]] installs it so the generation its own op PRODUCED
     * is recorded even when the op throws after publishing — otherwise
     * rollback's foreign-commit detection would mistake the txn's own
@@ -468,7 +484,7 @@ object Collection {
     * [[Collection.withItemProcessLock]] reentrant (a filesystem lock
     * has no owner-thread notion of its own; the publish path can be
     * reached from verbs that already hold the item's lock, e.g.
-    * addColumns → purge rewrite → publishFull). */
+    * addColumns → purge rewrite → publish). */
   private val heldProcessLocks =
     new ThreadLocal[scala.collection.mutable.Set[String]] {
       override def initialValue(): scala.collection.mutable.Set[String] =
@@ -1020,6 +1036,13 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // (single-partition or unsupported-dtype flat writes, time
     // layouts), the stats are OBSERVED during the commit's own parquet
     // job as before.
+    // The input plan must be DETERMINISTIC: a planning scan is a
+    // separate execution from the staging job, so the sidecar's
+    // _rows/min/max and the cuts describe the rows THAT execution saw.
+    // A non-deterministic input (unseeded sample, rand(), a source that
+    // changes between reads) would publish stats of rows never written;
+    // the cuts only skew balance, but the stats feed later appends'
+    // layout decisions.
     val flatKey: Option[org.apache.spark.sql.Column] =
       if (isTime || indexCols.size != 1) None
       else Partitioner.sortKeyExpr(encoded, indexCols.head)
@@ -1057,7 +1080,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           min(col(indexCols.head)).as("mn"), max(col(indexCols.head)).as("mx"))
       else laidOut0.observe(o, count(lit(1)).as("r"))
     }
-    // evaluated by commit() AFTER the parquet job ran (meta is by-name)
+    // evaluated by publish() AFTER the parquet job ran (meta is by-name)
     def stats: Partitioner.IndexStats = preStats.getOrElse {
       val row = obs.get.get
       val r = row("r").asInstanceOf[Long]
@@ -1091,10 +1114,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
        else Map("_type_info" -> Codecs.markersToMeta(allMarkers))) ++
       (if (statsColumns.isEmpty) Map.empty
        else Meta.obj("_stats_cols" -> statsColumns))
-    commit(item, laidOut,
-      Meta.obj(metadata.toSeq: _*) ++ extra ++ Collection.opTag("write"),
-      partitioned = isTime)
-    if (isTime && statsColumns.nonEmpty) maybeRefreshPeriodStats(item, None)
+    publish(item, stage(item, laidOut, partitioned = isTime), Full(isTime),
+      Meta.obj(metadata.toSeq: _*) ++ extra ++ Collection.opTag("write"))
     } finally releaseIndex()
   }
 
@@ -1111,7 +1132,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * the touched periods, like the partial commits it follows.
     *
     * Crash safety: the COMMIT itself already dropped the touched
-    * periods' entries in its own meta write (commit/commitMonths), so
+    * periods' entries in its own meta write ([[publish]]), so
     * this read-back only ever re-establishes intervals — a crash
     * anywhere in the commit→refresh window leaves absent (unprunable,
     * conservative) entries, never stale ones. */
@@ -1314,72 +1335,119 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     path.resolve(TmpPrefix + item + "_" +
       java.util.UUID.randomUUID().toString.take(8))
 
-  /** Write df to a tmp dir then atomically swap into place, then write
-    * the sidecar and refresh caches. Part-files live under
-    * `<item>/data/` so the parquet dataset dir contains nothing but
-    * parquet; the JSON sidecar sits at the item root. */
-  private def commit(item: String, df: DataFrame, meta: => Map[String, JValue],
-                     partitioned: Boolean = false,
-                     expectedGen: Option[Long] = None,
-                     expectedMeta: Option[Map[String, JValue]] = None): Unit = {
+  /** Stage `df` as parquet in a writer-private dir and return it for
+    * [[publish]] — the heavy job of every commit, run OUTSIDE all locks.
+    * Part-files sit where the item's `data/` dir will hold them after
+    * the swap (under `__month=<p>/` subdirs when `partitioned`), so the
+    * parquet dataset dir contains nothing but parquet; the JSON sidecar
+    * sits at the item root. */
+  private def stage(item: String, df: DataFrame, partitioned: Boolean): SPath = {
     val tmp = stagingDir(item)
     tmp.deleteRecursively()
     val writer = df.write.mode("overwrite").option("compression", "snappy")
     (if (partitioned) writer.partitionBy(MonthCol) else writer).parquet(tmp.toString)
     Collection.commitSeamHook(s"staged_pre_publish:$item") // outside all locks
-    // `meta` is BY-NAME and first forced HERE — after the parquet job —
-    // so write()'s observed index stats (collected during that job) can
-    // ride the same sidecar publish without a second input scan
-    publishFull(item, tmp, meta, partitioned, expectedGen, expectedMeta)
+    tmp
   }
 
-  /** Atomic publication half of [[commit]] — retain + swap + sidecar
-    * from an already-staged `tmp` dir (the heavy parquet job runs
-    * OUTSIDE the commit lock; callers besides commit() are the
-    * row-level COW path, whose staging the executors wrote). */
-  private[graft] def publishFull(item: String, tmp: SPath, meta: Map[String, JValue],
-                                 partitioned: Boolean,
-                                 expectedGen: Option[Long] = None,
-                                 expectedMeta: Option[Map[String, JValue]] = None): Unit = {
-    withCommitLock { withItemDdlLock(item) {
-    // Generation FENCE (compare-and-swap): a read-modify-write path
-    // (append, deleteWhere) captured the committed generation when it
-    // read the old state; if another writer — thread or process —
-    // committed since, publishing this staging would CLOBBER that
-    // commit's rows. Refuse typed instead; append retries over the
-    // fresh state. Atomic because the check and the sidecar write sit
-    // under the same item locks (and, in multiprocess mode, the same
-    // cross-process lock).
-    expectedGen.foreach { base =>
-      val cur = Snapshots.generationOf(Meta.read(path.resolve(item)))
-      if (cur != base) {
-        tmp.deleteRecursively()
-        throw new ConcurrentWriteError(
-          s"item '$item' was committed by another writer (generation " +
-            s"$cur, this mutation read $base) — the staged rewrite would " +
-            "lose that commit's rows")
-      }
+  /** Atomic publication of an already-staged dir: the one commit path
+    * of every data mutation (staged by [[stage]], or by the executors
+    * for the row-level COW path). Under the commit lock and the item's
+    * DDL lock it runs the fences, the scope's swap ([[swapFull]] or
+    * [[swapPeriods]]), the commit-point sidecar write, the publish
+    * observer and the swap's cleanup; once it releases those locks, the
+    * post-commit refresh ([[refreshAfterPublish]]), whose read-backs
+    * are Spark jobs.
+    *
+    * `meta` is BY-NAME and first forced HERE — after the staging job —
+    * so write()'s observed index stats (collected during that job) can
+    * ride the same sidecar publish without a second input scan, and a
+    * crash before this point never publishes stats for data that did
+    * not land. */
+  private[graft] def publish(item: String, staged: SPath, scope: CommitScope,
+                             meta: => Map[String, JValue],
+                             expectedGen: Option[Long] = None,
+                             expectedMeta: Option[Map[String, JValue]] = None): Unit = {
+    val next = meta
+    def refuse(why: String): Nothing = {
+      staged.deleteRecursively()
+      throw new ConcurrentWriteError(why)
     }
-    // SIDECAR fence, for stagings whose `meta` merges over a full
-    // sidecar read (every read-modify-write publisher — append,
-    // deleteWhere, expire, rebalance, convertLayout, z-order, the COW
-    // row ops, renameColumn): metadata-only DDL (add/drop column,
-    // properties) writes the sidecar WITHOUT advancing the generation —
-    // deliberately, generations identify DATA states — so the gen fence
-    // above cannot see it, and publishing this staging's merged meta
-    // would silently revert that DDL. Any sidecar write changes the map
-    // (history/`_updated` move even when nothing else does), so full
-    // equality against the map the staging read is the exact test.
-    // Refuse typed; retryOnConflict re-reads and re-stages.
-    expectedMeta.foreach { base =>
-      if (Meta.read(path.resolve(item)) != base) {
-        tmp.deleteRecursively()
-        throw new ConcurrentWriteError(
-          s"item '$item''s sidecar changed since this rewrite read it " +
-            "(a concurrent DDL or metadata write) — publishing would " +
-            "revert that change")
+    val gens = withCommitLock { withItemDdlLock(item) {
+      // ONE sidecar read serves both fences, the swap and the log.
+      val cur = Meta.read(path.resolve(item))
+      val oldGen = Snapshots.generationOf(cur)
+      // Generation FENCE (compare-and-swap): a read-modify-write path
+      // (append, deleteWhere) captured the committed generation when it
+      // read the old state; if another writer — thread or process —
+      // committed since, publishing this staging would CLOBBER that
+      // commit's rows. Refuse typed instead; append retries over the
+      // fresh state. Atomic because the check and the sidecar write sit
+      // under the same item locks (and, in multiprocess mode, the same
+      // cross-process lock).
+      expectedGen.filter(_ != oldGen).foreach { base =>
+        refuse(s"item '$item' was committed by another writer (generation " +
+          s"$oldGen, this mutation read $base) — the staged rewrite would " +
+          "lose that commit's rows")
       }
-    }
+      // SIDECAR fence, for stagings whose `meta` merges over a full
+      // sidecar read (every read-modify-write publisher — append,
+      // deleteWhere, expire, rebalance, convertLayout, z-order, the COW
+      // row ops, renameColumn): metadata-only DDL (add/drop column,
+      // properties) writes the sidecar WITHOUT advancing the generation —
+      // deliberately, generations identify DATA states — so the gen fence
+      // above cannot see it, and publishing this staging's merged meta
+      // would silently revert that DDL. Any sidecar write changes the map
+      // (history/`_updated` move even when nothing else does), so full
+      // equality against the map the staging read is the exact test.
+      // Refuse typed; retryOnConflict re-reads and re-stages.
+      if (expectedMeta.exists(_ != cur))
+        refuse(s"item '$item''s sidecar changed since this rewrite read it " +
+          "(a concurrent DDL or metadata write) — publishing would " +
+          "revert that change")
+      val gen = System.nanoTime()
+      val (seam, swapped) = scope match {
+        case Full(partitioned) => ("full", swapFull(item, staged, partitioned, gen))
+        case Periods(months)   => ("months", swapPeriods(item, staged, months, cur, gen))
+      }
+      Collection.commitSeamHook(s"${seam}_pre_sidecar:$item")
+      // Staleness must be detectable ATOMICALLY with the swap: the
+      // swapped periods' `_period_stats` entries drop in THIS write —
+      // every entry on a full commit, the listed periods' on a period
+      // commit — so absent entries are unprunable (conservative) until
+      // the post-commit refresh re-establishes them, and a crash in
+      // between disables pruning instead of silently under-deleting.
+      // A full commit swapped EVERY data file, all rewritten from the
+      // declared-schema (masked) read — no pre-drop bytes survive, so
+      // the dropped-column mask has nothing left to purge and clears
+      // here for free. Period commits keep it: untouched periods still
+      // hold masked bytes.
+      val kept = scope match {
+        case Full(_) => next - "_period_stats" - Collection.DroppedColsKey
+        case Periods(months) => next.get("_period_stats") match {
+          case Some(JObject(fs)) => next + ("_period_stats" ->
+            JObject(fs.filterNot { case (p, _) => months.contains(p) }))
+          case _ => next
+        }
+      }
+      writeSidecar(item, cur,
+        (kept - History.OpKey) + ("_generation" -> Meta.jv(gen)) ++
+          swapped.periodGens.map(pg => "_period_gens" -> Meta.jv(pg)),
+        History.opOf(next), gen, swapped.touched)
+      Option(Collection.publishObserver.get).foreach(_(this, item, gen))
+      Collection.commitSeamHook(s"${seam}_post_sidecar:$item")
+      swapped.cleanup()
+      refreshItems()
+      (oldGen, gen)
+    } }
+    refreshAfterPublish(item, scope, next, gens)
+  }
+
+  /** Full-scope swap: the staged dir replaces the item's whole data dir
+    * in one [[StoreFs.atomicSwap]] — the COMMIT POINT of a full commit;
+    * the sidecar write trails it as bookkeeping. */
+  private def swapFull(item: String, staged: SPath, partitioned: Boolean,
+                       gen: Long): Swapped = {
     Collection.commitSeamHook(s"full_staged:$item") // no-op outside crash tests
     path.resolve(item).mkdirs()
     // Copy-on-write for manifest snapshots: pinned old generations are
@@ -1393,117 +1461,29 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     Snapshots.retainPeriodsIfPinned(path, item)
     Snapshots.retainIfPinned(path, item)
     Collection.commitSeamHook(s"full_retained:$item")
-    val gen = System.nanoTime()
     // fresh per-period gens for time layouts: the period list is the
-    // tmp dir's partition dirs (cheap driver listing, no extra job)
-    val periodGens: Map[String, JValue] =
-      if (!partitioned) Map.empty
-      else Meta.obj("_period_gens" -> tmp.listDirs
-        .filter(_.startsWith(MonthCol + "="))
-        .map(d => d.stripPrefix(MonthCol + "=") -> gen).toMap)
-    path.fs.atomicSwap(path.resolve(item).resolve(Item.DataDir).raw, tmp.raw)
-    Collection.commitSeamHook(s"full_pre_sidecar:$item")
-    // Staleness must be detectable ATOMICALLY with the data swap: a full
-    // rewrite invalidates every per-period stats interval, so the meta
-    // committed here carries NO `_period_stats` — absent entries are
-    // unprunable (conservative) until the post-commit refresh
-    // re-establishes them. A crash between this write and the refresh
-    // therefore disables pruning instead of silently under-deleting.
-    val periodsTouched = periodGens.get("_period_gens") match {
-      case Some(org.json4s.JObject(fs)) => fs.map(_._1).sorted
-      case _ => Nil
-    }
-    // A full commit swapped EVERY data file, all rewritten from the
-    // declared-schema (masked) read — no pre-drop bytes survive, so the
-    // dropped-column mask has nothing left to purge and clears here for
-    // free. Partial month commits (publishMonths) keep it: untouched
-    // periods still hold masked bytes.
-    Meta.write(path.resolve(item),
-      (meta - "_period_stats" - History.OpKey - Collection.DroppedColsKey) +
-        ("_generation" -> Meta.jv(gen)) ++ periodGens +
-        (History.Key -> History.appendedSpilling(path.resolve(item),
-          historyCarrier(item, meta), History.opOf(meta), gen, periodsTouched)))
-    Option(Collection.publishObserver.get).foreach(_(this, item, gen))
-    Collection.commitSeamHook(s"full_post_sidecar:$item")
-    metaCache.remove(item)
-    refreshItems()
-    } }
-    ()
+    // staged dir's partition dirs (cheap driver listing, no extra job)
+    val periods =
+      if (!partitioned) Nil
+      else staged.listDirs.filter(_.startsWith(MonthCol + "="))
+        .map(_.stripPrefix(MonthCol + "=")).sorted
+    path.fs.atomicSwap(path.resolve(item).resolve(Item.DataDir).raw, staged.raw)
+    Swapped(periods, if (partitioned) Some(periods.map(_ -> gen).toMap) else None,
+      () => ())
   }
 
-  /** The meta map whose `_history` the commit's log entry extends:
-    * usually the caller's map (callers merge the stored sidecar in), but
-    * a fresh-meta OVERWRITE (Collection.write replaces user metadata
-    * wholesale) must not truncate the item's commit log — fall back to
-    * one tiny sidecar read. */
-  private def historyCarrier(item: String,
-                             meta: Map[String, JValue]): Map[String, JValue] =
-    if (meta.contains(History.Key)) meta
-    else meta ++ Meta.read(path.resolve(item)).get(History.Key)
-      .map(h => Map(History.Key -> h)).getOrElse(Map.empty)
-
-  /** Partial commit for monthly-layout appends: ONLY the month
-    * directories present in `df` are swapped; every other month's
-    * files are untouched. This is what makes appends to a 100 TB item
-    * incremental — cost scales with the months the batch touches, not
-    * the item size. Each month dir swaps atomically (backup + rename);
-    * a failure mid-sequence restores the already-swapped months. */
-  private def commitMonths(item: String, df: DataFrame, months: Seq[String],
-                           meta: Map[String, JValue],
-                           expectedGen: Option[Long] = None,
-                           expectedMeta: Option[Map[String, JValue]] = None): (Long, Long) = {
-    val tmp = stagingDir(item)
-    tmp.deleteRecursively()
-    df.write.mode("overwrite").option("compression", "snappy")
-      .partitionBy(MonthCol).parquet(tmp.toString)
-    publishMonths(item, tmp, months, meta, expectedGen, expectedMeta)
-  }
-
-  /** Atomic publication half of [[commitMonths]] — the per-period
-    * swap sequence from an already-staged `tmp` dir holding
-    * `__month=<m>/` subdirs. A month in `months` absent from `tmp`
-    * is a removal. Shared with the row-level COW path. Returns the
-    * (replaced, committed) generation pair so post-commit derived
-    * bookkeeping (the incremental bloom refresh) can key itself to
-    * THIS commit — reading the sidecar back instead would race a
-    * foreign commit landing right after ours. */
-  private[graft] def publishMonths(item: String, tmp: SPath, months: Seq[String],
-                                   meta: Map[String, JValue],
-                                   expectedGen: Option[Long] = None,
-                                   expectedMeta: Option[Map[String, JValue]] = None): (Long, Long) = {
-    withCommitLock { withItemDdlLock(item) {
+  /** Period-scope swap for partial commits: ONLY the listed period
+    * directories are swapped; every other period's files are untouched.
+    * This is what makes appends to a 100 TB item incremental — cost
+    * scales with the periods the batch touches, not the item size. Each
+    * period dir swaps by O(1) renames; a failure mid-sequence restores
+    * the already-swapped periods. The COMMIT POINT is the sidecar write
+    * that follows in [[publish]]. */
+  private def swapPeriods(item: String, staged: SPath, months: Seq[String],
+                          cur: Map[String, JValue], gen: Long): Swapped = {
     val dataDir = path.resolve(item).resolve(Item.DataDir)
-    val meta0 = Meta.read(path.resolve(item))
-    val oldPg = Snapshots.periodGensOf(meta0)
-    val oldGen = Snapshots.generationOf(meta0)
-    // SIDECAR fence — same contract as publishFull's: `meta` merges
-    // over a full sidecar read taken at STAGING time, and a
-    // metadata-only DDL (gen unchanged by design) landing during the
-    // staging job would be silently reverted by publishing that merge.
-    // Refuse typed; retryOnConflict re-reads and re-stages.
-    expectedMeta.foreach { base =>
-      if (meta0 != base) {
-        tmp.deleteRecursively()
-        throw new ConcurrentWriteError(
-          s"item '$item''s sidecar changed since this rewrite read it " +
-            "(a concurrent DDL or metadata write) — publishing would " +
-            "revert that change")
-      }
-    }
-    // Generation FENCE — same contract as publishFull's: refuse (and
-    // let append retry) rather than clobber a commit that landed
-    // between this mutation's read and its publish.
-    expectedGen.foreach { base =>
-      if (oldGen != base) {
-        tmp.deleteRecursively()
-        throw new ConcurrentWriteError(
-          s"item '$item' was committed by another writer (generation " +
-            s"$oldGen, this mutation read $base) — the staged months would " +
-            "lose that commit's rows")
-      }
-    }
+    val oldPg = Snapshots.periodGensOf(cur)
     val pinned = Snapshots.pinnedPeriodGens(path, item)
-    val gen = System.nanoTime()
     // O(1) renames only: a replaced month dir moves aside — to the
     // manifest-retained area when its generation is pinned (kept on
     // success: that IS the copy-on-write), to a rollback backup
@@ -1516,7 +1496,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // new and some old — torn. The journal records, per month, where
     // the old dir went (`aside`) and whether that copy is snapshot-
     // retained (kept on success), plus the PRE-commit generation; the
-    // sidecar write below is the COMMIT POINT, so vacuum's repair can
+    // sidecar write is the COMMIT POINT, so vacuum's repair can
     // decide exactly: sidecar generation unchanged → roll every month
     // BACK from its aside; generation advanced → roll FORWARD (drop the
     // non-retained asides). One tiny atomic JSON write per partial
@@ -1526,19 +1506,20 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val intentMonths = scala.collection.mutable.ArrayBuffer.empty[JValue]
     def writeIntent(): Unit = path.fs.writeBytesAtomic(intent.raw,
       org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
-        JObject(List("item" -> Meta.jv(item), "old_gen" -> Meta.jv(oldGen),
+        JObject(List("item" -> Meta.jv(item),
+          "old_gen" -> Meta.jv(Snapshots.generationOf(cur)),
           "months" -> org.json4s.JArray(intentMonths.toList)))))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     var plan = Seq.empty[(String, SPath, SPath, SPath, Boolean, Boolean, Boolean)]
     try {
       // one pass to plan (and journal) before any rename happens
       plan = months.flatMap { m =>
-        val src = tmp.resolve(s"$MonthCol=$m")
+        val src = staged.resolve(s"$MonthCol=$m")
         val dst = dataDir.resolve(s"$MonthCol=$m")
-        // a month listed but ABSENT from tmp means the new state holds
-        // no rows for it (deleteWhere emptied it): the old dir moves
-        // aside like any replaced month — pinned generations retained,
-        // unpinned backed up for rollback — and nothing moves in
+        // a month listed but ABSENT from the staging means the new state
+        // holds no rows for it (deleteWhere emptied it): the old dir
+        // moves aside like any replaced month — pinned generations
+        // retained, unpinned backed up for rollback — and nothing moves in
         val srcExists = src.isDir
         if (!srcExists && !dst.isDir) None
         else {
@@ -1594,46 +1575,69 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           try intent.deleteRecursively() catch { case _: Exception => () }
         throw new StorageError(s"partial month commit failed for $item: ${e.getMessage}")
     }
-    Collection.commitSeamHook(s"months_pre_sidecar:$item")
-    // Same atomic-staleness rule as commit(): the TOUCHED periods'
-    // stats entries are dropped in THIS meta write (absent = unprunable)
-    // so a crash before the post-commit refresh can never leave a stale
-    // interval that prunes a period now holding qualifying rows.
-    val statsDropped = meta.get("_period_stats") match {
-      case Some(org.json4s.JObject(fs)) =>
-        meta + ("_period_stats" -> org.json4s.JObject(
-          fs.filterNot { case (p, _) => months.contains(p) }))
-      case _ => meta
-    }
-    // COMMIT POINT: the generation advances here. Backups die only
-    // AFTER this write — a kill anywhere before it rolls back cleanly
-    // (every replaced month still has its aside), a kill after it
-    // rolls forward (vacuum drops the leftover asides).
-    Meta.write(path.resolve(item),
-      (statsDropped - History.OpKey) + ("_generation" -> Meta.jv(gen)) +
-        ("_period_gens" -> Meta.jv(
-          (oldPg -- removedMonths) ++ swappedMonths.map(_ -> gen).toMap)) +
-        (History.Key -> History.appendedSpilling(path.resolve(item),
-          historyCarrier(item, meta), History.opOf(meta), gen,
-          (swappedMonths ++ removedMonths).toSeq.sorted)))
-    Option(Collection.publishObserver.get).foreach(_(this, item, gen))
-    Collection.commitSeamHook(s"months_post_sidecar:$item")
-    // success: unpinned backups die, retained period dirs stay. The
-    // commit PUBLISHED at the meta write above, so cleanup failures
-    // here must not surface as a failed commit — vacuum's repair
-    // reclaims whatever survives (the intent records the advanced
-    // generation, so it rolls forward, never back).
-    try {
-      swapped.foreach { case (_, b, isPinned) =>
-        if (!isPinned) b.foreach(_.deleteRecursively())
-      }
-      tmp.deleteRecursively()
-      intent.deleteRecursively()
-    } catch { case _: Exception => () }
+    Swapped((swappedMonths ++ removedMonths).toSeq.sorted,
+      Some((oldPg -- removedMonths) ++ swappedMonths.map(_ -> gen).toMap),
+      // success: unpinned backups die, retained period dirs stay. The
+      // commit PUBLISHED at the sidecar write, so cleanup failures
+      // here must not surface as a failed commit — vacuum's repair
+      // reclaims whatever survives (the intent records the advanced
+      // generation, so it rolls forward, never back).
+      () => try {
+        swapped.foreach { case (_, b, isPinned) =>
+          if (!isPinned) b.foreach(_.deleteRecursively())
+        }
+        staged.deleteRecursively()
+        intent.deleteRecursively()
+      } catch { case _: Exception => () })
+  }
+
+  /** The one sidecar-and-history write of an item commit — a data
+    * publish's commit-point write and every metadata-only DDL write:
+    * `next` lands with one `_history` entry (verb `op`, generation
+    * `gen`, naming `periods`) appended to the log `prior` carries — the
+    * sidecar as read under the same locks, so a fresh-meta overwrite
+    * (write() replaces user metadata wholesale) extends the item's
+    * commit log instead of truncating it — and the cached meta drops. */
+  private def writeSidecar(item: String, prior: Map[String, JValue],
+                           next: Map[String, JValue], op: String, gen: Long,
+                           periods: Seq[String]): Unit = {
+    val itemPath = path.resolve(item)
+    Meta.write(itemPath, next + (History.Key ->
+      History.appendedSpilling(itemPath, prior, op, gen, periods)))
     metaCache.remove(item)
-    refreshItems()
-    (oldGen, gen)
+  }
+
+  /** A metadata-only sidecar mutation (column ADD/DROP, properties,
+    * stats declaration): under the commit and item DDL locks, `f` maps
+    * the current sidecar to the next one (None: no change), which lands
+    * logged at the UNCHANGED generation so DESCRIBE HISTORY records the
+    * mutation while timestamp travel stays data-exact — generations
+    * identify data states (see resolveAsOf's contract). */
+  private def alterSidecar(item: String, op: String)(
+      f: Map[String, JValue] => Option[Map[String, JValue]]): Unit =
+    withCommitLock { withItemDdlLock(item) {
+      val meta = Meta.read(path.resolve(item))
+      f(meta).foreach(writeSidecar(item, meta, _, op, Snapshots.generationOf(meta), Nil))
     } }
+
+  /** Post-commit derived bookkeeping after [[publish]], lock-free (the
+    * read-backs are Spark jobs), decided from the meta the publish just
+    * wrote: `_period_stats` for items declaring stats columns — every
+    * period after a partitioned full commit (a full rewrite re-derived
+    * every period: stale stats would let a later pruned delete silently
+    * skip live rows), the listed ones after a period commit — and the
+    * incremental skip-index refresh after a period commit. */
+  private def refreshAfterPublish(item: String, scope: CommitScope,
+                                  meta: Map[String, JValue],
+                                  gens: (Long, Long)): Unit = {
+    val declaresStats = meta.contains("_stats_cols")
+    scope match {
+      case Full(partitioned) =>
+        if (partitioned && declaresStats) maybeRefreshPeriodStats(item, None)
+      case Periods(months) =>
+        if (declaresStats) maybeRefreshPeriodStats(item, Some(months))
+        maybeRefreshBloomIndexes(item, months, gens)
+    }
   }
 
   /** Post-commit incremental skip-index maintenance (bloom + file
@@ -1643,7 +1647,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * a crash or failure here leaves a sidecar at its old generation,
     * which the new committed generation no longer matches (retired,
     * never wrong). Same crash seam as the stats refresh so specs can
-    * pin the staleness invariant. */
+    * pin the staleness invariant. `gens` is the (replaced, committed)
+    * generation pair of THIS commit — reading the sidecar back instead
+    * would race a foreign commit landing right after ours. */
   private def maybeRefreshBloomIndexes(item: String, months: Seq[String],
                                        gens: (Long, Long)): Unit =
     if (!simulateCrashBeforeStatsRefresh) {
@@ -1747,22 +1753,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // subtle control flow at collection.py:508-513 (SURVEY §7.4.6).
     val combined: DataFrame =
       if (evolved) old.unionByName(newDf, allowMissingColumns = true)
-      else duplicateHandling match {
-        case DuplicateHandling.KeepAll => old.unionByName(newDf)
-        case DuplicateHandling.KeepFirst =>
-          // old wins: drop incoming rows whose index already exists (J1)
-          old.unionByName(newDf.join(old.select(idx.map(col): _*).distinct(), idx, "left_anti"))
-        case DuplicateHandling.KeepLast =>
-          // new wins: drop existing rows whose index appears in the batch
-          old.join(newDf.select(idx.map(col): _*).distinct(), idx, "left_anti")
-            .unionByName(newDf)
-        case DuplicateHandling.ErrorOnDuplicate =>
-          val overlap = old.join(newDf, idx, "left_semi").limit(1).count()
-          if (overlap > 0)
-            throw new DataIntegrityError(
-              s"append to '$item' has duplicate index values (strategy=error)")
-          old.unionByName(newDf)
-      }
+      else combineOnIndex(item, old, newDf, idx, duplicateHandling)
 
     // D1 (reference collection.py:520): identical FULL rows collapse;
     // same-index-different-value rows survive (regression
@@ -1773,7 +1764,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // stats (sidecar) merged with a cheap input-only scan of the batch.
     // Row count is an upper bound (dedup only shrinks) — fine for a
     // partition-count estimate; the real plan executes exactly once,
-    // inside commit(). For flat items the SAME narrow scan (item ∪
+    // inside stage(). For flat items the SAME narrow scan (item ∪
     // batch index values) also collects the quantile cuts the
     // bounds-path exchange needs — the sampled range exchange would
     // otherwise re-execute the combined dedup plan just to learn its
@@ -1812,13 +1803,31 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
          "schema_json" -> Collection.evolveLogicalSchema(
            storedMeta, deduped.schema).json)) ++
       extraMeta ++ Collection.opTag("append")
-    commit(item, laidOut, prevMeta, partitioned = monthly,
+    publish(item, stage(item, laidOut, monthly), Full(monthly), prevMeta,
       expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
-    // the full rewrite re-derived every period: stale per-period stats
-    // would let a later pruned delete silently skip live rows
-    if (monthly) maybeRefreshPeriodStats(item, None)
     } finally releaseIndex()
   }
+
+  /** The stored rows `old` combined with an append batch under its
+    * duplicate-index strategy (the index-collision half of the
+    * append's dedup; full-row dedup D1 follows in the caller). */
+  private def combineOnIndex(item: String, old: DataFrame, batch: DataFrame,
+                             idx: Seq[String], how: DuplicateHandling): DataFrame =
+    how match {
+      case DuplicateHandling.KeepAll => old.unionByName(batch)
+      case DuplicateHandling.KeepFirst =>
+        // old wins: drop incoming rows whose index already exists (J1)
+        old.unionByName(batch.join(old.select(idx.map(col): _*).distinct(), idx, "left_anti"))
+      case DuplicateHandling.KeepLast =>
+        // new wins: drop existing rows whose index appears in the batch
+        old.join(batch.select(idx.map(col): _*).distinct(), idx, "left_anti")
+          .unionByName(batch)
+      case DuplicateHandling.ErrorOnDuplicate =>
+        if (old.join(batch, idx, "left_semi").limit(1).count() > 0)
+          throw new DataIntegrityError(
+            s"append to '$item' has duplicate index values (strategy=error)")
+        old.unionByName(batch)
+    }
 
   /** Incremental append for time-layout items: the stored side is
     * read WITH partition pruning to only the periods the batch touches
@@ -1877,21 +1886,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       .drop(MonthCol)
       .select(newDf.columns.map(col): _*)
 
-    val combined: DataFrame = duplicateHandling match {
-      case DuplicateHandling.KeepAll => oldTouched.unionByName(newDf)
-      case DuplicateHandling.KeepFirst =>
-        oldTouched.unionByName(
-          newDf.join(oldTouched.select(idx.map(col): _*).distinct(), idx, "left_anti"))
-      case DuplicateHandling.KeepLast =>
-        oldTouched.join(newDf.select(idx.map(col): _*).distinct(), idx, "left_anti")
-          .unionByName(newDf)
-      case DuplicateHandling.ErrorOnDuplicate =>
-        val overlap = oldTouched.join(newDf, idx, "left_semi").limit(1).count()
-        if (overlap > 0)
-          throw new DataIntegrityError(
-            s"append to '$item' has duplicate index values (strategy=error)")
-        oldTouched.unionByName(newDf)
-    }
+    val combined = combineOnIndex(item, oldTouched, newDf, idx, duplicateHandling)
 
     val prevStats = readStatsMeta(item).getOrElse(
       Partitioner.computeStats(existing.data, idx.head))
@@ -1899,12 +1894,10 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val storedMeta = Meta.read(path.resolve(item))
     val prevMeta = storedMeta ++ statsMeta(stats) ++ extraMeta ++
       Collection.opTag("append")
-    val gens = commitMonths(item,
-      withTimeLayout(combined.dropDuplicates(), idx, monthlySaltOf(item), layout),
-      months, prevMeta, expectedGen = Some(baseGen),
+    publish(item, stage(item, withTimeLayout(combined.dropDuplicates(), idx,
+        monthlySaltOf(item), layout), partitioned = true),
+      Periods(months), prevMeta, expectedGen = Some(baseGen),
       expectedMeta = Some(storedMeta))
-    maybeRefreshPeriodStats(item, Some(months))
-    maybeRefreshBloomIndexes(item, months, gens)
   }
 
   /** Read an item's data dir pinned to the declared ENCODED schema when
@@ -2187,7 +2180,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
   private def repairInterruptedSwaps(): Seq[String] = {
     val repaired = scala.collection.mutable.ArrayBuffer.empty[String]
     // Intent journals first — they decide torn multi-month swaps
-    // EXACTLY (see publishMonths): sidecar generation still the
+    // EXACTLY (see swapPeriods): sidecar generation still the
     // journal's pre-commit one → the commit never published, roll every
     // month back from its aside; generation advanced → published, drop
     // the non-retained asides.
@@ -2521,12 +2514,10 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         // one commit covers the boundary rewrite AND the name-dropped
         // periods (listed months absent from tmp are removals)
         val expired = (toRemove ++ (if (hasBoundary) Seq(pStar) else Nil)).sorted
-        val gens = commitMonths(item,
-          withTimeLayout(keep, idx, monthlySaltOf(item), layout),
-          expired, prevMeta ++ Collection.opTag("expire"),
+        publish(item, stage(item, withTimeLayout(keep, idx, monthlySaltOf(item), layout),
+            partitioned = true),
+          Periods(expired), prevMeta ++ Collection.opTag("expire"),
           expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
-        maybeRefreshPeriodStats(item, Some(expired))
-        maybeRefreshBloomIndexes(item, expired, gens)
         Collection.ExpireResult(toRemove, boundaryDeleted)
       case None =>
         Collection.ExpireResult(Nil,
@@ -2574,7 +2565,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         // keys as int / daily keys as date — collect the TYPED value
         // (keeps the isin filter a pruning-friendly partition
         // predicate) alongside its string form (the period key
-        // commitMonths needs)
+        // Periods names)
         // the discovery scan already reads exactly the matching rows
         // (candidate-period-narrowed, then the predicate) — count them
         // per period IN the same aggregation instead of re-scanning the
@@ -2588,19 +2579,17 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         if (months.isEmpty) return 0L
         val deleted = monthRows.map(_.getLong(2)).sum
         val touched = raw.filter(col(MonthCol).isin(monthVals: _*)).drop(MonthCol)
-        val gens = commitMonths(item,
-          withTimeLayout(touched.filter(!predicate), idx, monthlySaltOf(item), layout),
-          months, prevMeta ++ Collection.opTag("delete_where"),
+        publish(item, stage(item, withTimeLayout(touched.filter(!predicate), idx,
+            monthlySaltOf(item), layout), partitioned = true),
+          Periods(months), prevMeta ++ Collection.opTag("delete_where"),
           expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
-        maybeRefreshPeriodStats(item, Some(months))
-        maybeRefreshBloomIndexes(item, months, gens)
         deleted
       case None =>
         val raw = readDataPinned(item)
         val deleted = raw.filter(predicate).count()
         if (deleted == 0L) return 0L
-        commit(item, raw.filter(!predicate),
-          prevMeta ++ Collection.opTag("delete_where"),
+        publish(item, stage(item, raw.filter(!predicate), partitioned = false),
+          Full(partitioned = false), prevMeta ++ Collection.opTag("delete_where"),
           expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
         deleted
     }
@@ -2718,16 +2707,14 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           }
         }
         val months = (scanned ++ staged).distinct.sorted
-        if (months.nonEmpty) {
-          val gens = publishMonths(item, staging, months, prevMeta, expectedGen,
+        if (months.nonEmpty)
+          publish(item, staging, Periods(months), prevMeta, expectedGen,
             expectedMeta = Some(storedMeta))
-          maybeRefreshPeriodStats(item, Some(months))
-          maybeRefreshBloomIndexes(item, months, gens)
-        } else staging.deleteRecursively()
+        else staging.deleteRecursively()
       case None =>
         if (!staging.isDir) staging.mkdirs() // all rows deleted → empty item
-        publishFull(item, staging, prevMeta, partitioned = false,
-          expectedGen = expectedGen, expectedMeta = Some(storedMeta))
+        publish(item, staging, Full(partitioned = false), prevMeta, expectedGen,
+          expectedMeta = Some(storedMeta))
     }
     clearMetadataCache(Some(item))
   }
@@ -3126,12 +3113,11 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         // it so later period-name pruning resolves against the zone the
         // dirs are actually keyed in
         val storedMeta = Meta.read(path.resolve(item))
-        commit(item, laidOut, storedMeta ++ Meta.obj(
-          "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC")) ++
-          Collection.opTag("rebalance"),
-          partitioned = true, expectedGen = Some(baseGen),
-          expectedMeta = Some(storedMeta))
-        maybeRefreshPeriodStats(item, None)
+        publish(item, stage(item, laidOut, partitioned = true), Full(partitioned = true),
+          storedMeta ++ Meta.obj(
+            "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC")) ++
+            Collection.opTag("rebalance"),
+          expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
         dataDirFileCount(item)
       case None =>
         val stats = readStatsMeta(item).getOrElse(Partitioner.computeStats(df, idx.head))
@@ -3143,7 +3129,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         val storedMeta = Meta.read(path.resolve(item))
         val prevMeta = storedMeta ++
           Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name)
-        commit(item, laidOut, prevMeta ++ Collection.opTag("rebalance"),
+        publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
+          prevMeta ++ Collection.opTag("rebalance"),
           expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
         n
     }
@@ -3197,11 +3184,10 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         "_monthly_salt" -> monthlySalt,
         "_partitions" -> 0,
         "_partition_strategy" -> Partitioner.TimeBased.name)
-      commit(item, withTimeLayout(df, idx, monthlySalt, target),
+      publish(item, stage(item, withTimeLayout(df, idx, monthlySalt, target),
+          partitioned = true), Full(partitioned = true),
         newMeta ++ Collection.opTag("convert_layout"),
-        partitioned = true, expectedGen = Some(baseGen),
-        expectedMeta = Some(prevMeta))
-      maybeRefreshPeriodStats(item, None)
+        expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
     } else {
       val stats = readStatsMeta(item).getOrElse(Partitioner.computeStats(df, idx.head))
       val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
@@ -3211,8 +3197,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         "_monthly_salt" -> 1,
         "_partitions" -> n,
         "_partition_strategy" -> strategy.name)
-      commit(item, flatRelayout(df, idx, n),
-        newMeta ++ Collection.opTag("convert_layout"),
+      publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
+        Full(partitioned = false), newMeta ++ Collection.opTag("convert_layout"),
         expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
     }
     }
@@ -3253,7 +3239,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val storedMeta = Meta.read(path.resolve(item))
     val prevMeta = storedMeta ++
       Meta.obj("_zorder_cols" -> cols.mkString(","), "_zorder_bits" -> bits)
-    commit(item, laidOut, prevMeta ++ Collection.opTag("zorder"),
+    publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
+      prevMeta ++ Collection.opTag("zorder"),
       expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
     }
     // z-order clusters every listed column per file — exactly the
@@ -3326,9 +3313,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val masked = Collection.droppedColsOf(Meta.read(path.resolve(item)))
     if (fields.exists(f => masked.exists(_.equalsIgnoreCase(f.name))))
       purgeDroppedColumns(item)
-    withCommitLock { withItemDdlLock(item) {
-      val itemPath = path.resolve(item)
-      val meta = Meta.read(itemPath)
+    val itemPath = path.resolve(item)
+    alterSidecar(item, "alter") { meta =>
       // LOAD-BEARING re-check: the purge above ran lock-free, so a
       // concurrent dropColumns may have re-masked the name before this
       // lock was taken — and a sidecar edited outside the typed DDL
@@ -3363,13 +3349,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       // added columns carry no codec, so their logical type == encoded
       val newLogical = parse("schema_json")
         .map(l => StructType(l.fields ++ added))
-      Meta.write(itemPath, meta +
-        ("schema_json_encoded" -> Meta.jv(newEncoded.json)) ++
-        newLogical.map(l => "schema_json" -> Meta.jv(l.json)) +
-        (History.Key -> History.appendedSpilling(itemPath, meta, "alter",
-          Snapshots.generationOf(meta), Nil)))
-      metaCache.remove(item)
-    } }
+      Some(meta + ("schema_json_encoded" -> Meta.jv(newEncoded.json)) ++
+        newLogical.map(l => "schema_json" -> Meta.jv(l.json)))
+    }
   }
 
   /** Metadata-only column DROP — the read-side projection-mask
@@ -3404,9 +3386,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     if (!hasItem(item))
       throw new ItemNotFoundError(s"item '$item' does not exist")
     if (names.isEmpty) return
-    withCommitLock { withItemDdlLock(item) {
-      val itemPath = path.resolve(item)
-      val meta = Meta.read(itemPath)
+    val itemPath = path.resolve(item)
+    alterSidecar(item, "alter") { meta =>
       def parse(k: String): Option[StructType] = meta.get(k).collect {
         case org.json4s.JString(sj) => DataType.fromJson(sj).asInstanceOf[StructType]
       }
@@ -3449,7 +3430,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
             s"cannot drop '$n': it is a declared pruning-stats column; " +
               "undeclare it first (analyzeItem with a new column list)")
       }
-      if (resolved.nonEmpty) { // every name lenient-and-absent → no-op
+      if (resolved.isEmpty) None // every name lenient-and-absent → no-op
+      else {
         val dropSet = resolved.map(_.toLowerCase).toSet
         val newEncoded = StructType(
           encoded.fields.filterNot(f => dropSet.contains(f.name.toLowerCase)))
@@ -3465,16 +3447,12 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           case JObject(fs) => JObject(
             fs.filterNot { case (n, _) => dropSet.contains(n.toLowerCase) })
         }
-        Meta.write(itemPath, meta +
-          ("schema_json_encoded" -> Meta.jv(newEncoded.json)) ++
+        Some(meta + ("schema_json_encoded" -> Meta.jv(newEncoded.json)) ++
           newLogical.map(l => "schema_json" -> Meta.jv(l.json)) ++
           typeInfo.map(ti => "_type_info" -> (ti: JValue)) +
-          (Collection.DroppedColsKey -> Meta.jv(mask)) +
-          (History.Key -> History.appendedSpilling(itemPath, meta, "alter",
-            Snapshots.generationOf(meta), Nil)))
-        metaCache.remove(item)
+          (Collection.DroppedColsKey -> Meta.jv(mask)))
       }
-    } }
+    }
   }
 
   /** Physical column RENAME — `ALTER TABLE RENAME COLUMN`'s verb.
@@ -3580,16 +3558,15 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         Collection.opTag("rename_column")
       timeLayoutOf(item) match {
         case Some(layout) =>
-          commit(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
-            prevMeta, partitioned = true, expectedGen = Some(baseGen),
-            expectedMeta = Some(meta))
-          maybeRefreshPeriodStats(item, None)
+          publish(item, stage(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
+              partitioned = true), Full(partitioned = true),
+            prevMeta, expectedGen = Some(baseGen), expectedMeta = Some(meta))
         case None =>
           val stats = readStatsMeta(item).getOrElse(
             Partitioner.computeStats(df, idx.head))
           val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-          commit(item, flatRelayout(df, idx, n),
-            prevMeta ++ Meta.obj("_partitions" -> n,
+          publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
+            Full(partitioned = false), prevMeta ++ Meta.obj("_partitions" -> n,
               "_partition_strategy" -> strategy.name),
             expectedGen = Some(baseGen), expectedMeta = Some(meta))
       }
@@ -3620,16 +3597,16 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val baseGen = Snapshots.generationOf(prevMeta)
     timeLayoutOf(item) match {
       case Some(layout) =>
-        commit(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
-          prevMeta ++ Collection.opTag("purge_dropped"), partitioned = true,
+        publish(item, stage(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
+            partitioned = true), Full(partitioned = true),
+          prevMeta ++ Collection.opTag("purge_dropped"),
           expectedGen = Some(baseGen), expectedMeta = Some(meta0))
-        maybeRefreshPeriodStats(item, None)
       case None =>
         val stats = readStatsMeta(item).getOrElse(
           Partitioner.computeStats(df, idx.head))
         val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-        commit(item, flatRelayout(df, idx, n),
-          prevMeta ++ Meta.obj("_partitions" -> n,
+        publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
+          Full(partitioned = false), prevMeta ++ Meta.obj("_partitions" -> n,
             "_partition_strategy" -> strategy.name) ++
             Collection.opTag("purge_dropped"),
           expectedGen = Some(baseGen), expectedMeta = Some(meta0))
@@ -3650,17 +3627,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       throw new ValidationError(
         s"'$k' is a structural sidecar key; only the typed pipelines may change it")
     }
-    withCommitLock { withItemDdlLock(item) {
-      val itemPath = path.resolve(item)
-      val meta = Meta.read(itemPath)
-      // logged (gen unchanged) so DESCRIBE HISTORY records the mutation;
-      // timestamp travel stays data-exact — see resolveAsOf's contract
-      Meta.write(itemPath,
-        (meta -- unset) ++ set.map { case (k, v) => k -> Meta.jv(v) } +
-          (History.Key -> History.appendedSpilling(itemPath, meta, "set_properties",
-            Snapshots.generationOf(meta), Nil)))
-      metaCache.remove(item)
-    } }
+    alterSidecar(item, "set_properties") { meta =>
+      Some((meta -- unset) ++ set.map { case (k, v) => k -> Meta.jv(v) })
+    }
   }
 
   /** Declare (or re-declare) the per-period pruning stats columns of
@@ -3701,21 +3670,16 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
             "numeric, timestamp, date, or string columns")
       }
     }
-    val meta = Meta.read(itemPath)
     // logged (gen unchanged) like the other metadata-only mutations;
     // the post-commit _period_stats refreshes stay UNlogged (they are
     // derived bookkeeping riding data commits already in the log)
-    def analyzed(m: Map[String, JValue]): Map[String, JValue] =
-      m + (History.Key -> History.appendedSpilling(itemPath, meta, "analyze",
-        Snapshots.generationOf(meta), Nil))
-    if (statsColumns.isEmpty) {
-      Meta.write(itemPath, analyzed(
-        meta - "_stats_cols" + ("_period_stats" -> Meta.jv(Map.empty[String, Any]))))
-      metaCache.remove(item)
-      0
-    } else {
-      Meta.write(itemPath, analyzed(meta ++ Meta.obj("_stats_cols" -> statsColumns)))
-      metaCache.remove(item)
+    alterSidecar(item, "analyze") { meta => Some(
+      if (statsColumns.isEmpty)
+        meta - "_stats_cols" + ("_period_stats" -> Meta.jv(Map.empty[String, Any]))
+      else meta ++ Meta.obj("_stats_cols" -> statsColumns))
+    }
+    if (statsColumns.isEmpty) 0
+    else {
       refreshPeriodStats(item, None)
       Collection.periodStatsOf(Meta.read(itemPath)).size
     }

@@ -226,7 +226,7 @@ class CrashKillSpec extends SparkSpec {
     // The probe's 50-row rewrite is a non-temporal flat write, so its
     // index stats ride Dataset.observe on the staged parquet job (the
     // by-name `meta` commit path). At this seam the staging — and the
-    // observed values — exist, but publishFull has not forced `meta`:
+    // observed values — exist, but publish has not forced `meta`:
     // the kill must leave the sidecar describing the 40 LIVE rows, not
     // the 50 staged ones that never landed.
     crashCase("staged_pre_publish:it", "write") { (c, _) =>
@@ -498,7 +498,7 @@ class CrashKillSpec extends SparkSpec {
 
   test("two forked JVMs racing MONTHLY appends into the same period: every partial commit survives") {
     // the partial-commit spelling: both writers rewrite the SAME month
-    // dir through publishMonths — the fence + per-item lock serialize
+    // dir through a period publish — the fence + per-item lock serialize
     // the period swaps and their intent journals, so neither writer's
     // February rows are clobbered and no journal survives the run
     val uri = prepare(hadoop = false)
@@ -726,8 +726,8 @@ class CrashKillSpec extends SparkSpec {
   }
 
   test("SUSTAINED MONTHLY contention: three processes hammering the SAME period serialize completely") {
-    // the flat-layout stress has a sibling here because publishMonths
-    // is the more intricate path: per-period swaps journaled by
+    // the flat-layout stress has a sibling here because the period
+    // swap is the more intricate path: per-period swaps journaled by
     // intents, the sidecar write as the commit point, the fence on the
     // period map. Three writers x 5 batches all land in February, so
     // every commit rewrites the SAME month dir; stamps are

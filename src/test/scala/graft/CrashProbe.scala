@@ -96,7 +96,7 @@ object CrashProbe {
         }
       case m if m.startsWith("race_monthly:") =>
         // the monthly spelling: every batch lands in February, so both
-        // probes rewrite the SAME period dir through publishMonths'
+        // probes rewrite the SAME period dir through the period publish's
         // fence + intent journal; stamps are writer-and-batch-distinct
         // (hour = writer, minute = batch)
         val Array(_, tagS, batchesS) = m.split(":")

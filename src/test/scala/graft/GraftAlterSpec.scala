@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -405,7 +406,11 @@ class GraftAlterSpec extends SparkSpec {
     cleanup(c)
   }
 
-  test("APPEND's sidecar fence: a metadata-only DDL landing mid-staging is never reverted") {
+  // Run over a flat item (full commit) and a monthly item (period
+  // commit): both scopes stage through the same seam and publish through
+  // the same fences.
+  for ((suffix, monthly) <- Seq("" -> false, " (monthly layout)" -> true))
+  test("APPEND's sidecar fence: a metadata-only DDL landing mid-staging is never reverted" + suffix) {
     // round 14 generalized the rename-only sidecar-equality fence to
     // EVERY read-modify-write publisher: an append whose staging job
     // races a property-set + DROP COLUMN (both gen-preserving) must
@@ -413,9 +418,13 @@ class GraftAlterSpec extends SparkSpec {
     // the fence, the publish silently erased the mask (resurrecting
     // the dropped column's bytes) and the property.
     import spark.implicits._
-    val c = tempCollection("alter_append_meta_race")
-    c.write("item", Seq((1, 1.0, "x"), (2, 2.0, "y")).toDF("index", "value", "note"),
-      indexCols = Seq("index"))
+    // a monthly item's index is a day in January 2024 per integer id
+    def rows(df: DataFrame): DataFrame =
+      if (!monthly) df
+      else df.withColumn("index", timestamp_seconds(col("index") * 86400L + 1704067200L))
+    val c = tempCollection("alter_append_meta_race" + (if (monthly) "_monthly" else ""))
+    c.write("item", rows(Seq((1, 1.0, "x"), (2, 2.0, "y")).toDF("index", "value", "note")),
+      indexCols = Seq("index"), monthlyLayout = monthly)
     val other = Collection.at(spark, c.path)
     @volatile var injected = false
     Collection.commitSeamHook = name =>
@@ -429,7 +438,7 @@ class GraftAlterSpec extends SparkSpec {
     // of appending a dropped column after the drop. Before the fence,
     // the publish landed and silently REVERTED the drop instead.
     val e = intercept[SchemaValidationError](
-      try c.append("item", Seq((3, 3.0, "z")).toDF("index", "value", "note"))
+      try c.append("item", rows(Seq((3, 3.0, "z")).toDF("index", "value", "note")))
       finally Collection.commitSeamHook = _ => ())
     assert(e.getMessage.contains("schema mismatch"), e.getMessage)
     assert(injected, "the mid-append DDL must have fired")
@@ -449,7 +458,7 @@ class GraftAlterSpec extends SparkSpec {
         injected2 = true
         other.setItemProperties("item", Map("stage" -> "curated"))
       }
-    try c.append("item", Seq((3, 3.0)).toDF("index", "value"))
+    try c.append("item", rows(Seq((3, 3.0)).toDF("index", "value")))
     finally Collection.commitSeamHook = _ => ()
     assert(injected2)
     assert(Meta.read(c.path.resolve("item")).get("stage") ==

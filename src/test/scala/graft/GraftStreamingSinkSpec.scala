@@ -70,7 +70,7 @@ class GraftStreamingSinkSpec extends SparkSpec {
 
     // Structural exactly-once: the whole sink commit performs EXACTLY
     // one sidecar write (the append's own atomic commit — flat items
-    // write once in publishFull), and that one write carries BOTH the
+    // write once in publish), and that one write carries BOTH the
     // fresh generation and the epoch mark. The old shape (append commit
     // + trailing Meta.write of the mark) would count 2 and leave a
     // crash window where the data landed but the mark didn't.

@@ -252,7 +252,7 @@ class ScaleForcedSpec extends SparkSpec {
   test("bounds-path flat layout: collision-free carriers, disjoint sorted files, twin-equal content") {
     import graft.store.Partitioner
     // carrierValues must be a bucket→partition bijection at every size
-    for (b <- 2 to 64) {
+    for (b <- 2 to Partitioner.MaxBoundsPartitions) {
       val cs = Partitioner.carrierValues(b)
       val parts = cs.map(v => java.lang.Math.floorMod(
         org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), b))
