@@ -2305,8 +2305,8 @@ object StoreQueries {
       |WHERE doc_id IN (17, 123, 456)
       |ORDER BY doc_id""".stripMargin
 
-  /** The bloom index through the SQL front door (GraftDataSource
-    * bloomNarrowed): same fingerprint shape as [[bloomIndex]], probed
+  /** The bloom index through the SQL front door (the V2 scan's
+    * skip-index narrowing, ReadRoots.scanRoots): same fingerprint shape as [[bloomIndex]], probed
     * with a SQL IN-list over the V2 table — the pushed `In` filter
     * narrows the scan's file roots driver-side, asserted in-query
     * (the planned read must touch a strict subset of the item's

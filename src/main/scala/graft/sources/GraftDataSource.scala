@@ -6,8 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGte, In => CIn, LessThan => CLt, LessThanOrEqual => CLte, Literal}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,10 +16,11 @@ import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, InsertableRelation}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.{Collection, DuplicateHandling, GraftError, GraftStore, HadoopFs, History, Item, ItemNotFoundError, Meta, NioFs, SPath, SnapshotNotFoundError, Snapshots, ValidationError}
+import graft.store.{Collection, DuplicateHandling, Filters, GraftError, GraftStore, HadoopFs, History, Item, ItemNotFoundError, Meta, NioFs, ReadRoots, SPath, SnapshotNotFoundError, Snapshots, ValidationError}
+import graft.store.ReadRoots.{LiveDirs, PinnedPeriods}
 
 /** DataSource V2 front door — the SQL face of the store.
   *
@@ -37,8 +36,9 @@ import graft.store.{Collection, DuplicateHandling, GraftError, GraftStore, Hadoo
   *   SELECT ... FROM prices WHERE index >= '2024-03-01'
   * }}}
   *
-  * Scale design — the same two prunings the Scala read path has, now
-  * driven by Catalyst's V2 pushdown instead of caller-supplied tuples:
+  * Scale design — the Scala read path's prunings, planned by the same
+  * [[graft.store.ReadRoots]] and driven by Catalyst's V2 pushdown
+  * instead of caller-supplied tuples:
   *
   *  - **Period pruning as PATH SELECTION**: pushed index-column
   *    predicates map to a period-key interval (period keys are
@@ -91,25 +91,12 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
 
 object GraftTable {
 
-  /** Where the scan's parquet roots come from:
-    *  - [[LiveDirs]] — an item (or dir-snapshot) `data/` dir; time
-    *    layouts list and prune its period subdirs at scan build;
-    *  - [[PinnedPeriods]] — a manifest snapshot of a time-layout item:
-    *    a FIXED (period → parquet dir) set mixing live and retained
-    *    generation dirs, pruned by period key exactly like live dirs.
-    */
-  private[sources] sealed trait RootSource
-  private[sources] final case class LiveDirs(dataDir: SPath) extends RootSource
-  private[sources] final case class PinnedPeriods(pairs: Seq[(String, SPath)]) extends RootSource
-
   /** Resolve the `path` option (+ optional `snapshot`) to an item:
     * sidecar metadata, layout, and the ENCODED schema (what the
     * part-files hold — sidecar `schema_json_encoded` when present, else
     * one parquet footer inference). Driver-side metadata only; no data
-    * read. Snapshot resolution mirrors the Scala read path
-    * (store/Item.scala:51-66): dir snapshots and legacy-frozen items
-    * serve their physical dir; manifest snapshots pin flat items to a
-    * generation dir and time-layout items to one dir per period. */
+    * read. Snapshots resolve through [[ReadRoots.resolve]], the Scala
+    * read path's resolution. */
   private[graft] def resolve(options: CaseInsensitiveStringMap): GraftTable = {
     val spark = SparkSession.active
     val pathOpt = Option(options.get("path")).getOrElse(
@@ -212,78 +199,37 @@ object GraftTable {
     // one rule set shared with list_changes and startingSnapshot streams
     val serve = Snapshots.classifyChanges(pins, liveMeta, liveLayout.isDefined)
       .collect { case (key, kind) if kind != "removed" => key }
-    if (serve.contains(Snapshots.WholeItemKey))
-      // flat rewrite, or a layout conversion since the cut: whole item
-      fromMeta(spark, itemPath, liveMeta, LiveDirs(liveData),
-        inferFrom = Seq(liveData.toString), pinned = true)
-    else if (liveLayout.isDefined)
-      fromMeta(spark, itemPath, liveMeta,
-        PinnedPeriods(serve.map(p => p -> liveData.resolve(s"${Collection.MonthCol}=$p"))),
-        inferFrom = Seq(liveData.toString), pinned = true)
-    else // flat, unchanged: an empty scan with the item's schema
-      fromMeta(spark, itemPath, liveMeta, PinnedPeriods(Nil),
-        inferFrom = Seq(liveData.toString), pinned = true)
+    val roots =
+      if (serve.contains(Snapshots.WholeItemKey))
+        // flat rewrite, or a layout conversion since the cut: whole item
+        LiveDirs(liveData)
+      else if (liveLayout.isDefined)
+        PinnedPeriods(serve.map(p => p -> liveData.resolve(s"${Collection.MonthCol}=$p")))
+      else PinnedPeriods(Nil) // flat, unchanged: an empty scan with the item's schema
+    fromTarget(spark,
+      new ReadRoots.Target(spark, itemPath, itemPath, roots, pinned = true, liveMeta))
   }
 
   private[graft] def resolveItem(spark: SparkSession, itemPath: SPath,
-                                 snapshot: Option[String]): GraftTable =
-    snapshot match {
-      case None =>
-        fromItemDir(spark, itemPath, itemPath, Meta.read(itemPath), pinned = false)
-      case Some(snap) =>
-        val collectionPath = itemPath.parent
-        val item = itemPath.name
-        val snapDir = collectionPath.resolve(GraftStore.SnapshotsDir).resolve(snap)
-        val hasManifest = Snapshots.manifestExists(collectionPath, snap)
-        if (!snapDir.isDir && !hasManifest)
-          throw new SnapshotNotFoundError(s"snapshot '$snap' does not exist")
-        val dirItem = snapDir.resolve(item)
-        if (dirItem.isDir) fromItemDir(spark, itemPath, dirItem, Meta.read(dirItem), pinned = true)
-        else Snapshots.resolveManifestItem(collectionPath, snap, item) match {
-          case Some(r: Snapshots.FlatResolved) =>
-            fromItemDir(spark, itemPath, r.dir, r.sidecar, pinned = true)
-          case Some(r: Snapshots.PeriodResolved) =>
-            r.periodDirs.find(!_._2.isDir).foreach { case (period, d) =>
-              throw new GraftError(
-                s"snapshot period '$period' of item '$item' missing at $d")
-            }
-            fromMeta(spark, itemPath, r.sidecar, PinnedPeriods(r.periodDirs),
-              inferFrom = r.periodDirs.map(_._2.toString), pinned = true)
-          case None =>
-            throw new ItemNotFoundError(s"item '$item' not found in snapshot '$snap'")
-        }
+                                 snapshot: Option[String]): GraftTable = {
+    val target = ReadRoots.resolve(spark, itemPath, snapshot)
+    target.roots match {
+      case LiveDirs(dataDir) if !dataDir.isDir =>
+        throw new ItemNotFoundError(
+          s"no graft item at ${target.dir} (missing ${Item.DataDir}/ dir)")
+      case _ =>
     }
-
-  private def fromItemDir(spark: SparkSession, displayPath: SPath,
-                          rootDir: SPath, meta: Map[String, org.json4s.JValue],
-                          pinned: Boolean): GraftTable = {
-    val dataDir = rootDir.resolve(Item.DataDir)
-    if (!dataDir.isDir)
-      throw new ItemNotFoundError(s"no graft item at $rootDir (missing ${Item.DataDir}/ dir)")
-    fromMeta(spark, displayPath, meta, LiveDirs(dataDir),
-      inferFrom = Seq(dataDir.toString), pinned = pinned)
+    fromTarget(spark, target)
   }
 
-  private def fromMeta(spark: SparkSession, displayPath: SPath,
-                       meta: Map[String, org.json4s.JValue], roots: RootSource,
-                       inferFrom: Seq[String], pinned: Boolean): GraftTable = {
-    val layout = meta.get("_layout").map(j => Meta.unjv(j).toString)
-      .filter(Collection.TimeLayouts.contains)
-    val indexCol = meta.get("index_names").map(Meta.unjv) match {
-      case Some(xs: Seq[_]) if xs.nonEmpty => xs.head.toString
-      case _ => Collection.DefaultIndex
-    }
-    val layoutTz = meta.get("_layout_tz").map(j => Meta.unjv(j).toString)
-      .getOrElse(spark.sessionState.conf.sessionLocalTimeZone)
-    val schema = meta.get("schema_json_encoded") match {
-      case Some(org.json4s.JString(sj)) =>
-        // parquet reads surface every column nullable; serve the same
-        Item.asNullable(DataType.fromJson(sj)).asInstanceOf[StructType]
-      case _ =>
-        // pre-encoded-sidecar item: infer once from the footers (and
-        // drop the hidden partition column a time layout would surface)
-        val inferred = spark.read.parquet(inferFrom: _*).schema
-        StructType(inferred.filterNot(_.name == Collection.MonthCol))
+  private def fromTarget(spark: SparkSession, target: ReadRoots.Target): GraftTable = {
+    val meta = target.meta
+    val schema = target.encoded.getOrElse {
+      // pre-encoded-sidecar item: infer once from the footers of every
+      // root (period dirs surface no partition column)
+      val roots = ReadRoots.dirRoots(target, target.periods)
+      spark.read.parquet((if (roots.nonEmpty) roots
+        else Seq(target.itemPath.resolve(Item.DataDir).toString)): _*).schema
     }
     // item sidecar metadata as SQL table properties (SHOW TBLPROPERTIES):
     // user metadata + structural markers, minus the bulky machine keys
@@ -292,14 +238,7 @@ object GraftTable {
         k != "_period_stats" && k != "_period_gens" =>
         k -> String.valueOf(Meta.unjv(v))
     }
-    new GraftTable(spark, displayPath, schema, layout, indexCol,
-      java.time.ZoneId.of(layoutTz), Collection.periodStatsOf(meta), roots, pinned,
-      props,
-      // the pin's generation, the validity key skip-index pruning uses
-      // on pinned reads (a sidecar recorded at exactly this generation
-      // describes exactly the pinned files — names survive retention
-      // renames and snapshot hardlinks)
-      pinnedGen = if (pinned) Some(Snapshots.generationOf(meta)) else None)
+    new GraftTable(spark, target, schema, props)
   }
 
   /** V1 source filters DELETE can hand to [[Collection.deleteWhere]] as
@@ -352,18 +291,14 @@ object GraftTable {
 
 final class GraftTable private[sources] (
     spark: SparkSession,
-    itemPath: SPath,
+    target: ReadRoots.Target,
     tableSchema: StructType,
-    layout: Option[String],
-    indexCol: String,
-    layoutTz: java.time.ZoneId,
-    periodStats: Map[String, Map[String, (Any, Any)]],
-    roots: GraftTable.RootSource,
-    snapshotPinned: Boolean,
-    sidecarProps: Map[String, String] = Map.empty,
-    pinnedGen: Option[Long] = None)
+    sidecarProps: Map[String, String])
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations {
+
+  private val itemPath = target.itemPath
+  private val snapshotPinned = target.pinned
 
   override def name(): String = s"graft.`$itemPath`"
   override def schema(): StructType = tableSchema
@@ -382,9 +317,7 @@ final class GraftTable private[sources] (
       TableCapability.STREAMING_WRITE, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(spark, itemPath, tableSchema, layout, indexCol,
-      layoutTz, periodStats, roots, options, snapshotPinned = snapshotPinned,
-      pinnedGen = pinnedGen)
+    new GraftScanBuilder(spark, target, tableSchema, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     if (snapshotPinned)
@@ -423,16 +356,15 @@ final class GraftTable private[sources] (
       throw new GraftError(
         s"snapshot read of '$itemPath' is immutable: ${info.command} must " +
           "target the live item (drop the snapshot/VERSION AS OF clause)")
-    if (layout.isDefined) {
+    if (target.layout.isDefined) {
       val sessionTzName = spark.sessionState.conf.sessionLocalTimeZone
-      if (layoutTz != java.time.ZoneId.of(sessionTzName))
+      if (target.layoutTz != java.time.ZoneId.of(sessionTzName))
         throw new ValidationError(
-          s"item '${itemPath.name}' was laid out in timezone '$layoutTz' but " +
+          s"item '${itemPath.name}' was laid out in timezone '${target.layoutTz}' but " +
             s"this session runs '$sessionTzName'; set spark.sql.session.timeZone " +
             "to match before row-level SQL writes on a time-layout item")
     }
-    new GraftRowLevelOperationBuilder(spark, itemPath, tableSchema, layout,
-      indexCol, layoutTz, periodStats, roots, info)
+    new GraftRowLevelOperationBuilder(spark, target, tableSchema, info)
   }
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
@@ -519,13 +451,9 @@ private[sources] object GraftWrites {
       val layout = meta.get("_layout").map(j => Meta.unjv(j).toString)
         .filter(Collection.TimeLayouts.contains)
       val salt = meta.get("_monthly_salt").map(j => Meta.unjv(j).toString.toInt).getOrElse(1)
-      val statsCols = meta.get("_stats_cols").map(Meta.unjv) match {
-        case Some(xs: Seq[_]) => xs.map(_.toString)
-        case _ => Nil
-      }
       coll.write(item, data, indexCols = indexCols, overwrite = true,
         npartitions = npartitions, timeLayout = layout, monthlySalt = salt,
-        statsColumns = statsCols)
+        statsColumns = Collection.statsColumnsOf(meta))
     }
     coll.clearMetadataCache(Some(item))
   }
@@ -543,26 +471,20 @@ private[sources] object GraftWrites {
 }
 
 /** V2 scan builder: collects Catalyst's pushed filters + required
-  * columns, then builds a vectorized `ParquetScan` over ONLY the period
-  * directories the filters can touch. */
+  * columns, then builds a vectorized `ParquetScan` over the roots the
+  * read planner ([[ReadRoots]]) keeps for them. */
 final class GraftScanBuilder(
     private[sources] val spark: SparkSession,
-    private[sources] val itemPath: SPath,
-    tableSchema: StructType,
-    private[sources] val layout: Option[String],
-    private[sources] val indexCol: String,
-    private[sources] val layoutTz: java.time.ZoneId,
-    periodStats: Map[String, Map[String, (Any, Any)]],
-    roots: GraftTable.RootSource,
+    private[sources] val target: ReadRoots.Target,
+    private[sources] val tableSchema: StructType,
     options: CaseInsensitiveStringMap,
-    rowLevel: Option[GraftRowLevelOperation] = None,
-    snapshotPinned: Boolean = false,
-    pinnedGen: Option[Long] = None)
+    rowLevel: Option[GraftRowLevelOperation] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
 
   private var pushed: Array[Filter] = Array.empty
-  private var pruneFilters: Array[Filter] = Array.empty
+  /** Every pushed filter as planner predicates (period + file pruning). */
+  private[sources] var preds: Seq[Filters.Pred] = Nil
   private var required: StructType = tableSchema
   private var aggDelegate: Option[ParquetScanBuilder] = None
 
@@ -575,7 +497,7 @@ final class GraftScanBuilder(
     // NOT forwarded to parquet — the COW write must see every row of an
     // affected period, so row-group skipping on the condition would
     // silently drop the innocent rows that need copying.
-    pruneFilters = filters
+    preds = GraftScanBuilder.predsOf(filters)
     pushed = if (rowLevel.isDefined) Array.empty else filters.filter(parquetSupported)
     filters
   }
@@ -635,199 +557,14 @@ final class GraftScanBuilder(
   private lazy val memoDelegate: ParquetScanBuilder = {
     GraftScanBuilder.aggDelegateListings.incrementAndGet()
     new ParquetScanBuilder(
-      spark, fileIndexFor(allRoots()), tableSchema, tableSchema, options)
+      // the item's full root set, unpruned: aggregate pushdown must see
+      // every period's footers
+      spark, fileIndexFor(ReadRoots.dirRoots(target, target.periods)), tableSchema,
+      tableSchema, options)
   }
 
   private def parquetDelegate(): ParquetScanBuilder =
     aggDelegate.getOrElse(memoDelegate)
-
-  /** Translate a pushed source filter to the catalyst shape
-    * [[Collection.candidatePeriods]] walks. Only conjunctive
-    * range/equality/IN constraints contribute; anything else becomes
-    * `true` (no constraint) — the period set only ever
-    * over-approximates. `Literal.create` round-trips external values
-    * (Timestamp/LocalDateTime/Date/numbers) into the typed literals
-    * the walker's period/stats extraction expects. */
-  private def toCatalyst(f: Filter): Expression = f match {
-    case sources.And(l, r)               => CAnd(toCatalyst(l), toCatalyst(r))
-    case sources.EqualTo(a, v)           => CEq(UnresolvedAttribute(a), Literal.create(v))
-    case sources.EqualNullSafe(a, v)     => CEq(UnresolvedAttribute(a), Literal.create(v))
-    case sources.GreaterThan(a, v)       => CGt(UnresolvedAttribute(a), Literal.create(v))
-    case sources.GreaterThanOrEqual(a, v) => CGte(UnresolvedAttribute(a), Literal.create(v))
-    case sources.LessThan(a, v)          => CLt(UnresolvedAttribute(a), Literal.create(v))
-    case sources.LessThanOrEqual(a, v)   => CLte(UnresolvedAttribute(a), Literal.create(v))
-    case sources.In(a, vs) if vs.nonEmpty && !vs.contains(null) =>
-      CIn(UnresolvedAttribute(a), vs.toSeq.map(Literal.create(_)))
-    case _ => Literal.TrueLiteral
-  }
-
-  /** Period-key pruning shared by live listings and pinned snapshot
-    * sets: a session-zone mismatch with the writer's recorded zone
-    * forfeits pruning (reads stay correct), same rule as the delete
-    * discovery scan. `filters` is the static pushed set plus any
-    * runtime (DPP) filters arriving through [[GraftScan.filter]]. */
-  private[sources] def prunePeriods(l: String, all: Seq[String],
-                                    filters: Array[Filter],
-                                    stats: Map[String, Map[String, (Any, Any)]]): Seq[String] = {
-    val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
-    if (layoutTz != java.time.ZoneId.of(sessionTz)) all.sorted
-    else {
-      val cond = filters.map(toCatalyst)
-        .reduceOption(CAnd(_, _)).getOrElse(Literal.TrueLiteral)
-      Collection.candidatePeriods(all, cond, indexCol, l, layoutTz, stats)
-    }
-  }
-
-  /** Period names surviving static + `extra` filters; None = flat item
-    * (no period structure to prune). */
-  private[sources] def keptPeriodsFor(extra: Array[Filter]): Option[Seq[String]] = {
-    val combined = pruneFilters ++ extra
-    roots match {
-      case GraftTable.LiveDirs(dataDir) => layout.map { l =>
-        val all = dataDir.listDirs
-          .filter(_.startsWith(Collection.MonthCol + "="))
-          .map(_.stripPrefix(Collection.MonthCol + "="))
-        prunePeriods(l, all, combined, periodStats)
-      }
-      case GraftTable.PinnedPeriods(pairs) => layout.map { l =>
-        prunePeriods(l, pairs.map(_._1), combined, periodStats)
-      }
-    }
-  }
-
-  /** Skip-index narrowing of a DIR root set to explicit part-file
-    * roots (BloomIndex + FileStatsIndex): pushed equality/bounded-IN
-    * filters drop files whose bloom says definitely-absent, pushed
-    * range/equality filters drop files whose min/max interval cannot
-    * hold a match (the two INTERSECT) — the SQL front door gets the
-    * same skipping as the Scala `filters=` path, composed AFTER
-    * period pruning (only files inside surviving period roots are
-    * kept). Live reads only:
-    * snapshot pins and COW row-level scans read their dir roots
-    * unchanged (a pinned generation may not match the live index; a
-    * COW rewrite must see every row of its periods). Any doubt — no
-    * index, stale generation, uncoercible literal, unreadable sidecar
-    * — returns the dir roots exactly as before. */
-  private def bloomNarrowed(dirRoots: Seq[String]): Seq[String] = {
-    if (rowLevel.isDefined || dirRoots.isEmpty) return dirRoots
-    val preds = pruneFilters.toSeq.collect {
-      case sources.EqualTo(a, v) if v != null =>
-        graft.store.Filters.Pred(a, "==", v)
-      case sources.In(a, vs) if vs.nonEmpty && !vs.contains(null) =>
-        graft.store.Filters.Pred(a, "in", vs.toSeq)
-      case sources.GreaterThan(a, v) if v != null =>
-        graft.store.Filters.Pred(a, ">", v)
-      case sources.GreaterThanOrEqual(a, v) if v != null =>
-        graft.store.Filters.Pred(a, ">=", v)
-      case sources.LessThan(a, v) if v != null =>
-        graft.store.Filters.Pred(a, "<", v)
-      case sources.LessThanOrEqual(a, v) if v != null =>
-        graft.store.Filters.Pred(a, "<=", v)
-      case sources.IsNull(a)    => graft.store.Filters.Pred(a, "isnull", null)
-      case sources.IsNotNull(a) => graft.store.Filters.Pred(a, "notnull", null)
-    }
-    if (preds.isEmpty) return dirRoots
-    // ONE item-root listing per sidecar root before any sidecar/meta
-    // READ: almost every item has no skip index, and this runs on the
-    // planning hot path of every filtered query (Spark pushes
-    // IsNotNull beside every comparison, so predicates repeat
-    // columns) — a single LIST of the small item root beats up to
-    // three stat/HEAD calls per (column, root) on object stores.
-    // Sidecars resolve from the LIVE item root — plus, for a pinned
-    // single-dir read, the snapshot's OWN root (a hardlink snapshot
-    // carries its cut's sidecars even after the live ones refresh or
-    // drop).
-    val sidecarRoots = itemPath +: (roots match {
-      case GraftTable.LiveDirs(dataDir) if snapshotPinned &&
-          dataDir.parent.raw != itemPath.raw => Seq(dataDir.parent)
-      case _ => Nil
-    })
-    if (!graft.store.SkipIndexes.anyIndexed(
-        sidecarRoots, preds.map(_.column).distinct))
-      return dirRoots
-    roots match {
-      case GraftTable.LiveDirs(dataDir) if !snapshotPinned =>
-        val meta =
-          try graft.store.Meta.read(itemPath)
-          catch { case scala.util.control.NonFatal(_) => return dirRoots }
-        graft.store.SkipIndexes.prunedFiles(
-          itemPath, dataDir, preds, meta, tableSchema) match {
-          case None => dirRoots
-          case Some(kept) =>
-            kept.map(f => dataDir.resolve(f).toString)
-              .filter(f => dirRoots.exists(r => f.startsWith(r + "/")))
-        }
-      case GraftTable.LiveDirs(dataDir) =>
-        // pinned flat / dir-snapshot / CDC read of one directory tree.
-        // Sidecar resolution mirrors the V1 orElse chain (Item.scala):
-        // FIRST the snapshot's own item root (dataDir.parent — a
-        // hardlink snapshot carries the sidecars of its cut, which
-        // stay valid forever at the pinned generation), THEN the live
-        // root, which applies iff its sidecar is recorded at EXACTLY
-        // the pinned generation — it then describes exactly these
-        // files (flat retention renames the data dir whole; hardlink
-        // snapshots keep names). Without the first attempt, V2
-        // snapshot reads lose pruning as soon as the live sidecar
-        // refreshes past the pin. One listing serves both attempts.
-        // Anything else reads unpruned.
-        pinnedGen match {
-          case None => dirRoots
-          case Some(g) =>
-            val once = graft.store.SkipIndexes.listOnce(dataDir)
-            val snapRoot = dataDir.parent
-            graft.store.SkipIndexes.prunedKeys(
-                snapRoot, once, preds, Map.empty, tableSchema, Some(g))
-              .orElse {
-                if (snapRoot.raw == itemPath.raw) None // CDC: same root
-                else graft.store.SkipIndexes.prunedKeys(
-                  itemPath, once, preds, Map.empty, tableSchema, Some(g))
-              } match {
-              case None => dirRoots
-              case Some(kept) =>
-                kept.map(f => dataDir.resolve(f).toString)
-                  .filter(f => dirRoots.exists(r => f.startsWith(r + "/")))
-            }
-        }
-      case GraftTable.PinnedPeriods(pairs) =>
-        // manifest time-travel read: the pinned file set is a mix of
-        // live and retained period dirs whose FILE NAMES are the ones
-        // the index recorded at the pin's generation (retention is a
-        // whole-dir rename). Key each file the way the build did and
-        // prune with the pin's generation as the validity key.
-        pinnedGen match {
-          case None => dirRoots
-          case Some(g) =>
-            val keptPairs = pairs.filter(p => dirRoots.contains(p._2.toString))
-            lazy val fileMap = graft.store.SkipIndexes.pinnedFileMap(keptPairs)
-            graft.store.SkipIndexes.prunedKeys(
-              itemPath, () => fileMap.keys.toSeq, preds, Map.empty,
-              tableSchema, Some(g)) match {
-              case None       => dirRoots
-              case Some(kept) => kept.flatMap(fileMap.get)
-            }
-        }
-    }
-  }
-
-  /** Parquet roots for a kept-period set (None = the flat root). */
-  private[sources] def rootsOf(kept: Option[Seq[String]]): Seq[String] = roots match {
-    case GraftTable.LiveDirs(dataDir) => kept match {
-      case None => Seq(dataDir.toString)
-      case Some(ps) =>
-        ps.map(p => dataDir.resolve(s"${Collection.MonthCol}=$p").toString)
-    }
-    case GraftTable.PinnedPeriods(pairs) => kept match {
-      case None => pairs.map(_._2.toString)
-      case Some(ps) =>
-        val byPeriod = pairs.toMap
-        ps.flatMap(byPeriod.get).map(_.toString)
-    }
-  }
-
-  /** Re-derive the pruned root set with runtime filters ANDed in —
-    * [[GraftScan.filter]]'s entry point. */
-  private[sources] def rootsFor(extra: Array[Filter]): Seq[String] =
-    bloomNarrowed(rootsOf(keptPeriodsFor(extra)))
 
   /** A vectorized parquet scan over an explicit root set, carrying the
     * statically pushed filters and pruned read schema. */
@@ -843,19 +580,7 @@ final class GraftScanBuilder(
       options = options)
 
   private[sources] def microBatchStream(checkpointLocation: String): GraftMicroBatchStream =
-    new GraftMicroBatchStream(this, pushed, pruneFilters, options)
-
-  /** The item's full root set, unpruned (aggregate pushdown must see
-    * every period's footers). */
-  private def allRoots(): Seq[String] = roots match {
-    case GraftTable.LiveDirs(dataDir) => layout match {
-      case None => Seq(dataDir.toString)
-      case Some(_) =>
-        dataDir.listDirs.filter(_.startsWith(Collection.MonthCol + "="))
-          .sorted.map(d => dataDir.resolve(d).toString)
-    }
-    case GraftTable.PinnedPeriods(pairs) => pairs.map(_._2.toString)
-  }
+    new GraftMicroBatchStream(this, options)
 
   private def fileIndexFor(scanRoots: Seq[String]): InMemoryFileIndex =
     new InMemoryFileIndex(
@@ -866,37 +591,67 @@ final class GraftScanBuilder(
       case Some(d) => return d.build() // footer-aggregate scan, zero data pages
       case None    =>
     }
-    // period pruning = path selection: nothing outside the surviving
-    // periods is even LISTED into the file index
-    val kept = keptPeriodsFor(Array.empty)
     // runtime filtering can prune on the index column and every
     // _period_stats-covered column; flat items have no lever.
     // Attributes must live in the PRUNED output — Spark resolves
     // filterAttributes against the scan relation's output and a
     // projected-away column would fail analysis
-    val runtimeAttrs = layout match {
+    val runtimeAttrs = target.layout match {
       case None    => Nil
       case Some(_) =>
         val avail = required.fieldNames.toSet
-        (indexCol +: periodStats.valuesIterator.flatMap(_.keysIterator).toSeq)
+        (target.indexCols.head +: target.periodStats.valuesIterator.flatMap(_.keysIterator).toSeq)
           .distinct.filter(avail)
     }
     rowLevel match {
       case Some(rl) =>
-        // COW group scan: the kept-period set is RECORDED as the
-        // replaced-group set. Runtime narrowing is allowed ONLY through
-        // GraftCowScan.filter, which re-records the narrowed set in the
-        // same call — scan and replaced groups never diverge.
+        // COW group scan: kept periods only, never narrowed to files (a
+        // COW rewrite must see every row of its periods). The set is
+        // RECORDED as the replaced-group set; runtime narrowing goes
+        // ONLY through GraftCowScan.filter, which re-records the
+        // narrowed set in the same call — scan and replaced groups
+        // never diverge.
+        val kept = ReadRoots.keptPeriods(spark, target, preds)
         rl.recordScan(kept)
-        new GraftCowScan(this, itemPath.name, rl, kept, runtimeAttrs)
+        new GraftCowScan(this, rl, kept, runtimeAttrs)
       case None =>
-        new GraftScan(this, itemPath.name, bloomNarrowed(rootsOf(kept)),
-          runtimeAttrs, snapshotPinned)
+        // period pruning = path selection: nothing outside the surviving
+        // periods is even LISTED into the file index
+        new GraftScan(this, ReadRoots.scanRoots(spark, target, preds, Some(tableSchema)),
+          runtimeAttrs)
     }
   }
 }
 
 object GraftScanBuilder {
+  /** Pushed source filters as conjunctive planner predicates: the
+    * comparison, bounded-IN and null-probe shapes the period walker and
+    * the skip indexes bound. Anything else contributes no constraint —
+    * pruning only ever over-approximates. `a <=> v` with a non-null `v`
+    * selects exactly the rows `a = v` does. Attribute names arrive
+    * quoted when they are not plain identifiers (`` `my col` ``); a
+    * top-level one is unquoted to the stored column name. */
+  private[sources] def predsOf(filters: Array[Filter]): Seq[Filters.Pred] = {
+    def pred(a: String, op: String, v: Any) = Seq(Filters.Pred(
+      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.parseAttributeName(a) match {
+        case Seq(name) => name
+        case _         => a
+      }, op, v))
+    filters.toSeq.flatMap {
+      case sources.And(l, r) => predsOf(Array(l, r))
+      case sources.EqualTo(a, v) if v != null            => pred(a, "==", v)
+      case sources.EqualNullSafe(a, v) if v != null      => pred(a, "==", v)
+      case sources.GreaterThan(a, v) if v != null        => pred(a, ">", v)
+      case sources.GreaterThanOrEqual(a, v) if v != null => pred(a, ">=", v)
+      case sources.LessThan(a, v) if v != null           => pred(a, "<", v)
+      case sources.LessThanOrEqual(a, v) if v != null    => pred(a, "<=", v)
+      case sources.In(a, vs) if vs.nonEmpty && !vs.contains(null) => pred(a, "in", vs.toSeq)
+      case sources.IsNull(a)    => pred(a, "isnull", null)
+      case sources.IsNotNull(a) => pred(a, "notnull", null)
+      case _ => Nil
+    }
+  }
+
   /** Test seam: counts constructions of the aggregate-pushdown parquet
     * delegate (each one is a full recursive root listing). Lets specs
     * assert the conf gate keeps the listing from happening at all when

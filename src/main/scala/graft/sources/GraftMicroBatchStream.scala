@@ -3,11 +3,10 @@ package graft.sources
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
-import org.apache.spark.sql.sources.Filter
 import org.json4s.{JInt, JObject}
 import org.json4s.jackson.JsonMethods
 
-import graft.store.{Collection, GraftError, Item, Meta, Snapshots, ValidationError}
+import graft.store.{Collection, GraftError, Item, Meta, ReadRoots, Snapshots, ValidationError}
 
 /** Streaming SOURCE over a graft item — `spark.readStream
   * .format("graft").load(<store>/<coll>/<item>)`: the incremental twin
@@ -59,13 +58,11 @@ import graft.store.{Collection, GraftError, Item, Meta, Snapshots, ValidationErr
   */
 final class GraftMicroBatchStream(
     builder: GraftScanBuilder,
-    pushed: Array[Filter],
-    pruneFilters: Array[Filter],
     options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  private val itemPath = builder.itemPath
-  private val layout = builder.layout
+  private val itemPath = builder.target.itemPath
+  private val layout = builder.target.layout
 
   private val maxPeriodsPerTrigger: Int =
     Option(options.get("maxPeriodsPerTrigger")).map(_.trim.toInt) match {
@@ -250,8 +247,8 @@ final class GraftMicroBatchStream(
         // static pushed predicates prune which served periods the batch
         // reads at all — fresh stats (post-commit entries are dropped
         // atomically, so absent = conservatively served)
-        val l = layout.getOrElse(
-          throw new GraftError(s"offset period keys without a time layout on '${itemPath.name}'"))
+        if (layout.isEmpty)
+          throw new GraftError(s"offset period keys without a time layout on '${itemPath.name}'")
         val meta = Meta.read(itemPath)
         val stats = Collection.periodStatsOf(meta)
         val livePg = Snapshots.periodGensOf(meta)
@@ -264,7 +261,8 @@ final class GraftMicroBatchStream(
         val (liveServed, replayServed) =
           serveKeys.partition(p => livePg.get(p).contains(e(p)))
         val kept =
-          (builder.prunePeriods(l, liveServed, pruneFilters, stats) ++ replayServed).sorted
+          (ReadRoots.prunePeriods(builder.spark, builder.target, liveServed, builder.preds,
+            stats) ++ replayServed).sorted
         val dataDir = itemPath.resolve(Item.DataDir)
         kept.map { p =>
           val liveDir = dataDir.resolve(s"${Collection.MonthCol}=$p")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetFileWrite
 import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.{Collection, GraftError, SPath}
+import graft.store.{Collection, GraftError, ReadRoots, SPath}
 
 /** SQL `UPDATE` / `MERGE INTO` / arbitrary-predicate `DELETE` —
   * group-based (copy-on-write) row-level operations, with graft's time
@@ -54,29 +54,20 @@ import graft.store.{Collection, GraftError, SPath}
   * single group (the item), inherent without a layout. */
 final class GraftRowLevelOperationBuilder(
     spark: SparkSession,
-    itemPath: SPath,
+    target: ReadRoots.Target,
     tableSchema: StructType,
-    layout: Option[String],
-    indexCol: String,
-    layoutTz: java.time.ZoneId,
-    periodStats: Map[String, Map[String, (Any, Any)]],
-    roots: GraftTable.RootSource,
     info: RowLevelOperationInfo) extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation =
-    new GraftRowLevelOperation(spark, itemPath, tableSchema, layout,
-      indexCol, layoutTz, periodStats, roots, info.command)
+    new GraftRowLevelOperation(spark, target, tableSchema, info.command)
 }
 
 final class GraftRowLevelOperation(
     spark: SparkSession,
-    itemPath: SPath,
+    target: ReadRoots.Target,
     tableSchema: StructType,
-    layout: Option[String],
-    indexCol: String,
-    layoutTz: java.time.ZoneId,
-    periodStats: Map[String, Map[String, (Any, Any)]],
-    roots: GraftTable.RootSource,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
+
+  private val itemPath = target.itemPath
 
   /** Set at scan build: Some(periods) for a time layout (the group
     * set the write replaces), None for a flat item (group = item).
@@ -100,13 +91,12 @@ final class GraftRowLevelOperation(
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(spark, itemPath, tableSchema, layout, indexCol,
-      layoutTz, periodStats, roots, options, rowLevel = Some(this))
+    new GraftScanBuilder(spark, target, tableSchema, options, rowLevel = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new GraftCowWrite(
-        spark, itemPath, tableSchema, layout, indexCol, layoutTz,
+        spark, itemPath, tableSchema, target.layout, target.indexCols.head, target.layoutTz,
         GraftRowLevelOperation.this)
     }
 }

@@ -7,6 +7,37 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
+import graft.store.ReadRoots
+
+/** The driver-side shell [[GraftScan]] and [[GraftCowScan]] share: a
+  * scan that delegates everything data-path to the vectorized
+  * [[ParquetScan]] in `inner`, which a runtime filter may swap. Batch
+  * delegates consult `inner` at CALL time, not capture time —
+  * BatchScanExec grabs toBatch before runtime filters arrive, so the
+  * indirection is what makes `filter` visible to execution. Statistics
+  * delegate too, so AQE/join planning sees post-prune sizes. */
+private[sources] abstract class ParquetShell(initial: ParquetScan)
+    extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
+
+  @volatile protected var inner: ParquetScan = initial
+
+  /** The parquet scan currently serving this shell — what plan
+    * assertions (specs, in-query gates) inspect for rootPaths /
+    * pushedFilters / readDataSchema. */
+  private[graft] def parquet: ParquetScan = inner
+
+  /** Post-runtime-filter root list (period dirs), for plan gates. */
+  private[graft] def currentRootCount: Int = inner.fileIndex.rootPaths.size
+
+  override def readSchema(): StructType = inner.readSchema()
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] =
+    inner.toBatch.planInputPartitions()
+  override def createReaderFactory(): PartitionReaderFactory =
+    inner.toBatch.createReaderFactory()
+  override def estimateStatistics(): Statistics = inner.estimateStatistics()
+}
+
 /** The graft V2 scan: a thin driver-side shell around Spark's
   * vectorized [[ParquetScan]] that owns WHICH period directories the
   * parquet scan reads, so the root set can shrink after planning.
@@ -29,49 +60,21 @@ import org.apache.spark.sql.types.StructType
   *
   * Everything data-path — vectorized reading, row-group skipping,
   * whole-stage codegen — stays Spark's: executors only ever see the
-  * inner scan's reader factory. Statistics delegate to the inner scan
-  * too, so AQE/join planning sees post-prune sizes (a runtime-pruned
-  * fact side can demote itself below the broadcast threshold).
+  * inner scan's reader factory, and a runtime-pruned fact side can
+  * demote itself below the broadcast threshold.
   *
-  * The row-level (COW) path deliberately does NOT use this shell: its
-  * scan selects the periods the write will REPLACE, and a runtime
-  * narrowing after the replaced-group set was recorded would drop
-  * un-copied rows. Group-scan runtime filtering needs the recorded set
-  * and the scan narrowed together; until then the COW scan stays
-  * static (see GraftScanBuilder.build).
+  * The row-level (COW) path uses [[GraftCowScan]] instead: its scan
+  * selects the periods the write will REPLACE, so it narrows only in
+  * lock-step with the replaced-group set it records.
   */
 final class GraftScan private[sources] (
     builder: GraftScanBuilder,
-    itemName: String,
     staticRoots: Seq[String],
-    runtimeAttrs: Seq[String],
-    snapshotPinned: Boolean)
-    extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
+    runtimeAttrs: Seq[String])
+    extends ParquetShell(builder.parquetScanOver(staticRoots)) {
 
-  @volatile private var inner: ParquetScan = builder.parquetScanOver(staticRoots)
+  private val itemName = builder.target.itemPath.name
   @volatile private var runtimePruned: Option[Int] = None
-
-  /** The parquet scan currently serving this shell — what plan
-    * assertions (specs, in-query gates) inspect for rootPaths /
-    * pushedFilters / readDataSchema. */
-  private[graft] def parquet: ParquetScan = inner
-
-  /** Post-runtime-filter root list (period dirs), for plan gates. */
-  private[graft] def currentRootCount: Int = inner.fileIndex.rootPaths.size
-
-  override def readSchema(): StructType = inner.readSchema()
-
-  override def toBatch: Batch = this
-
-  // Batch delegates consult `inner` at CALL time, not capture time —
-  // BatchScanExec grabs toBatch before runtime filters arrive, so the
-  // indirection is what makes [[filter]] visible to execution.
-  override def planInputPartitions(): Array[InputPartition] =
-    inner.toBatch.planInputPartitions()
-  override def createReaderFactory(): PartitionReaderFactory =
-    inner.toBatch.createReaderFactory()
-
-  override def estimateStatistics(): Statistics = inner.estimateStatistics()
 
   /** Join-key attributes whose runtime values can prune periods: the
     * index column (period keys ARE index ranges) plus every column the
@@ -89,7 +92,8 @@ final class GraftScan private[sources] (
     * Spark re-applies the join itself). */
   override def filter(filters: Array[Filter]): Unit = {
     if (filters.nonEmpty) {
-      val kept = builder.rootsFor(filters)
+      val kept = ReadRoots.scanRoots(builder.spark, builder.target, builder.preds,
+        Some(builder.tableSchema), GraftScanBuilder.predsOf(filters))
       if (kept != staticRoots) {
         inner = builder.parquetScanOver(kept)
         runtimePruned = Some(kept.size)
@@ -98,7 +102,7 @@ final class GraftScan private[sources] (
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    if (snapshotPinned)
+    if (builder.target.pinned)
       throw new graft.store.GraftError(
         s"snapshot reads are immutable — streaming from '$itemName' requires " +
           "the live item (drop the snapshot/VERSION AS OF clause)")
@@ -113,7 +117,7 @@ final class GraftScan private[sources] (
   // value equality on the inner scan → BatchScanExec sameResult works
   // for exchange/subquery reuse across identical reads
   override def equals(other: Any): Boolean = other match {
-    case g: GraftScan => inner == g.inner
+    case g: GraftScan => inner == g.parquet
     case _ => false
   }
   override def hashCode(): Int = inner.hashCode()
@@ -143,26 +147,13 @@ final class GraftScan private[sources] (
   * path: every row of a replaced period must be copied. */
 final class GraftCowScan private[sources] (
     builder: GraftScanBuilder,
-    itemName: String,
     rl: GraftRowLevelOperation,
     initialKept: Option[Seq[String]],
     runtimeAttrs: Seq[String])
-    extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
+    extends ParquetShell(
+      builder.parquetScanOver(ReadRoots.dirRoots(builder.target, initialKept))) {
 
-  @volatile private var inner: ParquetScan =
-    builder.parquetScanOver(builder.rootsOf(initialKept))
   @volatile private var narrowed: Option[Int] = None
-
-  private[graft] def parquet: ParquetScan = inner
-  private[graft] def currentRootCount: Int = inner.fileIndex.rootPaths.size
-
-  override def readSchema(): StructType = inner.readSchema()
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    inner.toBatch.planInputPartitions()
-  override def createReaderFactory(): PartitionReaderFactory =
-    inner.toBatch.createReaderFactory()
-  override def estimateStatistics(): Statistics = inner.estimateStatistics()
 
   // flat items have one group (the item) — nothing to narrow
   override def filterAttributes(): Array[NamedReference] =
@@ -171,17 +162,18 @@ final class GraftCowScan private[sources] (
 
   override def filter(filters: Array[Filter]): Unit = {
     if (filters.nonEmpty && initialKept.isDefined) {
-      val kept = builder.keptPeriodsFor(filters)
+      val kept = ReadRoots.keptPeriods(builder.spark, builder.target,
+        builder.preds ++ GraftScanBuilder.predsOf(filters))
       // scan and replaced-group set move together, atomically from the
       // write's perspective (commit reads scanInfo after execution)
       rl.recordScan(kept)
-      inner = builder.parquetScanOver(builder.rootsOf(kept))
+      inner = builder.parquetScanOver(ReadRoots.dirRoots(builder.target, kept))
       narrowed = kept.map(_.size)
     }
   }
 
   override def description(): String = {
     val n = narrowed.map(n => s", runtime-narrowed to $n groups").getOrElse("")
-    s"GraftCowScan item=$itemName$n ${inner.description()}"
+    s"GraftCowScan item=${builder.target.itemPath.name}$n ${inner.description()}"
   }
 }

@@ -794,19 +794,18 @@ object BloomIndex {
     * `allFiles` supplies the candidate file set (relative paths) — a
     * memoized single listing shared with [[FileStatsIndex]] via
     * [[SkipIndexes]], or a pinned manifest's file list for time-travel
-    * reads. `pinnedGen`, when set, replaces the committed generation
-    * as the validity key: a read pinned at generation G may use a
-    * sidecar recorded at exactly G even after later commits moved the
-    * live generation. */
+    * reads. `generation` is the validity key: the generation of the
+    * sidecar governing the read (the committed one for a live read, the
+    * pin's for a time-travel read) — a read pinned at generation G may
+    * use a sidecar recorded at exactly G even after later commits moved
+    * the live generation. */
   private[graft] def prunedFiles(itemPath: SPath,
                                  preds: Seq[Filters.Pred],
-                                 meta: Map[String, JValue],
                                  encodedSchema: StructType,
                                  allFiles: () => Seq[String],
-                                 pinnedGen: Option[Long] = None): Option[Seq[String]] = {
+                                 generation: Long): Option[Seq[String]] = {
     val cands = candidateValues(preds)
     if (cands.isEmpty) return None
-    val committedGen = pinnedGen.getOrElse(Snapshots.generationOf(meta))
     // (index, candidate-hashes) pairs that are usable: a valid
     // same-generation index on the column AND every candidate literal
     // coercing losslessly to the stored type (anything else skips
@@ -817,7 +816,7 @@ object BloomIndex {
         encodedSchema.fields.find(_.name == c).flatMap { f =>
           val hs = vs.flatMap(v => hashOf(v, f.dataType))
           if (hs.size != vs.size) None
-          else openIndex(itemPath, c, committedGen).map(idx => (idx, hs))
+          else openIndex(itemPath, c, generation).map(idx => (idx, hs))
         }
     }
     if (usable.isEmpty) return None

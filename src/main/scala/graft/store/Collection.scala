@@ -370,6 +370,13 @@ object Collection {
     periods.filter(p => lo.forall(p >= _) && hi.forall(p <= _) && statsPrune(p)).sorted
   }
 
+  /** The declared pruning-stats columns (`_stats_cols`; Nil = none). */
+  private[graft] def statsColumnsOf(meta: Map[String, JValue]): Seq[String] =
+    meta.get("_stats_cols").map(Meta.unjv) match {
+      case Some(xs: Seq[_]) => xs.map(_.toString)
+      case _ => Nil
+    }
+
   /** Parse the `_period_stats` sidecar key (period → stats column →
     * (min, max)) — shared by the pruned delete discovery scan and the
     * DataSource V2 read path. Numeric and temporal columns record
@@ -670,8 +677,10 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * absent/unprunable stats rather than stale ones). */
   private[graft] var simulateCrashBeforeStatsRefresh = false
 
-  private def maybeRefreshPeriodStats(item: String, months: Option[Seq[String]]): Unit =
-    if (!simulateCrashBeforeStatsRefresh) refreshPeriodStats(item, months)
+  private def maybeRefreshPeriodStats(item: String, cols: Seq[String],
+                                      months: Option[Seq[String]],
+                                      at: Map[String, JValue]): Unit =
+    if (!simulateCrashBeforeStatsRefresh) refreshPeriodStats(item, cols, months, at)
 
   /** Hold the commit (read) side of the coordination lock — see
     * [[Collection.commitLockFor]]. Reentrant per thread. */
@@ -1120,7 +1129,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
   }
 
   /** Maintain the `_period_stats` sidecar map (period → stats column →
-    * [min, max]) for items with declared `_stats_cols`: a narrow
+    * [min, max]) for the item's declared `_stats_cols` (`cols`, from
+    * the caller's sidecar — the publish's just-written meta, or
+    * analyzeItem's declaration; Nil is a no-op): a narrow
     * post-commit read-back of ONLY the touched periods — a
     * partition-pruned COLUMN SCAN of just the stats columns (column
     * pruning keeps it narrow; it is not footer-only), merged over the
@@ -1135,14 +1146,19 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * periods' entries in its own meta write ([[publish]]), so
     * this read-back only ever re-establishes intervals — a crash
     * anywhere in the commit→refresh window leaves absent (unprunable,
-    * conservative) entries, never stale ones. */
-  private[graft] def refreshPeriodStats(item: String, months: Option[Seq[String]]): Unit = {
+    * conservative) entries, never stale ones.
+    *
+    * Concurrency: `at` is the sidecar, read under the locks before the
+    * scan, whose data state the scan is meant to see. A commit landing
+    * during the lock-free scan may swap a period before or after the
+    * scan reads it, so the merge keeps a fresh entry only
+    * for a period provably unchanged since `at` — same `_generation`,
+    * or same `_period_gens` entry — and leaves every other period's
+    * entry as that commit (and its own refresh) left it. */
+  private[graft] def refreshPeriodStats(item: String, cols: Seq[String],
+                                        months: Option[Seq[String]],
+                                        at: Map[String, JValue]): Unit = {
     val itemPath = path.resolve(item)
-    val meta = Meta.read(itemPath)
-    val cols = meta.get("_stats_cols") match {
-      case Some(org.json4s.JArray(xs)) => xs.collect { case org.json4s.JString(s) => s }
-      case _ => Nil
-    }
     if (cols.isEmpty) return
     val dataDir = itemPath.resolve(Item.DataDir)
     // a delete/expiry can empty EVERY period: the commit already
@@ -1202,6 +1218,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         else Some(c -> Seq(widen(c, mn, up = false), widen(c, mx, up = true)))
       }.toMap
     }.toMap
+    Collection.commitSeamHook(s"stats_scanned:$item") // no-op outside tests
     // The expensive column scan above ran lock-free; the sidecar
     // read-modify-write below RE-READS under the per-item DDL lock so a
     // schema mutation (drop/add/properties) landing during the scan is
@@ -1212,10 +1229,15 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         case Some(org.json4s.JObject(fs)) => fs.map { case (k, v) => k -> Meta.unjv(v) }.toMap
         case _ => Map.empty
       }
-      val merged = months match {
-        case Some(ms) => (old -- ms) ++ fresh // replaced or emptied periods
-        case None     => fresh                // full rebuild
-      }
+      val atGens = Snapshots.periodGensOf(at)
+      val curGens = Snapshots.periodGensOf(cur)
+      val unchanged: String => Boolean =
+        if (Snapshots.generationOf(cur) == Snapshots.generationOf(at)) _ => true
+        else p => atGens.get(p).exists(g => curGens.get(p).contains(g))
+      // replaced or emptied periods: the listed ones, or every one on a
+      // full rebuild
+      val rebuilt = months.getOrElse(old.keys ++ fresh.keys).filter(unchanged)
+      val merged = (old -- rebuilt) ++ fresh.filter { case (p, _) => unchanged(p) }
       Meta.write(itemPath, cur + ("_period_stats" -> Meta.jv(merged)))
       metaCache.remove(item)
     } }
@@ -1373,7 +1395,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       staged.deleteRecursively()
       throw new ConcurrentWriteError(why)
     }
-    val gens = withCommitLock { withItemDdlLock(item) {
+    val (gens, written) = withCommitLock { withItemDdlLock(item) {
       // ONE sidecar read serves both fences, the swap and the log.
       val cur = Meta.read(path.resolve(item))
       val oldGen = Snapshots.generationOf(cur)
@@ -1430,17 +1452,16 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           case _ => next
         }
       }
-      writeSidecar(item, cur,
-        (kept - History.OpKey) + ("_generation" -> Meta.jv(gen)) ++
-          swapped.periodGens.map(pg => "_period_gens" -> Meta.jv(pg)),
-        History.opOf(next), gen, swapped.touched)
+      val written = (kept - History.OpKey) + ("_generation" -> Meta.jv(gen)) ++
+        swapped.periodGens.map(pg => "_period_gens" -> Meta.jv(pg))
+      writeSidecar(item, cur, written, History.opOf(next), gen, swapped.touched)
       Option(Collection.publishObserver.get).foreach(_(this, item, gen))
       Collection.commitSeamHook(s"${seam}_post_sidecar:$item")
       swapped.cleanup()
       refreshItems()
-      (oldGen, gen)
+      ((oldGen, gen), written)
     } }
-    refreshAfterPublish(item, scope, next, gens)
+    refreshAfterPublish(item, scope, written, gens)
   }
 
   /** Full-scope swap: the staged dir replaces the item's whole data dir
@@ -1612,30 +1633,33 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * the current sidecar to the next one (None: no change), which lands
     * logged at the UNCHANGED generation so DESCRIBE HISTORY records the
     * mutation while timestamp travel stays data-exact — generations
-    * identify data states (see resolveAsOf's contract). */
+    * identify data states (see resolveAsOf's contract). Returns the
+    * sidecar `f` was given, whose data generations the write kept. */
   private def alterSidecar(item: String, op: String)(
-      f: Map[String, JValue] => Option[Map[String, JValue]]): Unit =
+      f: Map[String, JValue] => Option[Map[String, JValue]]): Map[String, JValue] =
     withCommitLock { withItemDdlLock(item) {
       val meta = Meta.read(path.resolve(item))
       f(meta).foreach(writeSidecar(item, meta, _, op, Snapshots.generationOf(meta), Nil))
+      meta
     } }
 
   /** Post-commit derived bookkeeping after [[publish]], lock-free (the
     * read-backs are Spark jobs), decided from the meta the publish just
-    * wrote: `_period_stats` for items declaring stats columns — every
-    * period after a partitioned full commit (a full rewrite re-derived
+    * wrote (also the state the stats read-back is judged against):
+    * `_period_stats` for items declaring stats columns — every period
+    * after a partitioned full commit (a full rewrite re-derived
     * every period: stale stats would let a later pruned delete silently
     * skip live rows), the listed ones after a period commit — and the
     * incremental skip-index refresh after a period commit. */
   private def refreshAfterPublish(item: String, scope: CommitScope,
                                   meta: Map[String, JValue],
                                   gens: (Long, Long)): Unit = {
-    val declaresStats = meta.contains("_stats_cols")
+    val statsCols = statsColumnsOf(meta)
     scope match {
       case Full(partitioned) =>
-        if (partitioned && declaresStats) maybeRefreshPeriodStats(item, None)
+        if (partitioned) maybeRefreshPeriodStats(item, statsCols, None, meta)
       case Periods(months) =>
-        if (declaresStats) maybeRefreshPeriodStats(item, Some(months))
+        maybeRefreshPeriodStats(item, statsCols, Some(months), meta)
         maybeRefreshBloomIndexes(item, months, gens)
     }
   }
@@ -3405,10 +3429,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         }
         case None => Seq(Collection.DefaultIndex)
       }
-      val statsCols = meta.get("_stats_cols").map(Meta.unjv) match {
-        case Some(xs: Seq[_]) => xs.map(_.toString)
-        case _ => Nil
-      }
+      val statsCols = statsColumnsOf(meta)
       val byLower = encoded.fields.map(f => f.name.toLowerCase -> f.name).toMap
       val resolved = names.flatMap { n =>
         byLower.get(n.toLowerCase) match {
@@ -3526,10 +3547,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           s"cannot rename '$actualFrom': it is the item's index column — " +
             "the index is the item's physical contract (ordering, dedup, " +
             "partitioning); reshaping it needs a rewriting migration")
-      val statsCols = meta.get("_stats_cols").map(Meta.unjv) match {
-        case Some(xs: Seq[_]) => xs.map(_.toString)
-        case _ => Nil
-      }
+      val statsCols = statsColumnsOf(meta)
       if (statsCols.exists(_.equalsIgnoreCase(actualFrom)))
         throw new ValidationError(
           s"cannot rename '$actualFrom': it is a declared pruning-stats " +
@@ -3645,45 +3663,58 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * Cost: one narrow scan of just the stats columns across the item —
     * the same shape a `convertLayout` pays, run once; incremental
     * appends keep the map fresh from then on (the partial-commit
-    * paths' existing refresh). */
-  def analyzeItem(item: String, statsColumns: Seq[String]): Int =
-      withCommitLock { withItemDdlLock(item) {
+    * paths' existing refresh). Validation and the declaration run under
+    * the commit and item DDL locks; the backfill scan runs after them,
+    * like every post-commit refresh (its sidecar merge re-locks). A
+    * commit swapping period dirs under the scan can fail it: the
+    * backfill then re-runs over the new state, up to three times. */
+  def analyzeItem(item: String, statsColumns: Seq[String]): Int = {
     val itemPath = path.resolve(item)
-    if (!itemPath.resolve(Item.DataDir).isDir)
-      throw new ItemNotFoundError(s"item '$item' does not exist")
-    if (timeLayoutOf(item).isEmpty)
-      throw new ValidationError(
-        s"analyzeItem: '$item' is a flat item — per-period stats prune " +
-          "period directories, which flat items do not have (convert to a " +
-          "time layout first, or rely on parquet row-group stats)")
-    val schemaCols = item1Schema(item)
-    statsColumns.foreach { c =>
-      val field = schemaCols.find(_.name == c).getOrElse(
+    val declared = withCommitLock { withItemDdlLock(item) {
+      if (!itemPath.resolve(Item.DataDir).isDir)
+        throw new ItemNotFoundError(s"item '$item' does not exist")
+      if (timeLayoutOf(item).isEmpty)
         throw new ValidationError(
-          s"stats column '$c' not in item schema " +
-            s"(${schemaCols.map(_.name).mkString(", ")})"))
-      import org.apache.spark.sql.types._
-      field.dataType match {
-        case _: NumericType | TimestampType | TimestampNTZType | DateType | StringType => ()
-        case other => throw new ValidationError(
-          s"stats column '$c' has unsupported type ${other.simpleString}: declare " +
-            "numeric, timestamp, date, or string columns")
+          s"analyzeItem: '$item' is a flat item — per-period stats prune " +
+            "period directories, which flat items do not have (convert to a " +
+            "time layout first, or rely on parquet row-group stats)")
+      val schemaCols = item1Schema(item)
+      statsColumns.foreach { c =>
+        val field = schemaCols.find(_.name == c).getOrElse(
+          throw new ValidationError(
+            s"stats column '$c' not in item schema " +
+              s"(${schemaCols.map(_.name).mkString(", ")})"))
+        import org.apache.spark.sql.types._
+        field.dataType match {
+          case _: NumericType | TimestampType | TimestampNTZType | DateType | StringType => ()
+          case other => throw new ValidationError(
+            s"stats column '$c' has unsupported type ${other.simpleString}: declare " +
+              "numeric, timestamp, date, or string columns")
+        }
       }
-    }
-    // logged (gen unchanged) like the other metadata-only mutations;
-    // the post-commit _period_stats refreshes stay UNlogged (they are
-    // derived bookkeeping riding data commits already in the log)
-    alterSidecar(item, "analyze") { meta => Some(
-      if (statsColumns.isEmpty)
-        meta - "_stats_cols" + ("_period_stats" -> Meta.jv(Map.empty[String, Any]))
-      else meta ++ Meta.obj("_stats_cols" -> statsColumns))
-    }
+      // logged (gen unchanged) like the other metadata-only mutations;
+      // the post-commit _period_stats refreshes stay UNlogged (they are
+      // derived bookkeeping riding data commits already in the log)
+      alterSidecar(item, "analyze") { meta => Some(
+        if (statsColumns.isEmpty)
+          meta - "_stats_cols" + ("_period_stats" -> Meta.jv(Map.empty[String, Any]))
+        else meta ++ Meta.obj("_stats_cols" -> statsColumns))
+      }
+    } }
+    @annotation.tailrec
+    def backfill(at: Map[String, JValue], tries: Int): Unit =
+      scala.util.Try(refreshPeriodStats(item, statsColumns, None, at)) match {
+        case scala.util.Failure(_) if tries > 1 &&
+            Snapshots.generationOf(Meta.read(itemPath)) != Snapshots.generationOf(at) =>
+          backfill(withCommitLock { withItemDdlLock(item) { Meta.read(itemPath) } }, tries - 1)
+        case done => done.get
+      }
     if (statsColumns.isEmpty) 0
     else {
-      refreshPeriodStats(item, None)
+      backfill(declared, 3)
       Collection.periodStatsOf(Meta.read(itemPath)).size
     }
-  } }
+  }
 
   /** The item's declared (logical) schema fields — for validating
     * post-hoc stats declarations without reading data. */

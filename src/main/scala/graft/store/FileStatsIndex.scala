@@ -267,13 +267,12 @@ object FileStatsIndex {
   /** Driver-side file pruning, same contract as
     * [[BloomIndex.prunedFiles]]: None = no pruning applies (or it
     * would not shrink); Some(kept) = read exactly these files.
-    * `allFiles` and `pinnedGen` carry the same meaning as there. */
+    * `allFiles` and `generation` carry the same meaning as there. */
   private[graft] def prunedFiles(itemPath: SPath,
                                  preds: Seq[Filters.Pred],
-                                 meta: Map[String, JValue],
                                  encodedSchema: StructType,
                                  allFiles: () => Seq[String],
-                                 pinnedGen: Option[Long] = None): Option[Seq[String]] = {
+                                 generation: Long): Option[Seq[String]] = {
     val cands: Seq[(String, String, Seq[Any])] = preds.flatMap {
       // null probes carry no literal (value ignored by contract)
       case Filters.Pred(c, op @ ("isnull" | "notnull" | "isnotnull"), _) =>
@@ -290,7 +289,6 @@ object FileStatsIndex {
       case _ => None
     }
     if (cands.isEmpty) return None
-    val committedGen = pinnedGen.getOrElse(Snapshots.generationOf(meta))
     // per usable pred: file → bounds in the canonical domain, plus the
     // coerced literal(s); any doubt (type mismatch, stale, unreadable
     // bound) drops the PRED, never a file
@@ -298,7 +296,7 @@ object FileStatsIndex {
       case (c, op, vs) =>
         encodedSchema.fields.find(_.name == c).flatMap { fld =>
           if (!supportedType(fld.dataType)) None
-          else load(itemPath, c).filter(_.generation == committedGen).flatMap { l =>
+          else load(itemPath, c).filter(_.generation == generation).flatMap { l =>
             val dom = vs.flatMap(v => toDomain(v, fld.dataType))
             if (dom.size != vs.size) None
             else Some((domainBounds(l, fld.dataType), op, dom))

@@ -42,49 +42,21 @@ final class Item private[store] (
     filters: Seq[Filters.Pred],
     columns: Seq[String]) {
 
-  /** Resolved item location + (for manifest snapshots) the sidecar
-    * frozen at snapshot time: a snapshot name resolves to a physical
-    * snapshot dir (link/copy snapshots and legacy-frozen items), or
-    * through the manifest — flat items to the live dir (generation
-    * unchanged) / retained generation dir, time-layout items to one
-    * parquet dir per pinned period (live or retained per period). */
-  private val resolved: (SPath, Option[Snapshots.Resolved]) = snapshot match {
-    case None => (collectionPath.resolve(name), None)
-    case Some(snap) =>
-      Snapshots.requireUserSnapshotName(snap)
-      val snapDir = collectionPath.resolve(GraftStore.SnapshotsDir).resolve(snap)
-      val hasManifest = Snapshots.manifestExists(collectionPath, snap)
-      if (!snapDir.isDir && !hasManifest)
-        throw new SnapshotNotFoundError(s"snapshot '$snap' does not exist")
-      val dirItem = snapDir.resolve(name)
-      if (dirItem.isDir) (dirItem, None)
-      else Snapshots.resolveManifestItem(collectionPath, snap, name) match {
-        case Some(r: Snapshots.FlatResolved) => (r.dir, Some(r))
-        case Some(r: Snapshots.PeriodResolved) =>
-          (collectionPath.resolve(name), Some(r))
-        case None =>
-          throw new ItemNotFoundError(s"item '$name' not found in snapshot '$snap'")
-      }
+  /** What this read resolves to — the live item, a directory snapshot
+    * or a manifest pin — through the read planner the V2 source shares. */
+  private val target = ReadRoots.resolve(spark, collectionPath.resolve(name), snapshot)
+
+  /** The resolved item dir (live, directory snapshot, or retained
+    * generation; the live root for a manifest period pin). */
+  val path: SPath = target.dir
+
+  target.roots match {
+    case ReadRoots.LiveDirs(_) if !path.isDir =>
+      throw new ItemNotFoundError(s"item '$name' does not exist")
+    case _ =>
   }
 
-  val path: SPath = resolved._1
-
-  private def periodResolved: Option[Snapshots.PeriodResolved] =
-    resolved._2.collect { case p: Snapshots.PeriodResolved => p }
-
-  periodResolved match {
-    case Some(p) =>
-      p.periodDirs.find(!_._2.isDir).foreach { case (period, d) =>
-        throw new StorageError(
-          s"snapshot period '$period' of item '$name' missing at $d")
-      }
-    case None =>
-      if (!path.isDir)
-        throw new ItemNotFoundError(s"item '$name' does not exist")
-  }
-
-  lazy val metadata: Map[String, JValue] =
-    resolved._2.map(_.sidecar).getOrElse(Meta.read(path))
+  lazy val metadata: Map[String, JValue] = target.meta
 
   /** Whether this read resolves (any of) the LIVE item's directories.
     * A live read, or a manifest pin whose generation is still current
@@ -94,83 +66,10 @@ final class Item private[store] (
     * resolved to a physical snapshot dir or to `.retained` generation
     * dirs is immutable — fencing it against the live generation would
     * spuriously refuse under a sustained writer. */
-  private[graft] def touchesLiveDir: Boolean =
-    snapshot.isEmpty || (resolved._2 match {
-      case None => false // physical dir snapshot — re-rooted copy
-      case Some(r) =>
-        val liveRoot = collectionPath.resolve(name).raw
-        def live(p: SPath) = p.raw == liveRoot || p.raw.startsWith(liveRoot + "/")
-        r match {
-          case f: Snapshots.FlatResolved   => live(f.dir)
-          case p: Snapshots.PeriodResolved => p.periodDirs.exists(d => live(d._2))
-        }
-    })
+  private[graft] def touchesLiveDir: Boolean = target.touchesLiveDir
 
   /** Index column names recorded at write (default Seq("index")). */
-  def indexCols: Seq[String] = metadata.get("index_names") match {
-    case Some(j) => Meta.unjv(j) match {
-      case xs: Seq[_] if xs.nonEmpty => xs.map(_.toString)
-      case _ => Seq(Collection.DefaultIndex)
-    }
-    case None => Seq(Collection.DefaultIndex)
-  }
-
-  private def timeLayout: Option[String] =
-    metadata.get("_layout").map(j => Meta.unjv(j).toString)
-      .filter(Collection.TimeLayouts.contains)
-
-  /** Zone the period keys were derived in at write time (sidecar);
-    * falls back to the reading session's zone for items written before
-    * the zone was recorded. */
-  private def layoutZone: java.time.ZoneId =
-    java.time.ZoneId.of(
-      metadata.get("_layout_tz").map(j => Meta.unjv(j).toString)
-        .getOrElse(spark.sessionState.conf.sessionLocalTimeZone))
-
-  private def isMonthly: Boolean = timeLayout.isDefined
-
-  /** For time-layout items, translate index-column time predicates
-    * into predicates on the hidden period partition column so Catalyst
-    * partition pruning skips whole period DIRECTORIES (string compare
-    * works because every period key format is zero-padded and
-    * lexically ordered). */
-  private def monthPruning: Option[org.apache.spark.sql.Column] = {
-    val layout = timeLayout.getOrElse(return None)
-    val mc = col(Collection.MonthCol)
-    val preds = filters.filter(_.column == indexCols.head).flatMap { p =>
-      Collection.periodOfValue(layout, p.value, layoutZone).map { m =>
-        p.op match {
-          case "==" | "="        => mc === m
-          case ">" | ">="        => mc >= m
-          case "<" | "<="        => mc <= m
-          case _                 => lit(true)
-        }
-      }
-    }
-    preds.reduceOption(_ && _)
-  }
-
-  /** Period dirs of a manifest-snapshot time item, pruned DRIVER-side
-    * by the same index-time predicates `monthPruning` derives — with
-    * per-period paths, partition pruning becomes path selection. */
-  private def prunedPeriodDirs(pr: Snapshots.PeriodResolved): Seq[(String, SPath)] = {
-    val all = pr.periodDirs
-    val layout = timeLayout.getOrElse(return all)
-    val constraints = filters.filter(_.column == indexCols.head).flatMap { pred =>
-      Collection.periodOfValue(layout, pred.value, layoutZone).map(m => (pred.op, m))
-    }
-    val kept = all.filter { case (p, _) =>
-      constraints.forall {
-        case ("==" | "=", m) => p == m
-        case (">" | ">=", m) => p >= m
-        case ("<" | "<=", m) => p <= m
-        case _               => true
-      }
-    }
-    // over-pruned to nothing → read everything; the row filters below
-    // still produce the correct (empty) result with the right schema
-    if (kept.isEmpty) all else kept
-  }
+  def indexCols: Seq[String] = target.indexCols
 
   /** The lazy, pushdown-planned scan, plus whether the emptied-item
     * fallback had to serve the legacy PRE-encode `schema_json` (older
@@ -178,180 +77,54 @@ final class Item private[store] (
     * so [[dataRestored]] must skip marker inversion for it. */
   private lazy val dataWithFallbackKind: (DataFrame, Boolean) = {
     var preEncodeFallback = false
-    val base = periodResolved match {
-      case Some(pr) =>
-        // manifest time-layout snapshot: union of live + retained
-        // period dirs (no partition column — pruning happened above).
-        // The read is pinned to the sidecar schema FROZEN IN THE
-        // MANIFEST, same as the live branch below: a pin can mix
-        // generations (live dirs evolved after the cut, retained dirs
-        // from before it), and footer inference over that mix would
-        // resolve an arbitrary file's shape. The frozen sidecar is the
-        // snapshot's declared contract — identical to what the SQL
-        // `VERSION AS OF` path serves via GraftTable.fromMeta.
-        val frozen: Option[org.apache.spark.sql.types.StructType] =
-          pr.sidecar.get("schema_json_encoded").collect {
-            case org.json4s.JString(sj) =>
-              Item.asNullable(org.apache.spark.sql.types.DataType.fromJson(sj))
-                .asInstanceOf[org.apache.spark.sql.types.StructType]
-          }
-        val reader = frozen.fold(spark.read)(spark.read.schema)
-        val keptPairs = prunedPeriodDirs(pr)
-        // skip-index pruning for the pinned file set: a LIVE-root
-        // sidecar recorded at EXACTLY the pin's generation describes
-        // exactly these files — live dirs for untouched periods,
-        // retained dirs (whole-dir renames, names preserved) for the
-        // rest. Keys are built from the PAIR's period name because a
-        // retained dir's on-disk path no longer carries `__month=`.
-        val pinKept: Option[Seq[String]] = frozen.flatMap { enc =>
-          // one LIST of the live item root answers "any skip index on
-          // the predicate columns?" before any per-column sidecar stat
-          // — the overwhelmingly common no-index case stays one call
-          if (!SkipIndexes.anyIndexed(Seq(collectionPath.resolve(name)),
-              filters.map(_.column).distinct)) None
-          else {
-            lazy val fileMap = SkipIndexes.pinnedFileMap(keptPairs)
-            SkipIndexes.prunedKeys(
-              collectionPath.resolve(name), () => fileMap.keys.toSeq,
-              filters, pr.sidecar, enc,
-              Some(Snapshots.generationOf(pr.sidecar)))
-              .map(_.flatMap(fileMap.get))
-          }
-        }
-        pinKept match {
-          case Some(files) if files.isEmpty =>
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], frozen.get)
-          case Some(files) => reader.parquet(files: _*)
-          case None        => reader.parquet(keptPairs.map(_._2.toString): _*)
-        }
-      case None =>
-        val dataDir = path.resolve(Item.DataDir)
-        // The sidecar's ENCODED schema (when present) is authoritative
-        // and pins the read: mixed part-file generations (a column
-        // ALTER-added or evolution-appended after older files were
-        // written) all read against the declared shape, with absent
-        // columns null-filled per file by the parquet reader — no
-        // mergeSchema multi-footer pass, and ALTER ADD COLUMN stays a
-        // pure metadata operation. The period partition column is
-        // pinned to STRING (period keys are zero-padded and lexically
-        // chronological, so string pruning compares correctly in every
-        // layout). Legacy pre-encode sidecars keep footer inference.
-        val declared: Option[org.apache.spark.sql.types.StructType] =
-          metadata.get("schema_json_encoded").collect {
-            case org.json4s.JString(sj) =>
-              Item.asNullable(org.apache.spark.sql.types.DataType.fromJson(sj))
-                .asInstanceOf[org.apache.spark.sql.types.StructType]
-          }
-        try {
-          val reader = declared match {
-            case Some(enc) =>
-              val readSchema =
-                if (!isMonthly) enc
-                else org.apache.spark.sql.types.StructType(enc.fields :+
-                  org.apache.spark.sql.types.StructField(
-                    Collection.MonthCol, org.apache.spark.sql.types.StringType))
-              spark.read.schema(readSchema)
-            case None => spark.read
-          }
-          // Skip-index file pruning (BloomIndex + FileStatsIndex):
-          // equality predicates drop files whose bloom says
-          // definitely-absent; range/equality predicates drop files
-          // whose min/max interval can't hold a match — driver-side
-          // path selection, same class as the period-dir pruning
-          // above, and the two INTERSECT. Applies only when an index
-          // is generation-current; anything uncertain reads the whole
-          // dir exactly as before. Declared-schema items only (the
-          // literal must hash/order against the stored type).
-          val bloomKept: Option[Seq[String]] = declared.flatMap { enc =>
-            // one LIST per sidecar root (the item root; plus the live
-            // root for a snapshot read) answers "any skip index on the
-            // predicate columns?" BEFORE any per-column sidecar stat —
-            // almost every item has no index, and this runs on every
-            // filtered read
-            val sidecarRoots = path +:
-              (if (snapshot.isEmpty) Nil
-               else Seq(collectionPath.resolve(name)))
-            if (!SkipIndexes.anyIndexed(
-                sidecarRoots, filters.map(_.column).distinct)) None
-            else {
-              // one listing serves BOTH prune attempts: the orElse
-              // fallback would otherwise re-LIST the same dataDir
-              // (None can mean "consulted a sidecar but didn't shrink",
-              // not only "no usable sidecar")
-              val once = SkipIndexes.listOnce(dataDir)
-              SkipIndexes.prunedKeys(path, once, filters, metadata, enc,
-                  generation = None)
-                .orElse {
-                  // pinned read (dir snapshot / retained flat dir):
-                  // retention and snapshots never carry the index
-                  // sidecars aside, but the LIVE item root's sidecar
-                  // applies iff recorded at EXACTLY the pin's frozen
-                  // generation — it then describes exactly these files
-                  // (whole-dir renames / hardlinks preserve names)
-                  if (snapshot.isEmpty) None
-                  else SkipIndexes.prunedKeys(
-                    collectionPath.resolve(name), once, filters, metadata,
-                    enc, Some(Snapshots.generationOf(metadata)))
-                }
-            }
-          }
-          bloomKept match {
-            case Some(kept) if kept.isEmpty =>
-              // every file is definitely value-free: zero-file scan
-              // with the typed shape (MonthCol never surfaces, so the
-              // monthly post-processing below has nothing to do)
+    // The sidecar's ENCODED schema (when present) is authoritative and
+    // pins the read: mixed part-file generations (a column ALTER-added
+    // or evolution-appended after older files were written, or a pin
+    // mixing live and retained dirs) all read against the declared
+    // shape, with absent columns null-filled per file by the parquet
+    // reader — no mergeSchema multi-footer pass, and ALTER ADD COLUMN
+    // stays a pure metadata operation. Legacy pre-encode sidecars keep
+    // footer inference. The planner hands back only the kept period
+    // dirs (or skip-index-kept files), so no period column surfaces.
+    val encoded = target.encoded
+    val roots = ReadRoots.scanRoots(spark, target, filters, encoded)
+    // nothing kept: a live item still needs its data dir (a sidecar
+    // without one is torn); otherwise the schema-pinned read of no
+    // roots is the typed empty frame
+    val paths = target.roots match {
+      case ReadRoots.LiveDirs(d) if roots.isEmpty && !d.isDir => Seq(d.toString)
+      case _ => roots
+    }
+    val base =
+      try encoded.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+      catch {
+        // a sidecar with NO data directory is a torn item (an
+        // interrupted operation on a crashed process) — name the
+        // repair instead of surfacing a raw path error
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "PATH_NOT_FOUND" && metadata.nonEmpty =>
+          throw new GraftError(
+            s"item '$name' has a metadata sidecar but no data directory — " +
+              "an interrupted operation left it torn; run " +
+              "Collection.vacuum() (SQL: CALL <catalog>.system.vacuum) " +
+              s"to repair, then retry (${e.getMessage})")
+        // a legacy (pre-encode) sidecar over zero files — a
+        // deleteWhere/expiry can empty EVERY period — leaves nothing to
+        // infer a schema from, but the sidecar recorded the logical one:
+        // serve it typed and empty, flagged so restoration is skipped
+        // (its types are already decoded)
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+          metadata.get("schema_json") match {
+            case Some(org.json4s.JString(sj)) =>
+              preEncodeFallback = true
               spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                declared.get)
-            case other =>
-              val raw = other match {
-                case Some(kept) =>
-                  // basePath keeps the period partition column derivable
-                  // from the explicit file paths on time-layout items
-                  reader.option("basePath", dataDir.toString)
-                    .parquet(kept.map(f => dataDir.resolve(f).toString): _*)
-                case None => reader.parquet(dataDir.toString)
-              }
-              if (!isMonthly) raw
-              else monthPruning.fold(raw)(raw.filter).drop(Collection.MonthCol)
+                Item.asNullable(org.apache.spark.sql.types.DataType.fromJson(sj))
+                  .asInstanceOf[org.apache.spark.sql.types.StructType])
+            case _ => throw e
           }
-        } catch {
-          // a deleteWhere/expiry can legitimately empty EVERY period of
-          // a time-layout item: zero files means nothing to infer a
-          // schema from, but the sidecar recorded it — serve the typed
-          // empty frame. Catch-then-fallback keeps the happy path free
-          // of an extra recursive listing (which object stores charge
-          // for at item scale).
-          // a sidecar with NO data directory is a torn item (an
-          // interrupted operation on a crashed process) — name the
-          // repair instead of surfacing a raw path error
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" && metadata.nonEmpty =>
-            throw new GraftError(
-              s"item '$name' has a metadata sidecar but no data directory — " +
-                "an interrupted operation left it torn; run " +
-                "Collection.vacuum() (SQL: CALL <catalog>.system.vacuum) " +
-                s"to repair, then retry (${e.getMessage})")
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-            // prefer the ENCODED schema (what the part-files held — the
-            // same types a non-empty read serves, so restoration below
-            // behaves identically); legacy sidecars recorded only the
-            // pre-encode logical schema — serve it but flag that
-            // restoration must be skipped (its types are already decoded)
-            val encoded = metadata.get("schema_json_encoded")
-            val legacy = metadata.get("schema_json")
-            encoded.orElse { preEncodeFallback = legacy.isDefined; legacy } match {
-              case Some(org.json4s.JString(sj)) =>
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  Item.asNullable(org.apache.spark.sql.types.DataType.fromJson(sj))
-                    .asInstanceOf[org.apache.spark.sql.types.StructType])
-              case _ => throw e
-            }
-        }
-    }
+      }
     val filtered = Filters.toColumn(filters).fold(base)(base.filter)
     val projected =
       if (columns.isEmpty) filtered

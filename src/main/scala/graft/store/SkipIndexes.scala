@@ -38,12 +38,12 @@ private[graft] object SkipIndexes {
     }
   }
 
-  /** A memoized single listing to share ACROSS prune attempts: the
-    * pinned-read orElse chains (V1 Item and V2 GraftScanBuilder) try
-    * two sidecar roots — the snapshot's own hardlinked sidecars, then
-    * the live root at the pinned generation — over the SAME data dir;
-    * one LIST must serve both attempts or the fallback pays the exact
-    * double-listing cost this object exists to avoid. */
+  /** A memoized single listing to share ACROSS prune attempts: a
+    * pinned read ([[ReadRoots]]) tries two sidecar roots — the
+    * snapshot's own hardlinked sidecars, then the live root at the
+    * pinned generation — over the SAME data dir; one LIST must serve
+    * both attempts or the fallback pays the exact double-listing cost
+    * this object exists to avoid. */
   private[graft] def listOnce(dataDir: SPath): () => Seq[String] =
     new ListOnce(dataDir)
 
@@ -66,28 +66,17 @@ private[graft] object SkipIndexes {
           names.contains(FileStatsIndex.sidecarName(c)))
     }
 
-  /** Driver-side file pruning through both indexes over ONE listing.
-    * Same contract as each pruner: None = no pruning applies (or no
-    * shrink); Some(kept) = read exactly these relative paths. */
-  private[graft] def prunedFiles(itemPath: SPath, dataDir: SPath,
-                                 preds: Seq[Filters.Pred],
-                                 meta: Map[String, JValue],
-                                 encodedSchema: StructType,
-                                 generation: Option[Long] = None): Option[Seq[String]] =
-    prunedKeys(itemPath, new ListOnce(dataDir), preds, meta, encodedSchema,
-      generation)
-
-  /** [[prunedFiles]] against a CALLER-supplied candidate key list —
-    * the pinned-read entry point: a time-travel read assembles its
-    * file set from live + retained period dirs (no single data dir to
-    * list), keys them the way the index recorded them
-    * (`__month=<p>/<name>` / `<name>`), and prunes with the pin's own
-    * generation as the validity key. */
+  /** Driver-side file pruning through both indexes over ONE candidate
+    * key list — a data dir's [[listOnce]], or a time-travel read's file
+    * set assembled from live + retained period dirs ([[pinnedFileMap]]),
+    * keyed the way the index recorded them (`__month=<p>/<name>` /
+    * `<name>`). Same contract as each pruner: None = no pruning applies
+    * (or no shrink); Some(kept) = read exactly these keys. Validity key:
+    * `generation` — only an index recorded at it is consulted. */
   private[graft] def prunedKeys(itemPath: SPath, allFiles: () => Seq[String],
                                 preds: Seq[Filters.Pred],
-                                meta: Map[String, JValue],
                                 encodedSchema: StructType,
-                                generation: Option[Long]): Option[Seq[String]] = {
+                                generation: Long): Option[Seq[String]] = {
     // Zonemap first, and its kept list becomes the bloom's CANDIDATE
     // list: the result is the same intersection as pruning
     // independently (both predicates are per-file), but the bloom now
@@ -95,13 +84,12 @@ private[graft] object SkipIndexes {
     // means loading only the shards those files touch (the "planning
     // rides the probe's selectivity" contract), and the zonemap's own
     // sidecar is tiny at any file count.
-    val byStats =
-      FileStatsIndex.prunedFiles(itemPath, preds, meta, encodedSchema, allFiles, generation)
+    val byStats = FileStatsIndex.prunedFiles(itemPath, preds, encodedSchema,
+      allFiles, generation)
     val bloomCandidates: () => Seq[String] =
       () => byStats.getOrElse(allFiles())
     val byBloom =
-      BloomIndex.prunedFiles(itemPath, preds, meta, encodedSchema,
-        bloomCandidates, generation)
+      BloomIndex.prunedFiles(itemPath, preds, encodedSchema, bloomCandidates, generation)
     byBloom.orElse(byStats)
   }
 
@@ -109,9 +97,7 @@ private[graft] object SkipIndexes {
     * (period, dir) pair's files keyed the way the index recorded them
     * (`__month=<p>/<name>` — built from the PAIR's period name, because
     * a retained dir's on-disk path no longer carries the prefix) →
-    * absolute path. One definition shared by the V1 (Item) and V2
-    * (GraftScanBuilder) pinned branches so the key scheme can never
-    * drift between them. */
+    * absolute path. */
   private[graft] def pinnedFileMap(keptPairs: Seq[(String, SPath)])
       : Map[String, String] =
     keptPairs.flatMap { case (p, d) =>

@@ -79,7 +79,7 @@ object BloomSidecarScaleProbe {
     def coldProbe(item: SPath, candidates: Seq[String]): (Long, Double, Long, String) = {
       val t0 = System.nanoTime()
       val pruned = BloomIndex.prunedFiles(
-        item, pred, Map.empty, schema, () => candidates, pinnedGen = Some(1L))
+        item, pred, schema, () => candidates, generation = 1L)
       val pruneMs = (System.nanoTime() - t0) / 1000000L
       val (parseMs, parsedBytes) =
         BloomIndex.lastParseCost(item, "k").getOrElse((-1L, -1L))

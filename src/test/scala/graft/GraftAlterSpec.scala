@@ -468,4 +468,100 @@ class GraftAlterSpec extends SparkSpec {
       "the appended row must land through the retry")
     cleanup(c)
   }
+
+  test("analyzeItem's backfill scan holds no lock: a concurrent setItemProperties completes mid-scan") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val c = tempCollection("analyze_unlocked")
+    c.write("item", frame("2024-01-01", 60), monthlyLayout = true) // jan feb
+    val sc = spark.sparkContext
+    val slots = sc.defaultParallelism
+    AnalyzeScanGate.started = new CountDownLatch(slots)
+    AnalyzeScanGate.release = new CountDownLatch(1)
+    val analyzeJobStarted = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "analyze_scan"))
+          analyzeJobStarted.countDown()
+    }
+    sc.addSparkListener(listener)
+    // occupy every task slot, so analyze's scan job, once submitted,
+    // stays in flight until the gate opens
+    val hog = Future(sc.parallelize(1 to slots, slots).foreach { _ =>
+      AnalyzeScanGate.started.countDown()
+      AnalyzeScanGate.release.await()
+    })
+    val analyze = try {
+      assert(AnalyzeScanGate.started.await(60, TimeUnit.SECONDS), "slot hog never ran")
+      val analyze = Future {
+        sc.setJobGroup("analyze_scan", "analyzeItem backfill")
+        try c.analyzeItem("item", Seq("value")) finally sc.clearJobGroup()
+      }
+      assert(analyzeJobStarted.await(60, TimeUnit.SECONDS), "analyze's scan job never started")
+      // the scan job is in flight: the item's other sidecar writers must
+      // not wait for it
+      Await.result(Future(c.setItemProperties("item", Map("owner" -> "ops"))), 30.seconds)
+      analyze
+    } finally {
+      AnalyzeScanGate.release.countDown()
+      sc.removeSparkListener(listener)
+    }
+    assert(Await.result(analyze, 120.seconds) == 2)
+    Await.result(hog, 60.seconds)
+    c.clearMetadataCache()
+    val meta = c.metadata("item")
+    assert(Meta.unjv(meta("owner")) == "ops")
+    assert(Collection.statsColumnsOf(meta) == Seq("value"))
+    assert(Collection.periodStatsOf(meta).keySet == Set("2024-01", "2024-02"))
+    cleanup(c)
+  }
+
+  test("analyzeItem's backfill keeps the stats of a period an append changed during its scan") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val c = tempCollection("analyze_race")
+    c.write("item", frame("2024-01-01", 60), monthlyLayout = true) // values 0..59, jan feb
+    val scanned = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val first = new AtomicBoolean(true)
+    // hold analyze between its backfill scan and its stats merge (the
+    // append's own refresh passes the seam unheld)
+    Collection.commitSeamHook = seam =>
+      if (seam == "stats_scanned:item" && first.getAndSet(false)) {
+        scanned.countDown(); release.await()
+      }
+    val analyze = try {
+      val analyze = Future(c.analyzeItem("item", Seq("value")))
+      assert(scanned.await(60, TimeUnit.SECONDS), "analyze's backfill scan never finished")
+      // february gains a value above every one the scan saw
+      c.append("item", Seq((java.sql.Timestamp.valueOf("2024-02-15 12:00:00"), 1000.0))
+        .toDF("index", "value"))
+      analyze
+    } finally {
+      release.countDown()
+      Collection.commitSeamHook = _ => ()
+    }
+    Await.result(analyze, 120.seconds)
+    c.clearMetadataCache()
+    Collection.periodStatsOf(c.metadata("item")).get("2024-02").flatMap(_.get("value"))
+      .foreach { case (_, mx) => assert(mx.asInstanceOf[Double] >= 1000.0,
+        s"february's stats $mx miss the appended row") }
+    assert(c.item("item", filters = Seq(Filters.Pred("value", ">=", 1000.0))).data.count() == 1,
+      "a stats-pruned read must keep the appended row")
+    cleanup(c)
+  }
+}
+
+/** Task-side gate of the analyzeItem lock test: tasks run in the test
+  * JVM (local mode), so they reach these latches statically. */
+private object AnalyzeScanGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(0)
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
 }

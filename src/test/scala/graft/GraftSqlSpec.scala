@@ -76,6 +76,18 @@ class GraftSqlSpec extends SparkSpec {
     cleanup(c)
   }
 
+  test("an index column that is not a plain identifier still prunes V2 reads") {
+    val c = tempCollection("sql_prune_quoted")
+    c.write("item", frame("2024-01-01", 90).withColumnRenamed("index", "trade day"),
+      indexCols = Seq("trade day"), monthlyLayout = true)
+    // Spark pushes the filter on `trade day` with a backtick-quoted name
+    val march = spark.read.format("graft").load(c.path.resolve("item").toString)
+      .filter(col("trade day") >= lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")))
+    assert(march.count() == 30)
+    assert(v2Scan(march).fileIndex.rootPaths.size == 1)
+    cleanup(c)
+  }
+
   test("_period_stats prune V2 reads on covered non-index columns") {
     val c = tempCollection("sql_stats_prune")
     val df = frame("2024-01-01", 90)

@@ -234,6 +234,8 @@ class ManifestSnapshotSpec extends SparkSpec {
     // nor can any read/maintenance surface resolve an internal pin name
     assert(intercept[GraftError](c.item("it", snapshot = Some("__txn_x")))
       .getMessage.contains("internal pin"))
+    assert(intercept[GraftError](spark.read.format("graft").option("snapshot", "__txn_x")
+      .load(c.path.resolve("it").toString)).getMessage.contains("internal pin"))
     assert(intercept[GraftError](c.deleteSnapshot("__txn_x"))
       .getMessage.contains("internal pin"))
     assert(intercept[GraftError](c.rollbackTo("__txn_x"))

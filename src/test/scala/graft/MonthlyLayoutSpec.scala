@@ -32,6 +32,28 @@ class MonthlyLayoutSpec extends SparkSpec {
       }.toMap
   }
 
+  /** Files the V2 scan of `df` reads — `DataFrame.inputFiles` is empty
+    * for DSv2 relations, so walk the executed plan to the parquet scan. */
+  private def v2InputFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan match {
+        case g: graft.sources.GraftScan => g.parquet.fileIndex.inputFiles.toSeq
+        case other => fail(s"expected a GraftScan, got $other")
+      }
+    }.flatten
+  }
+
+  /** Every file a read opens lies under the item's `period` dir. */
+  private def assertOnlyPeriod(files: Seq[String], period: String): Unit = {
+    assert(files.nonEmpty, "the read must open the matching period's files")
+    val dir = s"/${Collection.MonthCol}=$period/"
+    assert(files.forall(_.contains(dir)), s"expected only $dir files, got:\n${files.mkString("\n")}")
+  }
+
   test("monthly write creates one directory per month; reads are complete") {
     val c = tempCollection("monthly_write")
     c.write("item", frame("2024-01-01", 90, 1.0), monthlyLayout = true)
@@ -49,9 +71,50 @@ class MonthlyLayoutSpec extends SparkSpec {
     val it = c.item("item", filters = Seq(
       Filters.Pred("index", ">=", java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))))
     assert(it.data.count() == 31 + 90 - 31 - 29 - 31) // march days only
-    val plan = it.data.queryExecution.executedPlan.toString
-    // partition filter on __month must appear in the scan
-    assert(plan.contains(Collection.MonthCol), s"expected month pruning in plan:\n$plan")
+    // pruned months are never opened, through either front door
+    assertOnlyPeriod(it.data.inputFiles.toSeq, "2024-03")
+    val v2 = spark.read.format("graft").load(c.path.resolve("item").toString)
+      .filter(col("index") >= lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")))
+    assert(v2.count() == 30)
+    assertOnlyPeriod(v2InputFiles(v2), "2024-03")
+    cleanup(c)
+  }
+
+  test("reads at a period boundary under a session zone other than the layout zone keep every matching row") {
+    import spark.implicits._
+    val c = tempCollection("monthly_zone_boundary")
+    // hourly rows across the feb/mar boundary, laid out monthly in UTC
+    val start = java.time.Instant.parse("2024-02-28T00:00:00Z")
+    c.write("item", (0 until 96).map { h =>
+      (java.sql.Timestamp.from(start.plusSeconds(3600L * h)), h.toDouble)
+    }.toDF("index", "value"), monthlyLayout = true)
+    val itemPath = c.path.resolve("item").toString
+    val prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try {
+      // a Date bound casts at the SESSION zone's midnight (feb 29 15:00
+      // UTC, inside the UTC february period); a Timestamp bound is an
+      // instant at the UTC month start
+      for (bound <- Seq[Any](java.sql.Date.valueOf("2024-03-01"),
+                             java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")))) {
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select("index", "value").collect().map(r => (r.getTimestamp(0), r.getDouble(1))).toSet
+        val want = rows(c.item("item").data.filter(col("index") >= lit(bound)))
+        assert(want.nonEmpty && want.size < 96)
+        val item = c.item("item", filters = Seq(Filters.Pred("index", ">=", bound))).data
+        val viaItem = rows(item)
+        assert(viaItem == want, s"Item read with bound $bound: ${viaItem.size} rows, want ${want.size}")
+        val v2 = spark.read.format("graft").load(itemPath).filter(col("index") >= lit(bound))
+        val viaV2 = rows(v2)
+        assert(viaV2 == want, s"V2 read with bound $bound: ${viaV2.size} rows, want ${want.size}")
+        // an instant bound maps to its period in the layout zone whatever
+        // the session zone, so it still prunes
+        if (bound.isInstanceOf[java.sql.Timestamp]) {
+          assertOnlyPeriod(item.inputFiles.toSeq, "2024-03")
+          assertOnlyPeriod(v2InputFiles(v2), "2024-03")
+        }
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", prior)
     cleanup(c)
   }
 
@@ -123,7 +186,7 @@ class MonthlyLayoutSpec extends SparkSpec {
     val it = c.item("item", filters = Seq(
       Filters.Pred("index", "==", java.sql.Timestamp.valueOf("2024-02-10 00:00:00"))))
     assert(it.data.count() == 1)
-    assert(it.data.queryExecution.executedPlan.toString.contains(Collection.MonthCol))
+    assertOnlyPeriod(it.data.inputFiles.toSeq, "2024-02-10")
     cleanup(c)
   }
 
@@ -566,7 +629,7 @@ class MonthlyLayoutSpec extends SparkSpec {
     c.clearMetadataCache()
     assert(!c.metadata("item").contains("_period_stats"))
     // the refresh read-back re-establishes the full map
-    c.refreshPeriodStats("item", None)
+    c.refreshPeriodStats("item", Seq("value"), None, Meta.read(c.path.resolve("item")))
     c.clearMetadataCache()
     val ps2 = Meta.unjv(c.metadata("item")("_period_stats")).asInstanceOf[Map[String, Any]]
     assert(ps2.keySet == Set("2024-01", "2024-02"), ps2.toString)
