@@ -51,15 +51,22 @@ object DedupIndex {
 
   object MinhashIndex {
     def load(c: graft.store.Collection, name: String): MinhashIndex = {
+      val (numHashes, numBands, shingleK) = shapeOf(c, name)
+      MinhashIndex(c.item(s"${name}__bands").data,
+        c.item(s"${name}__shingles").data, numHashes, numBands, shingleK)
+    }
+
+    /** The persisted LSH shape (numHashes, numBands, shingleK), read
+      * from the shingles item's sidecar alone. */
+    private[DedupIndex] def shapeOf(c: graft.store.Collection,
+                                    name: String): (Int, Int, Int) = {
       val meta = c.metadata(s"${name}__shingles")
       def intOf(key: String): Int = meta.get(key) match {
         case Some(org.json4s.JInt(i)) => i.toInt
         case other => throw new IllegalStateException(
           s"bad $key in minhash index metadata: $other")
       }
-      MinhashIndex(c.item(s"${name}__bands").data,
-        c.item(s"${name}__shingles").data,
-        intOf("minhash_num_hashes"), intOf("minhash_bands"),
+      (intOf("minhash_num_hashes"), intOf("minhash_bands"),
         intOf("minhash_shingle_k"))
     }
   }
@@ -399,15 +406,16 @@ object DedupIndex {
   }
 
   object HammingIndex {
-    def load(c: graft.store.Collection, name: String): HammingIndex = {
-      val meta = c.metadata(s"${name}__hchunks")
-      val radius = meta.get("hamming_radius") match {
+    def load(c: graft.store.Collection, name: String): HammingIndex =
+      HammingIndex(c.item(s"${name}__hchunks").data, radiusOf(c, name))
+
+    /** The persisted radius, read from the chunk item's sidecar alone. */
+    private[DedupIndex] def radiusOf(c: graft.store.Collection, name: String): Int =
+      c.metadata(s"${name}__hchunks").get("hamming_radius") match {
         case Some(org.json4s.JInt(i)) => i.toInt
         case other => throw new IllegalStateException(
           s"bad hamming_radius in hamming index metadata: $other")
       }
-      HammingIndex(c.item(s"${name}__hchunks").data, radius)
-    }
   }
 
   def buildAndSaveHammingIndex(hashes: DataFrame,
@@ -470,36 +478,37 @@ object DedupIndex {
     cross.unionByName(self)
   }
 
-  /** Incrementally index new signatures — O(new): their chunk rows
-    * APPEND to the persisted item (KeepAll; ids are new by caller
-    * contract). Typical media ingest loop: fingerprint the batch →
-    * probe → drop matched → append survivors. */
+  /** Incrementally index new signatures: their chunk rows APPEND to
+    * the persisted item (KeepAll; ids are new by caller contract) —
+    * one flat append, which rewrites the item in one staging job.
+    * Typical media ingest loop: fingerprint the batch → probe → drop
+    * matched → append survivors. */
   def appendToHammingIndex(newHashes: DataFrame,
                            c: graft.store.Collection,
                            name: String,
                            idCol: String = "id",
                            hashCol: String = "h"): HammingIndex = {
-    val idx = HammingIndex.load(c, name)
     c.append(s"${name}__hchunks",
-      Dedup.hammingChunked(newHashes, idx.radius + 1, idCol, hashCol),
+      Dedup.hammingChunked(newHashes, HammingIndex.radiusOf(c, name) + 1, idCol, hashCol),
       graft.store.DuplicateHandling.KeepAll)
     HammingIndex.load(c, name)
   }
 
-  /** Incrementally index new documents — O(new docs): their band rows
-    * and shingle sets APPEND to the persisted items (KeepAll: ids are
-    * new by caller contract, exactly like FAISS add / BM25 append).
-    * Existing index bytes are untouched. Typical ingest loop:
-    * probe → drop matched batch docs → append survivors. */
+  /** Incrementally index new documents: their band rows and shingle
+    * sets APPEND to the persisted items (KeepAll: ids are new by caller
+    * contract, exactly like FAISS add / BM25 append). Each is one flat
+    * append, which rewrites its item in one staging job; the LSH shape
+    * comes from the shingles sidecar. Typical ingest loop: probe →
+    * drop matched batch docs → append survivors. */
   def appendToMinhashIndex(newDocs: DataFrame,
                            c: graft.store.Collection,
                            name: String,
                            textCol: String = "text",
                            idCol: String = "doc_id"): MinhashIndex = {
-    val idx = MinhashIndex.load(c, name)
-    val sh = shingleFrame(newDocs, idx.shingleK, textCol, idCol)
+    val (numHashes, numBands, shingleK) = MinhashIndex.shapeOf(c, name)
+    val sh = shingleFrame(newDocs, shingleK, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    c.append(s"${name}__bands", bandFrame(sh, idx.numHashes, idx.numBands),
+    c.append(s"${name}__bands", bandFrame(sh, numHashes, numBands),
       graft.store.DuplicateHandling.KeepAll)
     c.append(s"${name}__shingles", sh, graft.store.DuplicateHandling.KeepAll)
     sh.unpersist(blocking = false)

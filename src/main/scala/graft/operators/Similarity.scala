@@ -344,11 +344,11 @@ object Similarity {
   /** Incrementally add vectors to a PERSISTED IVF index — the FAISS
     * `add()` contract: the coarse quantizer stays FROZEN, new vectors
     * are assigned to their nearest existing centroid and APPENDED to
-    * the cid-indexed assignment item. Cost is O(new vectors),
-    * independent of index size — the only maintenance shape that holds
-    * at 100 TB (a quantizer refit is an offline rebuild, not an
-    * append). Caller contract: ids are new (appending an existing id
-    * creates a duplicate, exactly like FAISS add). */
+    * the cid-indexed assignment item (a quantizer refit is an offline
+    * rebuild, not an append). The assignment never touches the stored
+    * vectors, but the append is a flat one: it rewrites the assignment
+    * item in one staging job. Caller contract: ids are new (appending
+    * an existing id creates a duplicate, exactly like FAISS add). */
   def appendToIvfIndex(newVectors: DataFrame,
                        c: graft.store.Collection,
                        name: String,

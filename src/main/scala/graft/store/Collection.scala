@@ -94,6 +94,7 @@ object Collection {
     * item's recorded layout uses). */
   val MonthCol = "__month"
   private val TmpPrefix = "__tmp_"
+  private val SaltCol = "__salt"
 
   /** Sidecar key remembering column NAMES removed by the metadata-only
     * [[Collection.dropColumns]] mask. Graft maps columns by name (no
@@ -1080,24 +1081,12 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val laidOut0 =
       if (isTime) withTimeLayout(encoded, indexCols, monthlySalt, layoutName)
       else Partitioner.layout(encoded, indexCols, n, plan.flatMap(_.cuts))
-    val obs = if (preStats.isEmpty)
-      Some(new org.apache.spark.sql.Observation()) else None
-    val temporal = Partitioner.isTemporal(encoded, indexCols.head)
-    val laidOut = obs.fold(laidOut0) { o =>
-      if (temporal)
-        laidOut0.observe(o, count(lit(1)).as("r"),
-          min(col(indexCols.head)).as("mn"), max(col(indexCols.head)).as("mx"))
-      else laidOut0.observe(o, count(lit(1)).as("r"))
+    val (laidOut, observed) = preStats match {
+      case Some(s) => (laidOut0, () => s)
+      case None    => observeStats(laidOut0, indexCols.head)
     }
     // evaluated by publish() AFTER the parquet job ran (meta is by-name)
-    def stats: Partitioner.IndexStats = preStats.getOrElse {
-      val row = obs.get.get
-      val r = row("r").asInstanceOf[Long]
-      def ms(k: String): Option[Long] =
-        row.get(k).filter(_ != null).map(Partitioner.toEpochMs)
-      if (temporal) Partitioner.IndexStats(r, ms("mn"), ms("mx"))
-      else Partitioner.IndexStats(r, None, None)
-    }
+    def stats: Partitioner.IndexStats = observed()
 
     def extra = Meta.obj(
       "index_names" -> indexCols,
@@ -1294,6 +1283,27 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     Partitioner.layout(df, idx, n, cuts)
   }
 
+  /** `df` with its row count (and, for a temporal index, the index
+    * min/max) observed by whichever job runs it: the stats
+    * [[Partitioner.computeStats]] gives, without a job of their own.
+    * The returned thunk blocks until that job has finished. */
+  private def observeStats(df: DataFrame, indexCol: String)
+      : (DataFrame, () => Partitioner.IndexStats) = {
+    val o = new org.apache.spark.sql.Observation()
+    val temporal = Partitioner.isTemporal(df, indexCol)
+    val observed =
+      if (temporal) df.observe(o, count(lit(1)).as("r"),
+        min(col(indexCol)).as("mn"), max(col(indexCol)).as("mx"))
+      else df.observe(o, count(lit(1)).as("r"))
+    (observed, () => {
+      val row = o.get
+      def ms(k: String): Option[Long] =
+        if (!temporal) None
+        else row.get(k).filter(_ != null).map(Partitioner.toEpochMs)
+      Partitioner.IndexStats(row("r").asInstanceOf[Long], ms("mn"), ms("mx"))
+    })
+  }
+
   private def statsMeta(s: Partitioner.IndexStats): Map[String, JValue] =
     Meta.obj("_rows" -> s.rows) ++
       s.minMs.map(v => Meta.obj("_index_min_ms" -> v)).getOrElse(Map.empty) ++
@@ -1323,19 +1333,32 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * by `salt` parallel tasks as `salt` files (each still sorted; the
     * trade is write parallelism + bounded file size for file-level
     * range disjointness inside that period). The salt is recorded in
-    * the sidecar so appends reuse it. */
+    * the sidecar so appends reuse it.
+    *
+    * `dedupRows` collapses identical full rows (the append's D1)
+    * between the exchange and the sort, as [[Partitioner.layout]]
+    * does: identical rows share their period and salt, both clustering
+    * keys are columns the dedup groups on (the salt kept as one through
+    * the dedup and dropped after it), so the plan shuffles once. */
   private def withTimeLayout(df: DataFrame, indexCols: Seq[String],
-                             salt: Int, layout: String): DataFrame = {
+                             salt: Int, layout: String,
+                             dedupRows: Boolean = false): DataFrame = {
     val withPeriod = df.withColumn(MonthCol,
       Collection.periodExpr(layout, col(indexCols.head)))
     val clustered =
-      if (salt <= 1) withPeriod.repartition(col(MonthCol))
-      // explicit partition count: REPARTITION_BY_NUM is exempt from AQE
-      // coalescing, so the salt fan-out survives even when the salted
-      // partitions are small
-      else withPeriod.repartition(
-        math.max(salt, spark.sessionState.conf.numShufflePartitions),
-        col(MonthCol), pmod(xxhash64(col(indexCols.head)), lit(salt.toLong)))
+      if (salt <= 1) {
+        val byPeriod = withPeriod.repartition(col(MonthCol))
+        if (dedupRows) byPeriod.dropDuplicates() else byPeriod
+      } else {
+        // explicit partition count: REPARTITION_BY_NUM is exempt from AQE
+        // coalescing, so the salt fan-out survives even when the salted
+        // partitions are small
+        val n = math.max(salt, spark.sessionState.conf.numShufflePartitions)
+        val saltExpr = pmod(xxhash64(col(indexCols.head)), lit(salt.toLong))
+        if (!dedupRows) withPeriod.repartition(n, col(MonthCol), saltExpr)
+        else withPeriod.withColumn(SaltCol, saltExpr)
+          .repartition(n, col(MonthCol), col(SaltCol)).dropDuplicates().drop(SaltCol)
+      }
     clustered.sortWithinPartitions((MonthCol +: indexCols).map(col): _*)
   }
 
@@ -1693,9 +1716,20 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * index anti-join dedup per strategy → union → full-row dedup (D1) →
     * repartition → atomic swap.
     *
-    * Shuffle budget: one anti-join on the index (broadcast when the new
-    * batch is small — Catalyst/AQE decides from sizes), one range
-    * repartition. The union itself is shuffle-free.
+    * Query budget of a flat append: the staging job is the only query
+    * a one-file layout runs. It also observes the batch's row count
+    * (the sidecar's `_rows`, and the empty-batch no-op: an empty batch
+    * deletes its staging dir and commits nothing). A temporal index
+    * adds one batch-only stats scan, since the time-based layout
+    * decision needs the batch span first; a multi-file layout adds one
+    * narrow (item ∪ batch) index scan for its bounds
+    * ([[Partitioner.planAppend]]). Shuffle budget: the layout exchange,
+    * which clusters on the index, so D1 dedups behind it without a
+    * shuffle of its own ([[Partitioner.layout]]), plus, under
+    * KeepFirst/KeepLast, the anti-join on the index (broadcast when the
+    * batch is small: Catalyst/AQE decides from sizes). The union
+    * itself is shuffle-free. Time-layout items take the incremental
+    * [[appendPeriodic]] path.
     *
     * `extraMeta` rides the append's OWN atomic sidecar commit — keys a
     * caller needs recorded if-and-only-if the data landed (the streaming
@@ -1703,9 +1737,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * would leave a crash window where the data committed but the mark
     * didn't (re-applying one batch — duplicating rows under `keep_all`)
     * and would race a concurrent writer's commit; in-commit, neither
-    * can happen. (An EMPTY batch returns before committing, so its
-    * extraMeta is NOT recorded — correct for idempotency marks: the
-    * replay of a no-op is a no-op.) */
+    * can happen. (An EMPTY batch commits nothing, so its extraMeta is
+    * NOT recorded — correct for idempotency marks: the replay of a
+    * no-op is a no-op.) */
   def append(item: String,
              df: DataFrame,
              duplicateHandling: DuplicateHandling = DuplicateHandling.KeepLast,
@@ -1731,7 +1765,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     Collection.requireWritableItemName(item)
     if (!hasItem(item))
       throw new ItemNotFoundError(s"item '$item' does not exist; write it first")
-    if (df.isEmpty) return // reference: empty append is a no-op (test_append.py)
+    // schema evolution would rewrite the item's shape even for an empty
+    // batch, so it keeps its up-front probe
+    if (evolution.isDefined && df.isEmpty) return
 
     // The fence base: the committed generation as of THIS read-modify-
     // write's read. A fresh sidecar read (not the TTL cache) — a stale
@@ -1767,48 +1803,75 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         val (d, changed) = SchemaEvolution.evolveForAppend(old.schema, newDf, strategy)
         newDf = d; evolved = changed
       case None =>
-        if (validateSchema && old.columns.toSet != newDf.columns.toSet)
+        // An empty batch is a no-op whatever its shape (reference
+        // tests/test_append.py); a batch that passes this check learns
+        // its emptiness from the staging job, so only a mismatch pays a
+        // job to tell "empty" from "refused".
+        val mismatch = old.columns.toSet != newDf.columns.toSet
+        if (mismatch && df.isEmpty) return
+        if (mismatch && validateSchema)
           throw new SchemaValidationError(
             s"schema mismatch: existing ${old.columns.sorted.mkString(",")} vs " +
             s"new ${newDf.columns.sorted.mkString(",")}")
     }
 
+    val temporal = Partitioner.isTemporal(newDf, idx.head)
+    // A time-based layout decision needs the batch's span before the
+    // layout: one batch-only scan. Every other append observes the
+    // batch stats on the one branch of the combined plan that carries
+    // each raw batch row exactly once, during the staging job.
+    val preStats =
+      if (temporal && npartitions.isEmpty) Some(Partitioner.computeStats(newDf, idx.head))
+      else None
+    if (preStats.exists(_.rows == 0)) return
+    val (carried, batchStats) = preStats match {
+      case Some(s) => (newDf, () => s)
+      // the stored frame leads every combined plan, so the staging job
+      // runs in this collection's session even for a batch of another
+      // (a streaming micro-batch): observe the batch as a frame of it
+      case None    =>
+        observeStats(org.apache.spark.sql.GraftSessionBridge.inSession(spark, newDf), idx.head)
+    }
+
     // Schema evolution bypasses duplicate filtering — the reference's
     // subtle control flow at collection.py:508-513 (SURVEY §7.4.6).
     val combined: DataFrame =
-      if (evolved) old.unionByName(newDf, allowMissingColumns = true)
-      else combineOnIndex(item, old, newDf, idx, duplicateHandling)
+      if (evolved) old.unionByName(carried, allowMissingColumns = true)
+      else combineOnIndex(item, old, newDf, carried, idx, duplicateHandling)
 
+    // Layout decision WITHOUT executing the combined plan: Catalyst's
+    // size estimate, plus, for a temporal index, the stored item stats
+    // (sidecar) merged with the batch's. A non-temporal index always
+    // lays out by size. Bounds for a multi-file layout come from one
+    // narrow (item ∪ batch) index scan; the sampled range exchange
+    // would re-execute the combined dedup plan to learn them (guide
+    // §1.4).
+    val prevStats = readStatsMeta(item).getOrElse(
+      Partitioner.computeStats(old, idx.head))
+    val (n, strategy) = npartitions match {
+      case Some(k) => (k, Partitioner.SizeBased)
+      case None    => Partitioner.decide(Partitioner.estimatedBytes(combined),
+        preStats.fold(Partitioner.IndexStats(0, None, None))(prevStats.merge))
+    }
+    val cuts =
+      if (monthly || idx.size != 1 || n <= 1 || n > Partitioner.MaxBoundsPartitions) None
+      else Partitioner.planAppend(old, newDf, idx.head)
     // D1 (reference collection.py:520): identical FULL rows collapse;
     // same-index-different-value rows survive (regression
     // tests/test_append.py:218-234).
-    val deduped = combined.dropDuplicates()
-
-    // Layout decision WITHOUT executing the combined plan: stored item
-    // stats (sidecar) merged with a cheap input-only scan of the batch.
-    // Row count is an upper bound (dedup only shrinks) — fine for a
-    // partition-count estimate; the real plan executes exactly once,
-    // inside stage(). For flat items the SAME narrow scan (item ∪
-    // batch index values) also collects the quantile cuts the
-    // bounds-path exchange needs — the sampled range exchange would
-    // otherwise re-execute the combined dedup plan just to learn its
-    // boundaries (guide §1.4).
-    val prevStats = readStatsMeta(item).getOrElse(
-      Partitioner.computeStats(old, idx.head))
-    val appendPlan: Partitioner.FlatPlan =
-      if (monthly || idx.size != 1) Partitioner.FlatPlan(
-        Partitioner.computeStats(newDf, idx.head), None)
-      else Partitioner.planAppend(old, newDf, idx.head)
-    val stats = prevStats.merge(appendPlan.stats)
-    val (n, strategy) = npartitions match {
-      case Some(k) => (k, Partitioner.SizeBased)
-      case None    => Partitioner.decide(Partitioner.estimatedBytes(deduped), stats)
-    }
     val laidOut =
-      if (monthly) withTimeLayout(deduped, idx, monthlySaltOf(item), timeLayout.get)
-      else Partitioner.layout(deduped, idx, n, appendPlan.cuts)
+      if (monthly)
+        withTimeLayout(combined, idx, monthlySaltOf(item), timeLayout.get, dedupRows = true)
+      else Partitioner.layout(combined, idx, n, cuts, dedupRows = true)
 
     val storedMeta = Meta.read(path.resolve(item))
+    val staged = stage(item, laidOut, monthly)
+    val batch = batchStats()
+    if (batch.rows == 0) { // an empty batch commits nothing
+      staged.deleteRecursively()
+      return
+    }
+    val stats = prevStats.merge(batch)
     val prevMeta = storedMeta ++
       Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name) ++
       statsMeta(stats) ++
@@ -1823,34 +1886,40 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       // fallback) would miss the evolved columns
       (if (!evolved) Map.empty
        else Meta.obj(
-         "schema_json_encoded" -> deduped.schema.json,
+         "schema_json_encoded" -> combined.schema.json,
          "schema_json" -> Collection.evolveLogicalSchema(
-           storedMeta, deduped.schema).json)) ++
+           storedMeta, combined.schema).json)) ++
       extraMeta ++ Collection.opTag("append")
-    publish(item, stage(item, laidOut, monthly), Full(monthly), prevMeta,
+    publish(item, staged, Full(monthly), prevMeta,
       expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
     } finally releaseIndex()
   }
 
   /** The stored rows `old` combined with an append batch under its
     * duplicate-index strategy (the index-collision half of the
-    * append's dedup; full-row dedup D1 follows in the caller). */
+    * append's dedup; full-row dedup D1 follows in the layout). `batch`
+    * serves the index lookups; `carried` is the same batch as it
+    * enters the result, on exactly one branch, so an observation on it
+    * counts every raw batch row once. */
   private def combineOnIndex(item: String, old: DataFrame, batch: DataFrame,
-                             idx: Seq[String], how: DuplicateHandling): DataFrame =
+                             carried: DataFrame, idx: Seq[String],
+                             how: DuplicateHandling): DataFrame =
     how match {
-      case DuplicateHandling.KeepAll => old.unionByName(batch)
+      case DuplicateHandling.KeepAll => old.unionByName(carried)
+      // An anti-join keeps a row iff its key has no match, so its key
+      // side needs no `distinct` (which would cost a shuffle of its own).
       case DuplicateHandling.KeepFirst =>
         // old wins: drop incoming rows whose index already exists (J1)
-        old.unionByName(batch.join(old.select(idx.map(col): _*).distinct(), idx, "left_anti"))
+        old.unionByName(carried.join(old.select(idx.map(col): _*), idx, "left_anti"))
       case DuplicateHandling.KeepLast =>
         // new wins: drop existing rows whose index appears in the batch
-        old.join(batch.select(idx.map(col): _*).distinct(), idx, "left_anti")
-          .unionByName(batch)
+        old.join(batch.select(idx.map(col): _*), idx, "left_anti")
+          .unionByName(carried)
       case DuplicateHandling.ErrorOnDuplicate =>
         if (old.join(batch, idx, "left_semi").limit(1).count() > 0)
           throw new DataIntegrityError(
             s"append to '$item' has duplicate index values (strategy=error)")
-        old.unionByName(batch)
+        old.unionByName(carried)
     }
 
   /** Incremental append for time-layout items: the stored side is
@@ -1869,22 +1938,29 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val existing = this.item(item)
     val idx = existing.indexCols
     val newDf = df
-    // period keys come from date_format in the CURRENT session tz; the
+    // An empty batch is a no-op whatever its shape or zone (reference
+    // tests/test_append.py): a batch that passes both checks below
+    // learns its emptiness from the period aggregate, so only a refusal
+    // pays a job to tell "empty" from "refused".
+    // Period keys come from date_format in the CURRENT session tz; the
     // stored dirs were keyed in the writer's recorded tz — a silent
     // mismatch would write a boundary row into a different period dir
-    // than pruning later looks in
+    // than pruning later looks in.
     val sessionTz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    existing.metadata.get("_layout_tz").map(j => Meta.unjv(j).toString)
-      .filter(_ != sessionTz).foreach { recorded =>
-        throw new ValidationError(
-          s"item '$item' was laid out in timezone '$recorded' but this " +
-          s"session runs '$sessionTz'; set spark.sql.session.timeZone to " +
-          "match before appending to a time-layout item")
-      }
-
-    if (validateSchema && existing.data.columns.toSet != newDf.columns.toSet)
+    val tzClash = existing.metadata.get("_layout_tz")
+      .map(j => Meta.unjv(j).toString).filter(_ != sessionTz)
+    val stored = existing.data.columns
+    val mismatch = stored.toSet != newDf.columns.toSet
+    if ((tzClash.isDefined || mismatch) && newDf.isEmpty) return
+    tzClash.foreach { recorded =>
+      throw new ValidationError(
+        s"item '$item' was laid out in timezone '$recorded' but this " +
+        s"session runs '$sessionTz'; set spark.sql.session.timeZone to " +
+        "match before appending to a time-layout item")
+    }
+    if (mismatch && validateSchema)
       throw new SchemaValidationError(
-        s"schema mismatch: existing ${existing.data.columns.sorted.mkString(",")} vs " +
+        s"schema mismatch: existing ${stored.sorted.mkString(",")} vs " +
         s"new ${newDf.columns.sorted.mkString(",")}")
 
     // ONE batch scan serves both the touched-period list and the batch
@@ -1897,6 +1973,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       .agg(count(lit(1)).as("c"), min(col(idx.head)).as("mn"),
         max(col(idx.head)).as("mx"))
       .collect()
+    if (monthRows.isEmpty) return // an empty batch touches no period
     val months = monthRows.map(_.getString(0)).toSeq.sorted
     val batchStats = Partitioner.IndexStats(
       monthRows.map(_.getLong(1)).sum,
@@ -1910,7 +1987,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       .drop(MonthCol)
       .select(newDf.columns.map(col): _*)
 
-    val combined = combineOnIndex(item, oldTouched, newDf, idx, duplicateHandling)
+    val combined = combineOnIndex(item, oldTouched, newDf, newDf, idx, duplicateHandling)
 
     val prevStats = readStatsMeta(item).getOrElse(
       Partitioner.computeStats(existing.data, idx.head))
@@ -1918,8 +1995,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val storedMeta = Meta.read(path.resolve(item))
     val prevMeta = storedMeta ++ statsMeta(stats) ++ extraMeta ++
       Collection.opTag("append")
-    publish(item, stage(item, withTimeLayout(combined.dropDuplicates(), idx,
-        monthlySaltOf(item), layout), partitioned = true),
+    publish(item, stage(item, withTimeLayout(combined, idx,
+        monthlySaltOf(item), layout, dedupRows = true), partitioned = true),
       Periods(months), prevMeta, expectedGen = Some(baseGen),
       expectedMeta = Some(storedMeta))
   }

@@ -130,12 +130,8 @@ object Partitioner {
   /** Apply a chosen layout: range-partition on the index and sort
     * within partitions so the on-disk files are globally index-ordered.
     */
-  def apply(df: DataFrame, indexCols: Seq[String], n: Int): DataFrame = {
-    val sortable = indexCols.filter(c => df.columns.contains(c))
-    if (sortable.isEmpty) df.repartition(n)
-    else df.repartitionByRange(n, sortable.map(F.col): _*)
-      .sortWithinPartitions(sortable.map(F.col): _*)
-  }
+  def apply(df: DataFrame, indexCols: Seq[String], n: Int): DataFrame =
+    layout(df, indexCols, n, None)
 
   // ------------------------------------------------ bounds-path layout
   // `repartitionByRange` learns its boundaries by SAMPLING: an extra
@@ -200,33 +196,18 @@ object Partitioner {
       }
   }
 
-  /** Append planning in ONE narrow job over (item ∪ batch) index
-    * values: the BATCH-only stats (count, min/max — value-identical to
-    * the old separate computeStats(batch) scan) via conditional
-    * aggregates, plus quantile cuts over the UNION — an upper-bound
-    * distribution of the combined dedup plan's output (dedup only
-    * removes rows), balanced enough for bounds and far cheaper than
-    * the sampling pass, which re-executes the dedup plan itself. */
-  def planAppend(old: DataFrame, batch: DataFrame, indexCol: String): FlatPlan = {
-    val u = old.select(F.col(indexCol).as("__k"), F.lit(false).as("__b"))
-      .unionByName(batch.select(F.col(indexCol).as("__k"), F.lit(true).as("__b")))
-    sortKeyExpr(u, "__k") match {
-      case None => FlatPlan(computeStats(batch, indexCol), None)
-      case Some(k) =>
-        val pa = F.percentile_approx(k, cutPercentages, F.lit(BoundsAccuracy))
-        val nBatch = F.coalesce(
-          F.sum(F.when(F.col("__b"), 1L).otherwise(0L)), F.lit(0L))
-        val batchK = F.when(F.col("__b"), F.col("__k"))
-        if (!isTemporal(batch, indexCol)) {
-          val row = u.agg(nBatch, pa).head()
-          FlatPlan(IndexStats(row.getLong(0), None, None), cutsOf(row, 1))
-        } else {
-          val row = u.agg(nBatch, F.min(batchK), F.max(batchK), pa).head()
-          val lo = if (row.isNullAt(1)) None else Some(toEpochMs(row.get(1)))
-          val hi = if (row.isNullAt(2)) None else Some(toEpochMs(row.get(2)))
-          FlatPlan(IndexStats(row.getLong(0), lo, hi), cutsOf(row, 3))
-        }
-    }
+  /** Quantile cuts for an append's bounds-path layout, from ONE narrow
+    * scan of (item ∪ batch) index values: an upper-bound distribution
+    * of the combined dedup plan's output (dedup only removes rows),
+    * balanced enough for bounds and far cheaper than the sampling pass,
+    * which re-executes the dedup plan itself. An append runs it only
+    * when the cuts are used (1 < n ≤ [[MaxBoundsPartitions]]); the
+    * batch stats come from its staging job, or from a batch-only
+    * [[computeStats]] when a time-based decision needs the span first.
+    * None = an index dtype [[sortKeyExpr]] cannot lift. */
+  def planAppend(old: DataFrame, batch: DataFrame, indexCol: String): Option[Seq[Long]] = {
+    val u = old.select(indexCol).unionByName(batch.select(indexCol))
+    sortKeyExpr(u, indexCol).flatMap(k => planFlat(u, indexCol, Some(k)).cuts)
   }
 
   private def cutPercentages =
@@ -266,19 +247,28 @@ object Partitioner {
   }
 
   /** Flat layout via driver-held bounds when available (from
-    * [[planFlat]]/[[planAppend]]); the sampled [[apply]] otherwise.
+    * [[planFlat]]/[[planAppend]]); the sampled range exchange otherwise.
     * Bucket assignment `count(bounds < key)` is RangePartitioner's
     * exact rule (nulls → bucket 0, boundary ties go left), so files
-    * stay sorted with disjoint index ranges — the D3 invariant. */
+    * stay sorted with disjoint index ranges — the D3 invariant.
+    *
+    * `dedupRows` collapses identical full rows (the append's D1)
+    * between the exchange and the sort. Every exchange here clusters
+    * on the index (a range partitioning, a single partition, or the
+    * bounds carrier — kept as a column through the dedup and dropped
+    * after it) and identical rows share their index, so the dedup's
+    * clustering is already met and the plan shuffles once. */
   def layout(df: DataFrame, indexCols: Seq[String], n: Int,
-             cuts: Option[Seq[Long]]): DataFrame = {
+             cuts: Option[Seq[Long]], dedupRows: Boolean = false): DataFrame = {
+    def dedup(d: DataFrame) = if (dedupRows) d.dropDuplicates() else d
     val sortable = indexCols.filter(c => df.columns.contains(c))
+    if (sortable.isEmpty) return dedup(df).repartition(n)
     val keyOpt =
       if (sortable.size == 1 && n > 1 && n <= MaxBoundsPartitions)
         cuts.filter(_.nonEmpty).flatMap(_ => sortKeyExpr(df, sortable.head))
       else None
-    keyOpt match {
-      case None => apply(df, indexCols, n)
+    val clustered = keyOpt match {
+      case None => dedup(df.repartitionByRange(n, sortable.map(F.col): _*))
       case Some(k) =>
         val bounds = boundsFromCuts(cuts.get, n)
         val b = bounds.size + 1
@@ -296,8 +286,12 @@ object Partitioner {
               val branch = F.lit(carriers(i))
               Some(acc.fold(F.when(cond, branch))(_.when(cond, branch)))
           }.get.otherwise(F.lit(carriers(b - 1)))
-        df.repartition(b, carrier)
-          .sortWithinPartitions(sortable.map(F.col): _*)
+        if (!dedupRows) df.repartition(b, carrier)
+        else df.withColumn(CarrierCol, carrier).repartition(b, F.col(CarrierCol))
+          .dropDuplicates().drop(CarrierCol)
     }
+    clustered.sortWithinPartitions(sortable.map(F.col): _*)
   }
+
+  private val CarrierCol = "__carrier"
 }
