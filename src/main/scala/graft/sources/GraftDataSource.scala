@@ -330,9 +330,10 @@ final class GraftTable private[sources] (
   /** `DELETE FROM` → [[graft.store.Collection.deleteWhere]] — the
     * right-to-be-forgotten primitive, now reachable from SQL. The
     * pushed filters translate to one `Column` predicate and ride the
-    * SAME pruned path the Scala API uses: period discovery narrows to
-    * the periods the predicate can touch (index interval + per-period
-    * stats on covered columns), only those period dirs rewrite through
+    * SAME pruned path the Scala API uses: discovery reads only the
+    * roots the read planner keeps (periods by index interval and
+    * per-period stats, part files by the skip indexes), only the
+    * touched period dirs rewrite through
     * atomic partial commits, and an emptied period is removed outright.
     * Cost scales with touched periods, not item size — a one-month
     * GDPR wipe of a 100 TB item rewrites one month.
@@ -497,7 +498,7 @@ final class GraftScanBuilder(
     // NOT forwarded to parquet — the COW write must see every row of an
     // affected period, so row-group skipping on the condition would
     // silently drop the innocent rows that need copying.
-    preds = GraftScanBuilder.predsOf(filters)
+    preds = ReadRoots.predsOf(filters)
     pushed = if (rowLevel.isDefined) Array.empty else filters.filter(parquetSupported)
     filters
   }
@@ -624,34 +625,6 @@ final class GraftScanBuilder(
 }
 
 object GraftScanBuilder {
-  /** Pushed source filters as conjunctive planner predicates: the
-    * comparison, bounded-IN and null-probe shapes the period walker and
-    * the skip indexes bound. Anything else contributes no constraint —
-    * pruning only ever over-approximates. `a <=> v` with a non-null `v`
-    * selects exactly the rows `a = v` does. Attribute names arrive
-    * quoted when they are not plain identifiers (`` `my col` ``); a
-    * top-level one is unquoted to the stored column name. */
-  private[sources] def predsOf(filters: Array[Filter]): Seq[Filters.Pred] = {
-    def pred(a: String, op: String, v: Any) = Seq(Filters.Pred(
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.parseAttributeName(a) match {
-        case Seq(name) => name
-        case _         => a
-      }, op, v))
-    filters.toSeq.flatMap {
-      case sources.And(l, r) => predsOf(Array(l, r))
-      case sources.EqualTo(a, v) if v != null            => pred(a, "==", v)
-      case sources.EqualNullSafe(a, v) if v != null      => pred(a, "==", v)
-      case sources.GreaterThan(a, v) if v != null        => pred(a, ">", v)
-      case sources.GreaterThanOrEqual(a, v) if v != null => pred(a, ">=", v)
-      case sources.LessThan(a, v) if v != null           => pred(a, "<", v)
-      case sources.LessThanOrEqual(a, v) if v != null    => pred(a, "<=", v)
-      case sources.In(a, vs) if vs.nonEmpty && !vs.contains(null) => pred(a, "in", vs.toSeq)
-      case sources.IsNull(a)    => pred(a, "isnull", null)
-      case sources.IsNotNull(a) => pred(a, "notnull", null)
-      case _ => Nil
-    }
-  }
-
   /** Test seam: counts constructions of the aggregate-pushdown parquet
     * delegate (each one is a full recursive root listing). Lets specs
     * assert the conf gate keeps the listing from happening at all when

@@ -93,7 +93,7 @@ final class GraftScan private[sources] (
   override def filter(filters: Array[Filter]): Unit = {
     if (filters.nonEmpty) {
       val kept = ReadRoots.scanRoots(builder.spark, builder.target, builder.preds,
-        Some(builder.tableSchema), GraftScanBuilder.predsOf(filters))
+        Some(builder.tableSchema), ReadRoots.predsOf(filters))
       if (kept != staticRoots) {
         inner = builder.parquetScanOver(kept)
         runtimePruned = Some(kept.size)
@@ -163,7 +163,7 @@ final class GraftCowScan private[sources] (
   override def filter(filters: Array[Filter]): Unit = {
     if (filters.nonEmpty && initialKept.isDefined) {
       val kept = ReadRoots.keptPeriods(builder.spark, builder.target,
-        builder.preds ++ GraftScanBuilder.predsOf(filters))
+        builder.preds ++ ReadRoots.predsOf(filters))
       // scan and replaced-group set move together, atomically from the
       // write's perspective (commit reads scanInfo after execution)
       rl.recordScan(kept)

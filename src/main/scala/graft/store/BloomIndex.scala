@@ -855,60 +855,6 @@ object BloomIndex {
           "the `$bloom` table (last_parse_ms) to monitor")
   }
 
-  /** Period-granularity pruning for [[Collection.deleteWhere]]'s
-    * discovery scan, from the ANALYZED Catalyst condition: returns
-    * `Some(periods that might hold a matching row)` when at least one
-    * top-level conjunct is an equality / bounded-IN between a column
-    * carrying an exactly-current index and an un-cast same-type
-    * literal; `None` leaves discovery's own pruning untouched. A
-    * period survives iff SOME of its files might contain every usable
-    * conjunct's value set — no false negatives, so the delete can
-    * only read fewer period dirs, never miss rows. The key-equality
-    * GDPR delete on a 100 TB item narrows its discovery from every
-    * period to the bloom-positive ones. */
-  private[store] def candidateDeletePeriods(
-      itemPath: SPath,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      meta: Map[String, JValue],
-      encodedSchema: StructType,
-      allFiles: () => Seq[String]): Option[Set[String]] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualTo => CEq, Expression, In => CIn, Literal => CLit}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o          => Seq(o)
-    }
-    val eqs: Seq[(String, Seq[CLit])] = conjuncts(cond).collect {
-      case CEq(a: Attribute, l: CLit) if l.value != null => a.name -> Seq(l)
-      case CEq(l: CLit, a: Attribute) if l.value != null => a.name -> Seq(l)
-      case CIn(a: Attribute, vs) if vs.nonEmpty && vs.size <= MaxInValues &&
-          vs.forall { case l: CLit => l.value != null; case _ => false } =>
-        a.name -> vs.map(_.asInstanceOf[CLit])
-    }
-    if (eqs.isEmpty) return None
-    val committedGen = Snapshots.generationOf(meta)
-    val usable: Seq[(Idx, Seq[Long])] = eqs.flatMap {
-      case (c, lits) =>
-        encodedSchema.fields.find(_.name == c).flatMap { f =>
-          // the literal must carry the STORED type un-cast (analysis
-          // wraps mismatches in Cast, which the extractor above already
-          // refuses) — same hash domain as the build, or no pruning
-          if (!lits.forall(_.dataType == f.dataType)) None
-          else openIndex(itemPath, c, committedGen).map { idx =>
-            (idx,
-              lits.map(lit => XxHash64(Seq(lit), 42L).eval(null).asInstanceOf[Long]))
-          }
-        }
-    }
-    if (usable.isEmpty) return None
-    Some(allFiles()
-      .filter(f => usable.forall { case (idx, hs) => idx.fileMightMatch(f, hs) })
-      .flatMap(_.split('/') match {
-        case Array(seg, _) if seg.startsWith(Collection.MonthCol + "=") =>
-          Some(seg.stripPrefix(Collection.MonthCol + "="))
-        case _ => None
-      }).toSet)
-  }
-
   /** xxhash64 of the literal as the BUILD hashed it: the value coerced
     * to the column's stored type, hashed through the same Catalyst
     * expression `functions.xxhash64` plans (seed 42). A value the

@@ -201,86 +201,70 @@ object Collection {
       }
     }
   }
-  /** Periods a delete predicate can possibly touch, from the predicate's
-    * expression tree alone — no data read. Conjunctive range/equality
-    * constraints on the INDEX column map each literal bound to its
-    * period key (period keys are zero-padded and lexically
-    * chronological in every layout, so the key interval is a string
-    * interval); every period outside [max lower, min upper] is pruned.
-    * Disjunctions, negations, non-index references, and computed index
-    * expressions contribute no constraint — the result only ever
-    * over-approximates, never drops a touchable period. */
-  /** `periodStats`: per-period min/max of DECLARED stats columns
+  /** Periods a conjunctive predicate list can possibly touch — no
+    * data read. Range/equality/IN constraints on the INDEX column map
+    * each bound to its period key (period keys are zero-padded and
+    * lexically chronological in every layout, so the key interval is a
+    * string interval); every period outside [max lower, min upper] is
+    * pruned. Bounds arrive as the row filter reads them
+    * ([[ReadRoots.prunePeriods]] maps wall-clock bounds of a timestamp
+    * index first); instants map to keys in `layoutTz`. Any other op,
+    * and any value without a period, contributes no constraint — the
+    * result only ever over-approximates, never drops a touchable
+    * period.
+    *
+    * `periodStats`: per-period min/max of DECLARED stats columns
     * (`_period_stats` sidecar, maintained by the partial-commit paths)
-    * — a period also prunes when a conjunctive range constraint on a
-    * covered NON-index column cannot overlap its recorded interval.
-    * Numeric and temporal columns compare in the Double domain
-    * (temporal = wall-clock epoch micros — the GDPR-shaped date
-    * predicate on a non-index column); string columns compare
-    * lexicographically. A period with no recorded stats for a bounded
-    * column — or a bound whose domain mismatches the recorded one — is
-    * kept (conservative). */
+    * — a period also prunes when a range constraint on a covered
+    * NON-index column cannot overlap its recorded interval. Numeric and
+    * temporal columns compare in the Double domain (temporal =
+    * wall-clock epoch micros — the GDPR-shaped date predicate on a
+    * non-index column); string columns compare lexicographically. A
+    * period with no recorded stats for a bounded column — or a bound
+    * whose domain mismatches the recorded one — is kept
+    * (conservative). */
   private[graft] def candidatePeriods(periods: Seq[String],
-                                      predicate: org.apache.spark.sql.catalyst.expressions.Expression,
+                                      preds: Seq[Filters.Pred],
                                       indexCol: String,
                                       layout: String,
-                                      sessionTz: java.time.ZoneId,
+                                      layoutTz: java.time.ZoneId,
                                       periodStats: Map[String, Map[String, (Any, Any)]] = Map.empty)
       : Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
-
-    def nameOf(e: Expression): Option[String] = e match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def isIdx(e: Expression): Boolean = nameOf(e).exists(_.equalsIgnoreCase(indexCol))
     // `shift` tightens STRICT bounds by one representable unit (±1 µs /
     // ±1 day) before mapping to a period key: `index < '1997-04-01
     // 00:00:00'` admits at most 1997-03-31 23:59:59.999999, so the
     // upper PERIOD bound is 1997-03 — without the shift the empty
     // boundary period survives pruning (conservative but wasteful; the
     // exclusive-midnight cutoff is the common retention/report shape).
-    def keyOf(e: Expression, shift: Int = 0): Option[String] = e match {
-      case Literal(v, dt) if v != null =>
-        val external: Option[Any] = dt match {
-          case TimestampType    => Some(DateTimeUtils.toJavaTimestamp(v.asInstanceOf[Long] + shift))
-          case TimestampNTZType => Some(DateTimeUtils.microsToLocalDateTime(v.asInstanceOf[Long] + shift))
-          case DateType         => Some(DateTimeUtils.daysToLocalDate(v.asInstanceOf[Int] + shift))
-          case _                => None
-        }
-        external.flatMap(periodOfValue(layout, _, sessionTz))
-      case _ => None
-    }
-    // Stats-comparable value of a literal: numerics → Double; temporal
-    // → wall-clock epoch micros as Double (the domain the refresh
-    // writes); strings → String (lexicographic). Instant timestamps use
-    // their UTC micros — tz-consistent with the write side because
-    // stats pruning only runs when session tz == recorded layout tz.
-    def numOf(e: Expression): Option[Any] = e match {
-      case Literal(v, dt) if v != null => dt match {
-        case TimestampType    => Some(v.asInstanceOf[Long].toDouble)
-        case TimestampNTZType => Some(v.asInstanceOf[Long].toDouble)
-        case DateType         => Some(v.asInstanceOf[Int].toDouble * 86400000000.0)
-        case org.apache.spark.sql.types.StringType =>
-          Some(v.toString) // UTF8String → String
-        case _ => v match {
-          case n: Number => Some(n.doubleValue())
-          case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-          case _ => None
-        }
-      }
-      case _ => None
+    def keyOf(v: Any, shift: Int = 0): Option[String] = (v match {
+      case t: java.sql.Timestamp      => Some(t.toInstant.plusNanos(shift * 1000L))
+      case i: java.time.Instant       => Some(i.plusNanos(shift * 1000L))
+      case t: java.time.LocalDateTime => Some(t.plusNanos(shift * 1000L))
+      case d: java.sql.Date           => Some(d.toLocalDate.plusDays(shift))
+      case d: java.time.LocalDate     => Some(d.plusDays(shift))
+      case _                          => None
+    }).flatMap(periodOfValue(layout, _, layoutTz))
+    // Stats-comparable value of a bound: numerics → Double; temporal →
+    // wall-clock epoch micros as Double (the domain the refresh
+    // writes); strings → String (lexicographic). Instants use their UTC
+    // micros — tz-consistent with the write side because stats pruning
+    // only runs when session tz == recorded layout tz.
+    def numOf(v: Any): Option[Any] = v match {
+      case t: java.sql.Timestamp      => Some(DateTimeUtils.fromJavaTimestamp(t).toDouble)
+      case i: java.time.Instant       => Some(DateTimeUtils.instantToMicros(i).toDouble)
+      case t: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(t).toDouble)
+      case d: java.sql.Date           => Some(DateTimeUtils.fromJavaDate(d) * 86400000000.0)
+      case d: java.time.LocalDate     => Some(d.toEpochDay * 86400000000.0)
+      case s: String                  => Some(s)
+      case n: Number                  => Some(n.doubleValue())
+      case _                          => None
     }
     var lows = List.empty[String]
     var highs = List.empty[String]
     // per non-index column: collected lower/upper bounds (Double or String)
     val numLows = scala.collection.mutable.Map.empty[String, Any]
     val numHighs = scala.collection.mutable.Map.empty[String, Any]
-    def statsCol(e: Expression): Option[String] =
-      nameOf(e).filter(n => !n.equalsIgnoreCase(indexCol))
     // bounds of mismatched domains collapse to the unprunable marker
     // (None is not representable here, so keep the TIGHTEST same-domain
     // bound and drop cross-domain collisions conservatively)
@@ -293,65 +277,37 @@ object Collection {
     }
     def low(c: String, v: Any): Unit = numLows(c) = numLows.get(c).fold(v)(tighter(_, v, wantMax = true))
     def high(c: String, v: Any): Unit = numHighs(c) = numHighs.get(c).fold(v)(tighter(_, v, wantMax = false))
-    def walk(e: Expression): Unit = e match {
-      case And(l, r) => walk(l); walk(r)
-      case GreaterThan(a, v) if isIdx(a)         => keyOf(v, +1).foreach(lows ::= _)
-      case GreaterThanOrEqual(a, v) if isIdx(a)  => keyOf(v).foreach(lows ::= _)
-      case LessThan(a, v) if isIdx(a)            => keyOf(v, -1).foreach(highs ::= _)
-      case LessThanOrEqual(a, v) if isIdx(a)     => keyOf(v).foreach(highs ::= _)
-      case EqualTo(a, v) if isIdx(a)             => keyOf(v).foreach(k => { lows ::= k; highs ::= k })
-      case GreaterThan(v, a) if isIdx(a)         => keyOf(v, -1).foreach(highs ::= _)
-      case GreaterThanOrEqual(v, a) if isIdx(a)  => keyOf(v).foreach(highs ::= _)
-      case LessThan(v, a) if isIdx(a)            => keyOf(v, +1).foreach(lows ::= _)
-      case LessThanOrEqual(v, a) if isIdx(a)     => keyOf(v).foreach(lows ::= _)
-      case EqualTo(v, a) if isIdx(a)             => keyOf(v).foreach(k => { lows ::= k; highs ::= k })
-      case GreaterThan(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach(low(statsCol(a).get, _))
-      case GreaterThanOrEqual(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach(low(statsCol(a).get, _))
-      case LessThan(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach(high(statsCol(a).get, _))
-      case LessThanOrEqual(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach(high(statsCol(a).get, _))
-      case EqualTo(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach { x => low(statsCol(a).get, x); high(statsCol(a).get, x) }
-      case GreaterThan(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach(high(statsCol(a).get, _))
-      case GreaterThanOrEqual(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach(high(statsCol(a).get, _))
-      case LessThan(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach(low(statsCol(a).get, _))
-      case LessThanOrEqual(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach(low(statsCol(a).get, _))
-      case EqualTo(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach { x => low(statsCol(a).get, x); high(statsCol(a).get, x) }
-      case EqualNullSafe(a, v) if isIdx(a) =>
-        keyOf(v).foreach(k => { lows ::= k; highs ::= k })
-      case EqualNullSafe(v, a) if isIdx(a) =>
-        keyOf(v).foreach(k => { lows ::= k; highs ::= k })
-      case EqualNullSafe(a, v) if statsCol(a).isDefined =>
-        numOf(v).foreach { x => low(statsCol(a).get, x); high(statsCol(a).get, x) }
-      case EqualNullSafe(v, a) if statsCol(a).isDefined =>
-        numOf(v).foreach { x => low(statsCol(a).get, x); high(statsCol(a).get, x) }
+    preds.foreach { case Filters.Pred(c, op, v) =>
+      val isIdx = c.equalsIgnoreCase(indexCol)
       // IN-lists bound both ends by their extreme members (an index
       // IN-list is the multi-key GDPR purge shape)
-      case In(a, vs) if isIdx(a) && vs.nonEmpty =>
-        val keys = vs.flatMap(keyOf(_))
-        if (keys.size == vs.size) { lows ::= keys.min; highs ::= keys.max }
-      case In(a, vs) if statsCol(a).isDefined && vs.nonEmpty =>
-        val nums = vs.flatMap(numOf)
-        if (nums.size == vs.size) nums match {
-          case ds if ds.forall(_.isInstanceOf[java.lang.Double]) =>
-            val d = ds.map(_.asInstanceOf[Double])
-            low(statsCol(a).get, d.min); high(statsCol(a).get, d.max)
-          case ss if ss.forall(_.isInstanceOf[String]) =>
-            val t = ss.map(_.asInstanceOf[String])
-            low(statsCol(a).get, t.min); high(statsCol(a).get, t.max)
-          case _ => () // mixed-domain IN-list: no constraint
-        }
-      case _ => () // unknown shape: no constraint from this subtree
+      val members: Seq[Any] = v match {
+        case vs: Iterable[_] if op == "in" => vs.toSeq
+        case one                           => Seq(one)
+      }
+      if (v != null && members.nonEmpty && !members.contains(null)) (isIdx, op) match {
+        case (true, ">")         => keyOf(v, +1).foreach(lows ::= _)
+        case (true, ">=")        => keyOf(v).foreach(lows ::= _)
+        case (true, "<")         => keyOf(v, -1).foreach(highs ::= _)
+        case (true, "<=")        => keyOf(v).foreach(highs ::= _)
+        case (true, "==" | "=" | "in") =>
+          val keys = members.flatMap(keyOf(_))
+          if (keys.size == members.size) { lows ::= keys.min; highs ::= keys.max }
+        case (false, ">" | ">=") => numOf(v).foreach(low(c, _))
+        case (false, "<" | "<=") => numOf(v).foreach(high(c, _))
+        case (false, "==" | "=" | "in") =>
+          members.map(numOf) match {
+            case ds if ds.forall(_.exists(_.isInstanceOf[java.lang.Double])) =>
+              val d = ds.flatten.map(_.asInstanceOf[Double])
+              low(c, d.min); high(c, d.max)
+            case ss if ss.forall(_.exists(_.isInstanceOf[String])) =>
+              val t = ss.flatten.map(_.asInstanceOf[String])
+              low(c, t.min); high(c, t.max)
+            case _ => () // unboundable or mixed-domain members: no constraint
+          }
+        case _ => () // any other op: no constraint
+      }
     }
-    walk(predicate)
     val lo = lows.maxOption
     val hi = highs.minOption
     // a >= b in the shared domain; cross-domain (or unexpected) pairs
@@ -379,8 +335,8 @@ object Collection {
     }
 
   /** Parse the `_period_stats` sidecar key (period → stats column →
-    * (min, max)) — shared by the pruned delete discovery scan and the
-    * DataSource V2 read path. Numeric and temporal columns record
+    * (min, max)) — read by the read planner ([[ReadRoots]]) for
+    * every read and every delete's discovery. Numeric and temporal columns record
     * Double bounds (temporal = wall-clock epoch micros); string columns
     * record String bounds (lexicographic domain). A malformed or
     * unknown-shaped entry parses to nothing — absent = unprunable. */
@@ -1149,11 +1105,12 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
                                         at: Map[String, JValue]): Unit = {
     val itemPath = path.resolve(item)
     if (cols.isEmpty) return
-    val dataDir = itemPath.resolve(Item.DataDir)
+    val t = resolveLive(item)
+    val periods = t.periods.getOrElse(Nil)
     // a delete/expiry can empty EVERY period: the commit already
     // landed, so an unreadable (dir-less) item must clear the stats
     // map, not throw after the mutation succeeded
-    if (!dataDir.listDirs.exists(_.startsWith(MonthCol + "="))) {
+    if (periods.isEmpty) {
       withCommitLock { withItemDdlLock(item) {
         Meta.write(itemPath,
           Meta.read(itemPath) + ("_period_stats" -> Meta.jv(Map.empty[String, Any])))
@@ -1161,14 +1118,13 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       } }
       return
     }
-    val raw0 = spark.read.parquet(dataDir.toString)
-    val present = cols.filter(raw0.columns.contains)
+    // only the listed periods that exist are read
+    val raw = t.read(ReadRoots.dirRoots(t, Some(months match {
+      case Some(ms) if ms.nonEmpty => periods.filter(ms.toSet)
+      case _                       => periods
+    })), period = true)
+    val present = cols.filter(raw.columns.contains)
     if (present.isEmpty) return
-    val raw = months match {
-      case Some(ms) if ms.nonEmpty =>
-        raw0.filter(col(MonthCol).cast("string").isin(ms: _*))
-      case _ => raw0
-    }
     // Stats domain per dtype: numerics as Double; temporal as
     // wall-clock epoch micros (Double) — instants via unix_micros
     // (tz-free), NTZ via a session-tz round trip (session == recorded
@@ -1182,7 +1138,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // intervals below so the shift can never prune a live period
     val ntzDstSlack = !java.time.ZoneId.of(sessionTzName).getRules.isFixedOffset
     def statExpr(c: String): org.apache.spark.sql.Column =
-      raw0.schema(c).dataType match {
+      raw.schema(c).dataType match {
         case TimestampType    => unix_micros(col(c)).cast("double")
         case TimestampNTZType =>
           unix_micros(to_utc_timestamp(col(c).cast("timestamp"), sessionTzName)).cast("double")
@@ -1192,7 +1148,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       }
     def widen(c: String, v: Any, up: Boolean): Any = v match {
       case d: java.lang.Double
-          if ntzDstSlack && raw0.schema(c).dataType == TimestampNTZType =>
+          if ntzDstSlack && raw.schema(c).dataType == TimestampNTZType =>
         if (up) d + 3600000000.0 else d - 3600000000.0
       case other => other
     }
@@ -1309,12 +1265,6 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       s.minMs.map(v => Meta.obj("_index_min_ms" -> v)).getOrElse(Map.empty) ++
       s.maxMs.map(v => Meta.obj("_index_max_ms" -> v)).getOrElse(Map.empty)
 
-  private def readStatsMeta(item: String): Option[Partitioner.IndexStats] =
-    metadata(item).get("_rows").map { r =>
-      def l(k: String) = metadata(item).get(k).map(j => Meta.unjv(j).asInstanceOf[Long])
-      Partitioner.IndexStats(Meta.unjv(r).asInstanceOf[Long], l("_index_min_ms"), l("_index_max_ms"))
-    }
-
   /** Structural write validation (reference dataframe.py:426-461 / R10):
     * duplicate column names rejected; very wide frames allowed. */
   private def structuralChecks(df: DataFrame): Unit = {
@@ -1324,9 +1274,21 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
   }
 
   /** Time-period dir layout (daily/monthly/quarterly/yearly): derive
-    * the hidden period partition column, hash-cluster by period (one
+    * the hidden period partition column in the session zone, then
+    * [[clusterPeriods]]. */
+  private def withTimeLayout(df: DataFrame, indexCols: Seq[String],
+                             salt: Int, layout: String,
+                             dedupRows: Boolean = false): DataFrame =
+    clusterPeriods(df.withColumn(MonthCol, Collection.periodExpr(layout, col(indexCols.head))),
+      indexCols, salt, dedupRows)
+
+  /** Hash-cluster rows that carry their period column by period (one
     * write task per period) and sort within so each period dir holds
-    * sorted, range-disjoint files.
+    * sorted, range-disjoint files. Stored rows read back with their
+    * period ([[ReadRoots.Target.read]]) go straight here, so a rewrite
+    * leaves each row in the dir it came from, whatever zone the
+    * session runs (`periodExpr` keys rows in the session zone, which
+    * may differ from the recorded `_layout_tz`).
     *
     * `salt > 1` handles skewed/huge periods: the clustering key gains a
     * deterministic hash-of-index salt term, so a hot period is written
@@ -1340,11 +1302,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * does: identical rows share their period and salt, both clustering
     * keys are columns the dedup groups on (the salt kept as one through
     * the dedup and dropped after it), so the plan shuffles once. */
-  private def withTimeLayout(df: DataFrame, indexCols: Seq[String],
-                             salt: Int, layout: String,
-                             dedupRows: Boolean = false): DataFrame = {
-    val withPeriod = df.withColumn(MonthCol,
-      Collection.periodExpr(layout, col(indexCols.head)))
+  private def clusterPeriods(withPeriod: DataFrame, indexCols: Seq[String],
+                             salt: Int, dedupRows: Boolean = false): DataFrame = {
     val clustered =
       if (salt <= 1) {
         val byPeriod = withPeriod.repartition(col(MonthCol))
@@ -1362,13 +1321,14 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     clustered.sortWithinPartitions((MonthCol +: indexCols).map(col): _*)
   }
 
-  private def timeLayoutOf(item: String): Option[String] =
-    metadata(item).get("_layout").map(j => Meta.unjv(j).toString)
-      .filter(TimeLayouts.contains)
-
-  private def monthlySaltOf(item: String): Int =
-    metadata(item).get("_monthly_salt")
-      .map(j => Meta.unjv(j).asInstanceOf[Long].toInt).getOrElse(1)
+  /** The live item resolved once through the read planner. Every
+    * read-modify-write resolves it once per attempt: that one sidecar
+    * read is the commit's fence base and the only source of its layout,
+    * salt, index columns, zone, stats and encoded schema, and its
+    * stored rows are read from the same target — the Delta rule: read
+    * one snapshot, commit against that snapshot. */
+  private def resolveLive(item: String): ReadRoots.Target =
+    ReadRoots.resolve(spark, path.resolve(item), None)
 
   /** Writer-unique staging dir: a shared `__tmp_<item>` name lets two
     * concurrent stagings of the same item (threads or processes — the
@@ -1769,26 +1729,22 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // batch, so it keeps its up-front probe
     if (evolution.isDefined && df.isEmpty) return
 
-    // The fence base: the committed generation as of THIS read-modify-
-    // write's read. A fresh sidecar read (not the TTL cache) — a stale
-    // base would spuriously refuse, a cached one could miss a foreign
-    // process's commit and falsely accept.
-    val baseGen = Snapshots.generationOf(Meta.read(path.resolve(item)))
-
-    val timeLayout = timeLayoutOf(item)
-    val monthly = timeLayout.isDefined
+    // The fence base and the plan: ONE fresh sidecar read (not the TTL
+    // cache — a cached one could miss a foreign process's commit, or
+    // plan a layout another handle has since converted).
+    val t = resolveLive(item)
+    val monthly = t.layout.isDefined
     if (monthly && evolution.isEmpty) {
-      appendPeriodic(item, df, duplicateHandling, validateSchema, timeLayout.get,
-        extraMeta, baseGen)
+      appendPeriodic(item, t, df, duplicateHandling, validateSchema, extraMeta)
       return
     }
     // (schema evolution on a time-layout item falls through to the full
     // path below: a schema change must rewrite every period anyway to
     // keep partition files schema-consistent.)
 
-    val existing = this.item(item)
-    val idx = existing.indexCols
-    val old = existing.data
+    val storedMeta = t.meta
+    val idx = t.indexCols
+    val old = t.read(t.allRoots)
 
     // RangeIndex collide-on-re-append parity: a batch without the
     // synthesized default index gets its own dense 0..m-1 ids, which
@@ -1846,8 +1802,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // narrow (item ∪ batch) index scan; the sampled range exchange
     // would re-execute the combined dedup plan to learn them (guide
     // §1.4).
-    val prevStats = readStatsMeta(item).getOrElse(
-      Partitioner.computeStats(old, idx.head))
+    val prevStats = t.indexStats.getOrElse(Partitioner.computeStats(old, idx.head))
     val (n, strategy) = npartitions match {
       case Some(k) => (k, Partitioner.SizeBased)
       case None    => Partitioner.decide(Partitioner.estimatedBytes(combined),
@@ -1860,11 +1815,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // same-index-different-value rows survive (regression
     // tests/test_append.py:218-234).
     val laidOut =
-      if (monthly)
-        withTimeLayout(combined, idx, monthlySaltOf(item), timeLayout.get, dedupRows = true)
+      if (monthly) withTimeLayout(combined, idx, t.salt, t.layout.get, dedupRows = true)
       else Partitioner.layout(combined, idx, n, cuts, dedupRows = true)
 
-    val storedMeta = Meta.read(path.resolve(item))
     val staged = stage(item, laidOut, monthly)
     val batch = batchStats()
     if (batch.rows == 0) { // an empty batch commits nothing
@@ -1891,7 +1844,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
            storedMeta, combined.schema).json)) ++
       extraMeta ++ Collection.opTag("append")
     publish(item, staged, Full(monthly), prevMeta,
-      expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
+      expectedGen = Some(Snapshots.generationOf(storedMeta)), expectedMeta = Some(storedMeta))
     } finally releaseIndex()
   }
 
@@ -1923,20 +1876,19 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     }
 
   /** Incremental append for time-layout items: the stored side is
-    * read WITH partition pruning to only the periods the batch touches
-    * (index collisions can only occur inside a row's own period, so
-    * dedup restricted to touched periods is exact), and only those
-    * period directories are rewritten. Append cost scales with batch
-    * span, not item size. */
+    * read from only the periods the batch touches (index collisions can
+    * only occur inside a row's own period, so dedup restricted to
+    * touched periods is exact), and only those period directories are
+    * rewritten. Append cost scales with batch span, not item size. `t`
+    * is the attempt's one resolution of the item. */
   private def appendPeriodic(item: String,
+                             t: ReadRoots.Target,
                              df: DataFrame,
                              duplicateHandling: DuplicateHandling,
                              validateSchema: Boolean,
-                             layout: String,
-                             extraMeta: Map[String, JValue] = Map.empty,
-                             baseGen: Long): Unit = {
-    val existing = this.item(item)
-    val idx = existing.indexCols
+                             extraMeta: Map[String, JValue]): Unit = {
+    val idx = t.indexCols
+    val layout = t.layout.get
     val newDf = df
     // An empty batch is a no-op whatever its shape or zone (reference
     // tests/test_append.py): a batch that passes both checks below
@@ -1947,9 +1899,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // mismatch would write a boundary row into a different period dir
     // than pruning later looks in.
     val sessionTz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    val tzClash = existing.metadata.get("_layout_tz")
+    val tzClash = t.meta.get("_layout_tz")
       .map(j => Meta.unjv(j).toString).filter(_ != sessionTz)
-    val stored = existing.data.columns
+    val stored = t.read(Nil).columns
     val mismatch = stored.toSet != newDf.columns.toSet
     if ((tzClash.isDefined || mismatch) && newDf.isEmpty) return
     tzClash.foreach { recorded =>
@@ -1981,50 +1933,22 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         .reduceOption(_ min _),
       monthRows.flatMap(r => Option(r.get(3)).map(Partitioner.toEpochMs))
         .reduceOption(_ max _))
-    // Partition-pruned scan: only the touched months' files are read.
-    val oldTouched = readDataPinned(item)
-      .filter(col(MonthCol).isin(months: _*))
-      .drop(MonthCol)
+    // Only the touched periods that exist are read: a named period dir
+    // that is missing would fail the read's path resolution.
+    val existing = t.periods.get.toSet
+    val oldTouched = t.read(ReadRoots.dirRoots(t, Some(months.filter(existing))))
       .select(newDf.columns.map(col): _*)
 
     val combined = combineOnIndex(item, oldTouched, newDf, newDf, idx, duplicateHandling)
 
-    val prevStats = readStatsMeta(item).getOrElse(
-      Partitioner.computeStats(existing.data, idx.head))
-    val stats = prevStats.merge(batchStats)
-    val storedMeta = Meta.read(path.resolve(item))
-    val prevMeta = storedMeta ++ statsMeta(stats) ++ extraMeta ++
+    val prevStats = t.indexStats.getOrElse(
+      Partitioner.computeStats(t.read(t.allRoots), idx.head))
+    val prevMeta = t.meta ++ statsMeta(prevStats.merge(batchStats)) ++ extraMeta ++
       Collection.opTag("append")
-    publish(item, stage(item, withTimeLayout(combined, idx,
-        monthlySaltOf(item), layout, dedupRows = true), partitioned = true),
-      Periods(months), prevMeta, expectedGen = Some(baseGen),
-      expectedMeta = Some(storedMeta))
-  }
-
-  /** Read an item's data dir pinned to the declared ENCODED schema when
-    * the sidecar records one: mixed part-file generations (columns
-    * ALTER-added or evolution-appended after older files were written)
-    * read uniformly — absent columns null-fill per file — and, the part
-    * that matters for correctness, a REWRITE fed by this frame
-    * preserves every declared column's data (footer inference on a
-    * mixed dir samples ONE footer and could silently project live
-    * columns away). Legacy pre-encode sidecars keep footer inference.
-    * Time-layout items surface the period partition column, pinned to
-    * STRING (period keys are zero-padded and lexically chronological in
-    * every layout, so string pruning compares correctly). */
-  private def readDataPinned(item: String): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
-    val dataDir = path.resolve(item).resolve(Item.DataDir)
-    metadata(item).get("schema_json_encoded") match {
-      case Some(org.json4s.JString(sj)) =>
-        val enc = Item.asNullable(DataType.fromJson(sj)).asInstanceOf[StructType]
-        val full =
-          if (timeLayoutOf(item).isDefined)
-            StructType(enc.fields :+ StructField(MonthCol, StringType))
-          else enc
-        spark.read.schema(full).parquet(dataDir.toString)
-      case _ => spark.read.parquet(dataDir.toString)
-    }
+    publish(item, stage(item, withTimeLayout(combined, idx, t.salt, layout, dedupRows = true),
+        partitioned = true),
+      Periods(months), prevMeta, expectedGen = Some(Snapshots.generationOf(t.meta)),
+      expectedMeta = Some(t.meta))
   }
 
   /** Chunked append loop (reference append_stream, collection.py:677-751
@@ -2495,21 +2419,13 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
   def describeItems(): DataFrame = {
     import spark.implicits._
     val rows = items.toSeq.sorted.map { name =>
-      val itemPath = path.resolve(name)
-      val dataDir = itemPath.resolve(Item.DataDir)
-      val meta = Meta.read(itemPath)
-      val layout = timeLayoutOf(name).getOrElse("flat")
-      val nPeriods =
-        if (layout == "flat") 0
-        else dataDir.listDirs.count(_.startsWith(MonthCol + "="))
-      val nFiles = path.fs.listFilesRecursively(dataDir.raw)
+      val t = resolveLive(name)
+      val nFiles = path.fs.listFilesRecursively(path.resolve(name).resolve(Item.DataDir).raw)
         .count(_.endsWith(".parquet"))
-      val gen = meta.get("_generation")
-        .map(j => Meta.unjv(j).asInstanceOf[Long]).getOrElse(0L)
-      val stats = readStatsMeta(name)
-      (name, layout, this.item(name).indexCols.mkString(","),
-        nPeriods, nFiles, stats.map(_.rows), stats.flatMap(_.minMs),
-        stats.flatMap(_.maxMs), gen)
+      val stats = t.indexStats
+      (name, t.layout.getOrElse("flat"), t.indexCols.mkString(","),
+        t.periods.fold(0)(_.size), nFiles, stats.map(_.rows), stats.flatMap(_.minMs),
+        stats.flatMap(_.maxMs), Snapshots.generationOf(t.meta))
     }
     rows.toDF("item", "layout", "index_cols", "n_periods", "n_files",
       "rows_estimate", "index_min_ms", "index_max_ms", "generation")
@@ -2564,15 +2480,15 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
 
   private def expireBeforeOnce(item: String,
                                cutoff: java.sql.Timestamp): Collection.ExpireResult = {
-    val existing = this.item(item)
-    val idx = existing.indexCols
-    timeLayoutOf(item) match {
+    val t = resolveLive(item)
+    val idx = t.indexCols
+    t.layout match {
       case Some(layout) =>
         val sessionTzName = spark.conf.get("spark.sql.session.timeZone", "UTC")
         // name-dropping periods relative to a cutoff resolved in the
         // WRONG zone could remove a month holding post-cutoff rows —
         // same typed guard as appendPeriodic
-        existing.metadata.get("_layout_tz").map(j => Meta.unjv(j).toString)
+        t.meta.get("_layout_tz").map(j => Meta.unjv(j).toString)
           .filter(_ != sessionTzName).foreach { recorded =>
             throw new ValidationError(
               s"item '$item' was laid out in timezone '$recorded' but this " +
@@ -2582,11 +2498,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         val sessionTz = java.time.ZoneId.of(sessionTzName)
         val pStar = Collection.periodOfValue(layout, cutoff, sessionTz).getOrElse(
           throw new ValidationError(s"cannot derive a $layout period from $cutoff"))
-        val dataDir = path.resolve(item).resolve(Item.DataDir)
-        val periods = dataDir.listDirs
-          .filter(_.startsWith(MonthCol + "="))
-          .map(_.stripPrefix(MonthCol + "="))
-        val toRemove = periods.filter(_ < pStar).sorted
+        val periods = t.periods.get
+        val toRemove = periods.filter(_ < pStar)
         // A cutoff landing EXACTLY on its period's first instant (the
         // midnight/month-start retention sweep every scheduler fires)
         // has nothing to remove from the boundary period — every one of
@@ -2602,23 +2515,18 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         val hasBoundary = periods.contains(pStar) && !boundaryAligned
         if (toRemove.isEmpty && !hasBoundary)
           return Collection.ExpireResult(Nil, 0L)
-        val prevMeta = Meta.read(path.resolve(item))
-        val baseGen = Snapshots.generationOf(prevMeta)
-        val raw = readDataPinned(item)
-        // partition value filter: ONLY the boundary period's files read
-        val boundary = raw.filter(col(MonthCol) === pStar).drop(MonthCol)
+        // ONLY the boundary period's files are read
+        val boundary = t.read(if (hasBoundary) ReadRoots.dirRoots(t, Some(Seq(pStar))) else Nil)
         val boundaryDeleted =
           if (hasBoundary) boundary.filter(col(idx.head) < lit(cutoff)).count() else 0L
-        val keep =
-          if (hasBoundary) boundary.filter(!(col(idx.head) < lit(cutoff)))
-          else raw.drop(MonthCol).filter(lit(false))
+        val keep = boundary.filter(!(col(idx.head) < lit(cutoff)))
         // one commit covers the boundary rewrite AND the name-dropped
         // periods (listed months absent from tmp are removals)
         val expired = (toRemove ++ (if (hasBoundary) Seq(pStar) else Nil)).sorted
-        publish(item, stage(item, withTimeLayout(keep, idx, monthlySaltOf(item), layout),
+        publish(item, stage(item, withTimeLayout(keep, idx, t.salt, layout),
             partitioned = true),
-          Periods(expired), prevMeta ++ Collection.opTag("expire"),
-          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+          Periods(expired), t.meta ++ Collection.opTag("expire"),
+          expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
         Collection.ExpireResult(toRemove, boundaryDeleted)
       case None =>
         Collection.ExpireResult(Nil,
@@ -2653,109 +2561,56 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
 
   private def deleteWhereOnce(item: String,
                               predicate: org.apache.spark.sql.Column): Long = {
-    val existing = this.item(item)
-    val idx = existing.indexCols
-    val dataDir = path.resolve(item).resolve(Item.DataDir)
-    val prevMeta = Meta.read(path.resolve(item))
-    val baseGen = Snapshots.generationOf(prevMeta)
-    timeLayoutOf(item) match {
-      case Some(layout) =>
-        val raw = readDataPinned(item)
-        // when the read is pinned the period key is STRING by
-        // construction; legacy (unpinned) dirs may still infer yearly
-        // keys as int / daily keys as date — collect the TYPED value
-        // (keeps the isin filter a pruning-friendly partition
-        // predicate) alongside its string form (the period key
-        // Periods names)
+    val t = resolveLive(item)
+    val baseGen = Snapshots.generationOf(t.meta)
+    val matches = deleteScan(t, predicate)
+    t.layout match {
+      case Some(_) =>
         // the discovery scan already reads exactly the matching rows
-        // (candidate-period-narrowed, then the predicate) — count them
-        // per period IN the same aggregation instead of re-scanning the
-        // touched periods with a separate count job afterwards
-        // (guide §1.4: one pass, not two)
-        val monthRows = deleteDiscoveryFrame(item, predicate).filter(predicate)
-          .groupBy(col(MonthCol), col(MonthCol).cast("string"))
+        // (planner-narrowed, then the predicate) — count them per
+        // period IN the same aggregation instead of re-scanning the
+        // touched periods with a separate count job afterwards (guide
+        // §1.4: one pass, not two). Legacy dirs without a pinned schema
+        // may infer yearly keys as int / daily keys as date.
+        val monthRows = matches.groupBy(col(MonthCol).cast("string"))
           .agg(count(lit(1)).as("c")).collect()
-        val monthVals = monthRows.map(_.get(0)).toSeq
-        val months = monthRows.map(_.getString(1)).toSeq.sorted
+        val months = monthRows.map(_.getString(0)).toSeq.sorted
         if (months.isEmpty) return 0L
-        val deleted = monthRows.map(_.getLong(2)).sum
-        val touched = raw.filter(col(MonthCol).isin(monthVals: _*)).drop(MonthCol)
-        publish(item, stage(item, withTimeLayout(touched.filter(!predicate), idx,
-            monthlySaltOf(item), layout), partitioned = true),
-          Periods(months), prevMeta ++ Collection.opTag("delete_where"),
-          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
-        deleted
+        val touched = t.read(ReadRoots.dirRoots(t, Some(months)), period = true)
+        publish(item, stage(item, clusterPeriods(touched.filter(!predicate), t.indexCols, t.salt),
+            partitioned = true),
+          Periods(months), t.meta ++ Collection.opTag("delete_where"),
+          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
+        monthRows.map(_.getLong(1)).sum
       case None =>
-        val raw = readDataPinned(item)
-        val deleted = raw.filter(predicate).count()
+        val deleted = matches.count()
         if (deleted == 0L) return 0L
-        publish(item, stage(item, raw.filter(!predicate), partitioned = false),
-          Full(partitioned = false), prevMeta ++ Collection.opTag("delete_where"),
-          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+        publish(item, stage(item, t.read(t.allRoots).filter(!predicate), partitioned = false),
+          Full(partitioned = false), t.meta ++ Collection.opTag("delete_where"),
+          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
         deleted
     }
   }
 
-  /** The frame deleteWhere's period-discovery scan reads — [[raw]]
-    * narrowed to the periods the PREDICATE can possibly touch. Index
-    * stats per period are free: the period KEY is the index range, so a
-    * conjunctive range/equality constraint on the index column maps to
-    * a period-key interval and becomes a partition filter — the
-    * discovery scan then opens only the candidate periods' files, the
-    * expireBefore economics generalized to arbitrary index predicates.
-    * Anything the analyzer can't bound (disjunctions, non-index
-    * columns, computed index expressions) widens conservatively to the
-    * full period list — never under-deletes. Package-visible so the
-    * plan's partition filters are test-assertable. */
-  private[graft] def deleteDiscoveryFrame(item: String,
-                                          predicate: org.apache.spark.sql.Column): DataFrame = {
-    val layout = timeLayoutOf(item).getOrElse(throw new ValidationError(
-      s"item '$item' has no time layout"))
-    val dataDir = path.resolve(item).resolve(Item.DataDir)
-    val raw = readDataPinned(item)
-    // period keys were derived in the WRITER's recorded tz; mapping
-    // predicate instants to keys in a different session tz could prune
-    // a true boundary period (silent under-delete). The delete itself
-    // is tz-independent (the predicate evaluates on stored instants),
-    // so a mismatched session just forfeits pruning.
-    val sessionTzName = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    val meta0 = Meta.read(path.resolve(item)) // one read serves tz, stats, bloom
-    val recordedTz = meta0.get("_layout_tz").map(j => Meta.unjv(j).toString)
-    if (recordedTz.exists(_ != sessionTzName)) return raw
-    val all = dataDir.listDirs
-      .filter(_.startsWith(MonthCol + "=")).map(_.stripPrefix(MonthCol + "="))
-    // the ANALYZED filter condition (public API) — Column itself hides
-    // its expression in Spark 4; analysis also resolves attribute names
-    val cond = raw.filter(predicate).queryExecution.analyzed.collectFirst {
+  /** The rows matching a delete's `predicate`, read from only the roots
+    * the read planner keeps for it: the analyzed condition's
+    * translatable conjuncts ([[ReadRoots.conditionPreds]]) prune
+    * periods by index interval and `_period_stats`, and narrow to part
+    * files through the skip indexes, under the same zone rule as reads.
+    * A conjunct the planner cannot bound (disjunctions, computed
+    * expressions) keeps everything — never under-deletes. A time
+    * layout's rows carry the period column. Package-visible so specs
+    * can count the files discovery opens. */
+  private[graft] def deleteScan(t: ReadRoots.Target,
+                                predicate: org.apache.spark.sql.Column): DataFrame = {
+    // the ANALYZED condition (public API) — Column itself hides its
+    // expression in Spark 4; analysis also resolves attribute names
+    val cond = t.read(Nil).filter(predicate).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
-    val pStats = Collection.periodStatsOf(meta0)
-    val cands = cond.map(Collection.candidatePeriods(all, _,
-      this.item(item).indexCols.head, layout,
-      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone", "UTC")),
-      pStats))
-      .getOrElse(all)
-    // Skip-index narrowing (SkipIndexes.candidateDeletePeriods — bloom
-    // AND zonemap, one listing): an equality/IN conjunct on a
-    // bloom-indexed column, or a comparison conjunct on a
-    // zonemap-indexed column, drops every period whose files are all
-    // definitely match-free — a key-targeted or range-retention delete's
-    // discovery reads the few index-positive periods instead of the
-    // whole item. Index-interval pruning above still applies; all
-    // intersect. Exact (no false negatives) ⇒ never under-deletes; any
-    // doubt leaves `cands` untouched.
-    val bloomed = (for {
-      c <- cond
-      enc <- meta0.get("schema_json_encoded").collect {
-        case org.json4s.JString(sj) =>
-          org.apache.spark.sql.types.DataType.fromJson(sj)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-      keep <- SkipIndexes.candidateDeletePeriods(
-        path.resolve(item), dataDir, c, meta0, enc)
-    } yield cands.filter(keep)).getOrElse(cands)
-    if (bloomed.size == all.size) raw
-    else raw.filter(col(MonthCol).cast("string").isin(bloomed: _*))
+    val roots = ReadRoots.scanRoots(spark, t,
+      cond.map(ReadRoots.conditionPreds).getOrElse(Nil), t.encoded)
+    t.read(roots, period = t.layout.isDefined).filter(predicate)
   }
 
   /** Publication step of a SQL row-level operation (UPDATE / MERGE /
@@ -3189,14 +3044,14 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val out = Collection.retryOnConflict(genProbe = genProbeFor(item)) {
     if (!hasItem(item))
       throw new ItemNotFoundError(s"item '$item' does not exist")
-    val baseGen = Snapshots.generationOf(Meta.read(path.resolve(item)))
-    val it = this.item(item)
-    val idx = it.indexCols
-    val df = it.data
+    val t = resolveLive(item)
+    val baseGen = Snapshots.generationOf(t.meta)
+    val idx = t.indexCols
+    val df = t.read(t.allRoots)
     // Read fully before the swap overwrites the source files: the
     // write job streams from the old files into the tmp dir, and the
     // swap happens only after the job completes — safe.
-    timeLayoutOf(item) match {
+    t.layout match {
       case Some(layout) =>
         // a time-layout item re-lays THROUGH its layout (partitioned
         // commit): a flat rewrite would silently destroy the period
@@ -3209,30 +3064,28 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           throw new ValidationError(
             s"rebalance: item '$item' has a time layout; npartitions cannot be " +
               "honored (the period clustering dictates partitioning) — omit it")
-        val laidOut = withTimeLayout(df, idx, monthlySaltOf(item), layout)
+        val laidOut = withTimeLayout(df, idx, t.salt, layout)
         // the re-lay re-keys every period in THIS session's tz: record
         // it so later period-name pruning resolves against the zone the
         // dirs are actually keyed in
-        val storedMeta = Meta.read(path.resolve(item))
         publish(item, stage(item, laidOut, partitioned = true), Full(partitioned = true),
-          storedMeta ++ Meta.obj(
+          t.meta ++ Meta.obj(
             "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC")) ++
             Collection.opTag("rebalance"),
-          expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
+          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
         dataDirFileCount(item)
       case None =>
-        val stats = readStatsMeta(item).getOrElse(Partitioner.computeStats(df, idx.head))
+        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
         val (n, strategy) = npartitions match {
           case Some(k) => (k, Partitioner.SizeBased)
           case None    => Partitioner.decide(Partitioner.estimatedBytes(df), stats)
         }
         val laidOut = flatRelayout(df, idx, n)
-        val storedMeta = Meta.read(path.resolve(item))
-        val prevMeta = storedMeta ++
+        val prevMeta = t.meta ++
           Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name)
         publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
           prevMeta ++ Collection.opTag("rebalance"),
-          expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
+          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
         n
     }
     }
@@ -3267,43 +3120,46 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     if (isTime && !TimeLayouts.contains(target))
       throw new ValidationError(
         s"unknown time layout '$target' (supported: ${TimeLayouts.mkString(",")})")
-    val current = timeLayoutOf(item).getOrElse("flat")
-    if (current == target && (!isTime || monthlySaltOf(item) == monthlySalt)) return
     // fenced + retried like every read-modify-write (see append)
-    Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-    val it = this.item(item)
-    val idx = it.indexCols
-    val df = it.data
-    if (isTime && !Partitioner.isTemporal(df, idx.head))
-      throw new ValidationError("time layouts require a timestamp/date index column")
-    val prevMeta = Meta.read(path.resolve(item))
-    val baseGen = Snapshots.generationOf(prevMeta)
-    if (isTime) {
-      val newMeta = prevMeta ++ Meta.obj(
-        "_layout" -> target,
-        "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC"),
-        "_monthly_salt" -> monthlySalt,
-        "_partitions" -> 0,
-        "_partition_strategy" -> Partitioner.TimeBased.name)
-      publish(item, stage(item, withTimeLayout(df, idx, monthlySalt, target),
-          partitioned = true), Full(partitioned = true),
-        newMeta ++ Collection.opTag("convert_layout"),
-        expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
-    } else {
-      val stats = readStatsMeta(item).getOrElse(Partitioner.computeStats(df, idx.head))
-      val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-      // stale period bookkeeping must not survive a flat conversion
-      val newMeta = (prevMeta - "_layout_tz" - "_period_gens" - "_period_stats") ++ Meta.obj(
-        "_layout" -> "flat",
-        "_monthly_salt" -> 1,
-        "_partitions" -> n,
-        "_partition_strategy" -> strategy.name)
-      publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
-        Full(partitioned = false), newMeta ++ Collection.opTag("convert_layout"),
-        expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+    val converted = Collection.retryOnConflict(genProbe = genProbeFor(item)) {
+    val t = resolveLive(item)
+    // converting to the current layout (same salt) is a no-op
+    val changes = t.layout.getOrElse("flat") != target || (isTime && t.salt != monthlySalt)
+    if (changes) {
+      val idx = t.indexCols
+      val df = t.read(t.allRoots)
+      if (isTime && !Partitioner.isTemporal(df, idx.head))
+        throw new ValidationError("time layouts require a timestamp/date index column")
+      val prevMeta = t.meta
+      val baseGen = Snapshots.generationOf(prevMeta)
+      if (isTime) {
+        val newMeta = prevMeta ++ Meta.obj(
+          "_layout" -> target,
+          "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC"),
+          "_monthly_salt" -> monthlySalt,
+          "_partitions" -> 0,
+          "_partition_strategy" -> Partitioner.TimeBased.name)
+        publish(item, stage(item, withTimeLayout(df, idx, monthlySalt, target),
+            partitioned = true), Full(partitioned = true),
+          newMeta ++ Collection.opTag("convert_layout"),
+          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+      } else {
+        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
+        val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
+        // stale period bookkeeping must not survive a flat conversion
+        val newMeta = (prevMeta - "_layout_tz" - "_period_gens" - "_period_stats") ++ Meta.obj(
+          "_layout" -> "flat",
+          "_monthly_salt" -> 1,
+          "_partitions" -> n,
+          "_partition_strategy" -> strategy.name)
+        publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
+          Full(partitioned = false), newMeta ++ Collection.opTag("convert_layout"),
+          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+      }
     }
+    changes
     }
-    if (reindex) rebuildIndexes(item) // see rebalance
+    if (reindex && converted) rebuildIndexes(item) // see rebalance
   }
 
   /** Z-order rebalance — the `OPTIMIZE ... ZORDER BY` analogue: re-lay
@@ -3320,29 +3176,27 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
                       reindex: Boolean = false): Unit = {
     if (!hasItem(item))
       throw new ItemNotFoundError(s"item '$item' does not exist")
+    // fenced + retried like every read-modify-write (see append)
+    Collection.retryOnConflict(genProbe = genProbeFor(item)) {
+    val t = resolveLive(item)
     // z-order's range exchange and a period-partitioned write are
     // incompatible layouts (each range partition would splinter across
     // period dirs): reject rather than silently flatten the item and
     // orphan the incremental append/expire machinery
-    if (timeLayoutOf(item).isDefined)
+    if (t.layout.isDefined)
       throw new ValidationError(
         s"rebalanceZOrder: item '$item' has a time layout; z-order applies to " +
           "flat items (use rebalance() to compact a time-layout item)")
-    // fenced + retried like every read-modify-write (see append)
-    Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-    val baseGen = Snapshots.generationOf(Meta.read(path.resolve(item)))
-    val df = this.item(item).data
+    val df = t.read(t.allRoots)
     val laidOut = graft.operators.ZOrder.cluster(df, cols, bits,
       Some(npartitions.getOrElse(
         Partitioner.decide(Partitioner.estimatedBytes(df),
-          readStatsMeta(item).getOrElse(
-            Partitioner.computeStats(df, this.item(item).indexCols.head)))._1)))
-    val storedMeta = Meta.read(path.resolve(item))
-    val prevMeta = storedMeta ++
+          t.indexStats.getOrElse(Partitioner.computeStats(df, t.indexCols.head)))._1)))
+    val prevMeta = t.meta ++
       Meta.obj("_zorder_cols" -> cols.mkString(","), "_zorder_bits" -> bits)
     publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
       prevMeta ++ Collection.opTag("zorder"),
-      expectedGen = Some(baseGen), expectedMeta = Some(storedMeta))
+      expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
     }
     // z-order clusters every listed column per file — exactly the
     // layout where a zonemap separates best; re-arm on request
@@ -3593,32 +3447,20 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // does not advance the generation); a refused publish re-reads and
     // re-stages via retryOnConflict.
     Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-      val itemPath = path.resolve(item)
-      metaCache.remove(item) // each attempt must read the fresh sidecar
-      val meta = Meta.read(itemPath)
-      val baseGen = Snapshots.generationOf(meta)
+      val t = resolveLive(item)
+      val meta = t.meta
       def parse(k: String): Option[StructType] = meta.get(k).collect {
         case org.json4s.JString(sj) => DataType.fromJson(sj).asInstanceOf[StructType]
       }
       // legacy pre-encode sidecar: materialize the encoded schema once
       // (same anchor rule as addColumns/dropColumns)
-      val encoded = parse("schema_json_encoded").getOrElse {
-        val inferred = spark.read.parquet(
-          itemPath.resolve(Item.DataDir).toString).schema
-        StructType(inferred.filterNot(_.name == Collection.MonthCol))
-      }
+      val encoded = parse("schema_json_encoded").getOrElse(t.read(Nil).schema)
       val actualFrom = encoded.fieldNames
         .find(_.equalsIgnoreCase(from)).getOrElse(
           throw new ValidationError(
             s"column '$from' does not exist on item '$item' " +
               s"(${encoded.fieldNames.mkString(", ")})"))
-      val idx = meta.get("index_names") match {
-        case Some(j) => Meta.unjv(j) match {
-          case xs: Seq[_] if xs.nonEmpty => xs.map(_.toString)
-          case _ => Seq(Collection.DefaultIndex)
-        }
-        case None => Seq(Collection.DefaultIndex)
-      }
+      val idx = t.indexCols
       if (idx.exists(_.equalsIgnoreCase(actualFrom)))
         throw new ValidationError(
           s"cannot rename '$actualFrom': it is the item's index column — " +
@@ -3644,28 +3486,14 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       // the staged rewrite, expressed as the one-step E5 migration it is
       val reg = new graft.evolution.SchemaEvolution.MigrationRegistry
       reg.register(1, 2)(_.withColumnRenamed(actualFrom, to))
-      val it = this.item(item) // declared-schema pin: masked columns absent
-      val df = reg.migrate(it.data, 1, 2)
+      // declared-schema pin: masked columns absent
+      val df = reg.migrate(t.read(t.allRoots, period = t.layout.isDefined), 1, 2)
       val prevMeta = meta +
         ("schema_json_encoded" -> Meta.jv(rekey(encoded).json)) ++
         parse("schema_json").map(l => "schema_json" -> Meta.jv(rekey(l).json)) ++
         typeInfo.map(ti => "_type_info" -> (ti: JValue)) ++
         Collection.opTag("rename_column")
-      timeLayoutOf(item) match {
-        case Some(layout) =>
-          publish(item, stage(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
-              partitioned = true), Full(partitioned = true),
-            prevMeta, expectedGen = Some(baseGen), expectedMeta = Some(meta))
-        case None =>
-          val stats = readStatsMeta(item).getOrElse(
-            Partitioner.computeStats(df, idx.head))
-          val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-          publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
-            Full(partitioned = false), prevMeta ++ Meta.obj("_partitions" -> n,
-              "_partition_strategy" -> strategy.name),
-            expectedGen = Some(baseGen), expectedMeta = Some(meta))
-      }
-      metaCache.remove(item)
+      relay(item, t, df, prevMeta)
     }
   }
 
@@ -3683,30 +3511,30 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // the generation fence; a metadata-only DDL (gen unchanged) by the
     // sidecar-equality fence; either refusal re-reads and re-stages.
     Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-    metaCache.remove(item) // each attempt must read the fresh sidecar
-    val meta0 = Meta.read(path.resolve(item))
-    val it = this.item(item)
-    val idx = it.indexCols
-    val df = it.data // declared-schema pin: masked columns already absent
-    val prevMeta = meta0 - Collection.DroppedColsKey
-    val baseGen = Snapshots.generationOf(prevMeta)
-    timeLayoutOf(item) match {
-      case Some(layout) =>
-        publish(item, stage(item, withTimeLayout(df, idx, monthlySaltOf(item), layout),
-            partitioned = true), Full(partitioned = true),
-          prevMeta ++ Collection.opTag("purge_dropped"),
-          expectedGen = Some(baseGen), expectedMeta = Some(meta0))
+      val t = resolveLive(item)
+      // declared-schema pin: masked columns already absent
+      relay(item, t, t.read(t.allRoots, period = t.layout.isDefined),
+        t.meta - Collection.DroppedColsKey ++ Collection.opTag("purge_dropped"))
+    }
+
+  /** Same-layout full rewrite of `df` (the item's rows, reshaped; with
+    * their periods for a time layout) under `meta`, fenced on `t`'s
+    * sidecar read: a time layout re-lays each row into the period it
+    * was read from, a flat item through the size decision. */
+  private def relay(item: String, t: ReadRoots.Target, df: DataFrame,
+                    meta: Map[String, JValue]): Unit = {
+    val idx = t.indexCols
+    val (laidOut, partitioned, layoutMeta) = t.layout match {
+      case Some(_) => (clusterPeriods(df, idx, t.salt), true, Map.empty[String, JValue])
       case None =>
-        val stats = readStatsMeta(item).getOrElse(
-          Partitioner.computeStats(df, idx.head))
+        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
         val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-        publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
-          Full(partitioned = false), prevMeta ++ Meta.obj("_partitions" -> n,
-            "_partition_strategy" -> strategy.name) ++
-            Collection.opTag("purge_dropped"),
-          expectedGen = Some(baseGen), expectedMeta = Some(meta0))
+        (flatRelayout(df, idx, n), false,
+          Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name))
     }
-    }
+    publish(item, stage(item, laidOut, partitioned), Full(partitioned), meta ++ layoutMeta,
+      expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
+  }
 
   /** User-metadata update by key — the `ALTER TABLE SET/UNSET
     * TBLPROPERTIES` seam. Structural sidecar keys (underscore-prefixed
@@ -3750,12 +3578,14 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     val declared = withCommitLock { withItemDdlLock(item) {
       if (!itemPath.resolve(Item.DataDir).isDir)
         throw new ItemNotFoundError(s"item '$item' does not exist")
-      if (timeLayoutOf(item).isEmpty)
+      val t = resolveLive(item)
+      if (t.layout.isEmpty)
         throw new ValidationError(
           s"analyzeItem: '$item' is a flat item — per-period stats prune " +
             "period directories, which flat items do not have (convert to a " +
             "time layout first, or rely on parquet row-group stats)")
-      val schemaCols = item1Schema(item)
+      // the declared (encoded) schema — validated without reading data
+      val schemaCols = t.read(Nil).schema.fields.toSeq
       statsColumns.foreach { c =>
         val field = schemaCols.find(_.name == c).getOrElse(
           throw new ValidationError(
@@ -3792,11 +3622,6 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       Collection.periodStatsOf(Meta.read(itemPath)).size
     }
   }
-
-  /** The item's declared (logical) schema fields — for validating
-    * post-hoc stats declarations without reading data. */
-  private def item1Schema(itemName: String): Seq[org.apache.spark.sql.types.StructField] =
-    this.item(itemName).data.schema.fields.toSeq
 
   /** Build (or rebuild) a per-file bloom-filter data-skipping index on
     * `columns` — see [[BloomIndex]]. One distributed pass over the

@@ -328,89 +328,6 @@ object FileStatsIndex {
       bounds.get(f).forall(mightSatisfy(_, op, vs))
     }
 
-  /** Period-granularity narrowing for [[Collection.deleteWhere]]'s
-    * discovery scan — the range twin of
-    * [[BloomIndex.candidateDeletePeriods]]: usable conjuncts are
-    * comparisons / equality / bounded-IN between an indexed column and
-    * an un-cast same-type literal; a period survives iff SOME of its
-    * files' min/max interval might hold a matching row. No false
-    * negatives (doubt keeps the file), so a retention sweep on a
-    * non-index timestamp or an id-range GDPR delete on a sorted column
-    * reads only zonemap-positive period dirs. */
-  private[store] def candidateDeletePeriods(
-      itemPath: SPath,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      meta: Map[String, JValue],
-      encodedSchema: StructType,
-      allFiles: () => Seq[String]): Option[Set[String]] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, IsNotNull => CNotNull, IsNull => CIsNull, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o          => Seq(o)
-    }
-    // (column, op, literals) with the column on the LEFT of op — a
-    // flipped comparison (lit < col) mirrors to (col > lit)
-    val cmps: Seq[(Attribute, String, Seq[CLit])] = conjuncts(cond).collect {
-      case CIsNull(a: Attribute)  => (a, "isnull", Nil)
-      case CNotNull(a: Attribute) => (a, "notnull", Nil)
-      case CEq(a: Attribute, l: CLit) if l.value != null => (a, "==", Seq(l))
-      case CEq(l: CLit, a: Attribute) if l.value != null => (a, "==", Seq(l))
-      case CGt(a: Attribute, l: CLit) if l.value != null => (a, ">", Seq(l))
-      case CGt(l: CLit, a: Attribute) if l.value != null => (a, "<", Seq(l))
-      case CGe(a: Attribute, l: CLit) if l.value != null => (a, ">=", Seq(l))
-      case CGe(l: CLit, a: Attribute) if l.value != null => (a, "<=", Seq(l))
-      case CLt(a: Attribute, l: CLit) if l.value != null => (a, "<", Seq(l))
-      case CLt(l: CLit, a: Attribute) if l.value != null => (a, ">", Seq(l))
-      case CLe(a: Attribute, l: CLit) if l.value != null => (a, "<=", Seq(l))
-      case CLe(l: CLit, a: Attribute) if l.value != null => (a, ">=", Seq(l))
-      case CIn(a: Attribute, vs) if vs.nonEmpty && vs.size <= BloomIndex.MaxInValues &&
-          vs.forall { case l: CLit => l.value != null; case _ => false } =>
-        (a, "in", vs.map(_.asInstanceOf[CLit]))
-    }
-    if (cmps.isEmpty) return None
-    val committedGen = Snapshots.generationOf(meta)
-    val usable: Seq[(Map[String, Bounds], String, Seq[Any])] = cmps.flatMap {
-      case (a, op, lits) =>
-        encodedSchema.fields.find(_.name == a.name).flatMap { fld =>
-          // un-cast same-type literal only (analysis wraps mismatches
-          // in Cast, which the extractor above already refuses) — the
-          // same domain the build recorded, or no pruning
-          if (!supportedType(fld.dataType) ||
-              !lits.forall(_.dataType == fld.dataType)) None
-          else load(itemPath, a.name).filter(_.generation == committedGen).flatMap { l =>
-            val dom = lits.flatMap(lit => toDomain(catalystToJvm(lit), fld.dataType))
-            if (dom.size != lits.size) None
-            else Some((domainBounds(l, fld.dataType), op, dom))
-          }
-        }
-    }
-    if (usable.isEmpty) return None
-    Some(allFiles()
-      .filter(mightMatch(usable))
-      .flatMap(_.split('/') match {
-        case Array(seg, _) if seg.startsWith(Collection.MonthCol + "=") =>
-          Some(seg.stripPrefix(Collection.MonthCol + "="))
-        case _ => None
-      }).toSet)
-  }
-
-  /** A Catalyst literal's value in the JVM shapes [[toDomain]] accepts
-    * (Catalyst internals: UTF8String, epoch-day Int, epoch-micros
-    * Long). */
-  private def catalystToJvm(lit: org.apache.spark.sql.catalyst.expressions.Literal): Any =
-    (lit.dataType, lit.value) match {
-      case (StringType, u: UTF8String)    => u
-      case (DateType, d: Int)             => java.time.LocalDate.ofEpochDay(d.toLong)
-      case (TimestampType, micros: Long)  =>
-        java.time.Instant.EPOCH.plus(micros, java.time.temporal.ChronoUnit.MICROS)
-      case (TimestampNTZType, micros: Long) =>
-        java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC)
-      case (_, v) => v
-    }
-
   // ------------------------------------------------------------- refresh
 
   /** Incremental maintenance after a partial-month commit — identical

@@ -83,31 +83,14 @@ final class Item private[store] (
     // mixing live and retained dirs) all read against the declared
     // shape, with absent columns null-filled per file by the parquet
     // reader — no mergeSchema multi-footer pass, and ALTER ADD COLUMN
-    // stays a pure metadata operation. Legacy pre-encode sidecars keep
-    // footer inference. The planner hands back only the kept period
-    // dirs (or skip-index-kept files), so no period column surfaces.
-    val encoded = target.encoded
-    val roots = ReadRoots.scanRoots(spark, target, filters, encoded)
-    // nothing kept: a live item still needs its data dir (a sidecar
-    // without one is torn); otherwise the schema-pinned read of no
-    // roots is the typed empty frame
-    val paths = target.roots match {
-      case ReadRoots.LiveDirs(d) if roots.isEmpty && !d.isDir => Seq(d.toString)
-      case _ => roots
-    }
+    // stays a pure metadata operation ([[ReadRoots.Target.read]]).
+    // Legacy pre-encode sidecars keep footer inference. The planner
+    // hands back only the kept period dirs (or skip-index-kept files),
+    // so no period column surfaces.
+    val roots = ReadRoots.scanRoots(spark, target, filters, target.encoded)
     val base =
-      try encoded.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+      try target.read(roots)
       catch {
-        // a sidecar with NO data directory is a torn item (an
-        // interrupted operation on a crashed process) — name the
-        // repair instead of surfacing a raw path error
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" && metadata.nonEmpty =>
-          throw new GraftError(
-            s"item '$name' has a metadata sidecar but no data directory — " +
-              "an interrupted operation left it torn; run " +
-              "Collection.vacuum() (SQL: CALL <catalog>.system.vacuum) " +
-              s"to repair, then retry (${e.getMessage})")
         // a legacy (pre-encode) sidecar over zero files — a
         // deleteWhere/expiry can empty EVERY period — leaves nothing to
         // infer a schema from, but the sidecar recorded the logical one:

@@ -1,17 +1,23 @@
 package graft.store
 
-import java.time.ZoneId
+import java.time.{ZoneId, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.json4s.{JString, JValue}
 
 /** The read planner behind both front doors — `Item.data` and the V2
   * source's scans (`spark.read.format("graft")`, SQL, DPP, COW group
-  * scans, streaming, CDC). It decides in ONE place which parquet roots
-  * a read opens:
+  * scans, streaming, CDC) — and behind the store's own
+  * read-modify-writes (append, deleteWhere, expiry, the maintenance
+  * rewrites, the period-stats refresh), each of which resolves its item
+  * once and commits against that one sidecar read. It decides in ONE
+  * place which parquet roots a read opens:
   *
   *  1. '''target''' — [[resolve]] maps (item, snapshot) to the live
   *     item, a directory snapshot, a manifest flat pin (live or retained
@@ -20,20 +26,24 @@ import org.json4s.{JString, JValue}
   *  2. '''periods''' — [[keptPeriods]] keeps the periods a conjunctive
   *     predicate list can touch ([[Collection.candidatePeriods]]: index
   *     interval with strict-bound tightening, IN-lists, `_period_stats`
-  *     on covered non-index columns). Period keys are derived in the
-  *     writer's recorded zone, so a session running another zone
-  *     prunes only on instant bounds of an instant index (see
-  *     [[zoneFree]]): a wall-clock bound mapped in the wrong zone
-  *     could drop a true boundary period;
+  *     on covered non-index columns). Index bounds are first mapped to
+  *     the values the row filter compares against ([[rowBound]]), and
+  *     period keys are derived in the writer's recorded zone, so a
+  *     session running another zone prunes only on bounds of an
+  *     instant index;
   *  3. '''files''' — [[scanRoots]] narrows the kept dirs to part files
   *     through the skip indexes ([[SkipIndexes]]: bloom equality,
   *     zonemap ranges).
+  *
+  * Predicates are [[Filters.Pred]] triples: the Item API's own, or
+  * Spark source filters through [[predsOf]] (pushed V2 filters, and a
+  * delete's analyzed condition through [[conditionPreds]]).
   *
   * Every step only ever over-approximates — a shape it cannot bound
   * keeps the period or file — so callers still apply the row filter.
   * Period pruning is PATH SELECTION: pruned periods are never listed.
   */
-private[graft] object ReadRoots {
+private[graft] object ReadRoots extends PredicateHelper {
 
   private val PeriodPrefix = Collection.MonthCol + "="
 
@@ -82,6 +92,16 @@ private[graft] object ReadRoots {
 
     lazy val periodStats: Map[String, Map[String, (Any, Any)]] = Collection.periodStatsOf(meta)
 
+    /** Hash-salt fan-out of each period (sidecar `_monthly_salt`). */
+    lazy val salt: Int = meta.get("_monthly_salt")
+      .map(j => Meta.unjv(j).asInstanceOf[Long].toInt).getOrElse(1)
+
+    /** The sidecar's item stats (`_rows`, index min/max epoch-ms). */
+    lazy val indexStats: Option[Partitioner.IndexStats] = meta.get("_rows").map { r =>
+      def l(k: String) = meta.get(k).map(j => Meta.unjv(j).asInstanceOf[Long])
+      Partitioner.IndexStats(Meta.unjv(r).asInstanceOf[Long], l("_index_min_ms"), l("_index_max_ms"))
+    }
+
     /** Every period of the read, sorted (None: a flat item) — one LIST
       * of a live data dir, or the pin's period names. */
     def periods: Option[Seq[String]] = layout.map { _ =>
@@ -90,6 +110,49 @@ private[graft] object ReadRoots {
           d.listDirs.filter(_.startsWith(PeriodPrefix)).map(_.stripPrefix(PeriodPrefix)).sorted
         case PinnedPeriods(pairs) => pairs.map(_._1)
       }
+    }
+
+    /** Every root of the read: all period dirs, or the flat root. */
+    def allRoots: Seq[String] = dirRoots(this, periods)
+
+    /** The stored rows under `paths` (part files or dirs of this read),
+      * pinned to [[encoded]]: mixed part-file generations read against
+      * the declared shape with absent columns null-filled per file, and
+      * a rewrite fed by this frame keeps every declared column (footer
+      * inference on a mixed dir samples ONE footer). No paths is the
+      * typed empty frame. `period` surfaces the period column as a
+      * string, the data dir serving as `basePath`. A legacy sidecar (no
+      * encoded schema) infers the shape from the footers — of every
+      * root when `paths` is empty, keeping no row. A live item whose
+      * data dir is gone is torn: a typed error names the repair. */
+    def read(paths: Seq[String], period: Boolean = false): DataFrame = {
+      val dataDir = roots match {
+        case LiveDirs(d) => Some(d)
+        case _           => None
+      }
+      val opened =
+        if (paths.nonEmpty) paths
+        else if (dataDir.exists(!_.isDir)) dataDir.toSeq.map(_.toString)
+        else if (encoded.isEmpty) allRoots
+        else Nil
+      val schema = encoded.map(e => if (period) e.add(Collection.MonthCol, StringType) else e)
+      val reader = schema.fold(spark.read)(spark.read.schema)
+      val df =
+        try (if (period && opened.nonEmpty) reader.option("basePath", dataDir.get.toString)
+             else reader).parquet(opened: _*)
+        catch {
+          // a sidecar with NO data directory is a torn item (an
+          // interrupted operation on a crashed process) — name the
+          // repair instead of surfacing a raw path error
+          case e: org.apache.spark.sql.AnalysisException
+              if e.getCondition == "PATH_NOT_FOUND" && meta.nonEmpty =>
+            throw new GraftError(
+              s"item '${itemPath.name}' has a metadata sidecar but no data directory — " +
+                "an interrupted operation left it torn; run " +
+                "Collection.vacuum() (SQL: CALL <catalog>.system.vacuum) " +
+                s"to repair, then retry (${e.getMessage})")
+        }
+      if (paths.isEmpty && opened.nonEmpty) df.filter(lit(false)) else df
     }
 
     /** Whether the read resolves (any of) the LIVE item's directories:
@@ -134,6 +197,43 @@ private[graft] object ReadRoots {
     }
   }
 
+  /** Spark source filters as conjunctive planner predicates: the
+    * comparison, bounded-IN and null-probe shapes the period walker and
+    * the skip indexes bound. Anything else contributes no constraint —
+    * pruning only ever over-approximates. `a <=> v` with a non-null `v`
+    * selects exactly the rows `a = v` does. Attribute names arrive
+    * quoted when they are not plain identifiers (`` `my col` ``); a
+    * top-level one is unquoted to the stored column name. */
+  def predsOf(filters: Array[sources.Filter]): Seq[Filters.Pred] = {
+    def pred(a: String, op: String, v: Any) = Seq(Filters.Pred(
+      UnresolvedAttribute.parseAttributeName(a) match {
+        case Seq(name) => name
+        case _         => a
+      }, op, v))
+    filters.toSeq.flatMap {
+      case sources.And(l, r) => predsOf(Array(l, r))
+      case sources.EqualTo(a, v) if v != null            => pred(a, "==", v)
+      case sources.EqualNullSafe(a, v) if v != null      => pred(a, "==", v)
+      case sources.GreaterThan(a, v) if v != null        => pred(a, ">", v)
+      case sources.GreaterThanOrEqual(a, v) if v != null => pred(a, ">=", v)
+      case sources.LessThan(a, v) if v != null           => pred(a, "<", v)
+      case sources.LessThanOrEqual(a, v) if v != null    => pred(a, "<=", v)
+      case sources.In(a, vs) if vs.nonEmpty && !vs.contains(null) => pred(a, "in", vs.toSeq)
+      case sources.IsNull(a)    => pred(a, "isnull", null)
+      case sources.IsNotNull(a) => pred(a, "notnull", null)
+      case _ => Nil
+    }
+  }
+
+  /** An analyzed Catalyst condition as planner predicates: its
+    * top-level conjuncts, each translated the way Spark translates a
+    * filter it pushes to a source (`Literal op attribute` flipped,
+    * `InSet` as `In`, values as external JVM objects); a conjunct it
+    * cannot translate contributes no constraint. */
+  def conditionPreds(cond: Expression): Seq[Filters.Pred] =
+    predsOf(splitConjunctivePredicates(cond)
+      .flatMap(org.apache.spark.sql.GraftSessionBridge.translateFilter).toArray)
+
   /** `all` narrowed to the periods `preds` can touch, sorted, under the
     * zone rule above. `stats` is the target's `_period_stats`, or fresh
     * ones for the streaming source. */
@@ -141,23 +241,59 @@ private[graft] object ReadRoots {
                    preds: Seq[Filters.Pred],
                    stats: Map[String, Map[String, (Any, Any)]]): Seq[String] = {
     val sessionTz = ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val sound = if (t.layoutTz == sessionTz) preds else preds.filter(zoneFree(t, _))
-    Collection.candidatePeriods(all, conjunction(sound), t.indexCols.head, t.layout.get,
-      t.layoutTz, stats)
+    val bound = preds.map(rowBound(t, sessionTz))
+    val sound = if (t.layoutTz == sessionTz) bound else bound.filter(zoneFree(t, _))
+    Collection.candidatePeriods(all, sound, t.indexCols.head, t.layout.get, t.layoutTz, stats)
   }
 
-  /** Whether `p` prunes soundly in a session whose zone differs from
-    * the recorded one: only an instant bound (Timestamp / Instant) on
-    * an instant (TimestampType) index — both the row filter and the
-    * period key read it zone-free. A wall-clock bound (Date,
-    * LocalDateTime) is read by the row filter at the SESSION zone, an
-    * NTZ index compares against instants through the session zone, and
-    * `_period_stats` were recorded in the writer's zone. */
+  /** The index's stored type, when the sidecar records it. */
+  private def indexType(t: Target): Option[DataType] = {
+    val idx = t.indexCols.head
+    t.encoded.flatMap(_.fields.find(_.name.equalsIgnoreCase(idx))).map(_.dataType)
+  }
+
+  /** `p` with each wall-clock bound (Date, LocalDate, LocalDateTime) on
+    * a timestamp index replaced by the value the row filter compares
+    * against, with Spark's own conversion at the session zone: on an
+    * instant (TimestampType) index a date is cast to its midnight
+    * (`daysToMicros`) and a date-time through the NTZ→TIMESTAMP cast
+    * (`convertTz`); on an NTZ index a date is cast to its midnight wall
+    * time. Strict bounds then tighten by one microsecond, not one day.
+    * Other predicates pass unchanged. */
+  private def rowBound(t: Target, sessionTz: ZoneId)(p: Filters.Pred): Filters.Pred = {
+    val asRow: Any => Any = indexType(t) match {
+      case Some(TimestampType) => {
+        case d: java.sql.Date => DateTimeUtils.microsToInstant(
+          DateTimeUtils.daysToMicros(DateTimeUtils.fromJavaDate(d), sessionTz))
+        case d: java.time.LocalDate => DateTimeUtils.microsToInstant(
+          DateTimeUtils.daysToMicros(DateTimeUtils.localDateToDays(d), sessionTz))
+        case l: java.time.LocalDateTime => DateTimeUtils.microsToInstant(DateTimeUtils.convertTz(
+          DateTimeUtils.localDateTimeToMicros(l), sessionTz, ZoneOffset.UTC))
+        case v => v
+      }
+      case Some(TimestampNTZType) => {
+        case d: java.sql.Date       => d.toLocalDate.atStartOfDay()
+        case d: java.time.LocalDate => d.atStartOfDay()
+        case v => v
+      }
+      case _ => identity
+    }
+    if (!p.column.equalsIgnoreCase(t.indexCols.head)) p
+    else p.copy(value = p.value match {
+      case vs: Iterable[_] => vs.map(asRow)
+      case v               => asRow(v)
+    })
+  }
+
+  /** Whether `p` (after [[rowBound]]) prunes soundly in a session whose
+    * zone differs from the recorded one: only an instant bound
+    * (Timestamp / Instant) on an instant index — the row filter and
+    * the period key then read the same instant. An NTZ index compares
+    * against instants through the session zone, and `_period_stats`
+    * were recorded in the writer's zone. */
   private def zoneFree(t: Target, p: Filters.Pred): Boolean = {
     def instant(v: Any) = v.isInstanceOf[java.sql.Timestamp] || v.isInstanceOf[java.time.Instant]
-    val idx = t.indexCols.head
-    p.column.equalsIgnoreCase(idx) &&
-      t.encoded.exists(_.fields.exists(f => f.name.equalsIgnoreCase(idx) && f.dataType == TimestampType)) &&
+    p.column.equalsIgnoreCase(t.indexCols.head) && indexType(t).contains(TimestampType) &&
       (p.value match {
         case vs: Iterable[_] => vs.nonEmpty && vs.forall(instant)
         case v               => instant(v)
@@ -227,30 +363,5 @@ private[graft] object ReadRoots {
         SkipIndexes.prunedKeys(t.itemPath, () => fileMap.keys.toSeq, preds, schema, gen)
           .map(_.flatMap(fileMap.get))
     }
-  }
-
-  private def conjunction(preds: Seq[Filters.Pred]): Expression =
-    preds.map(expressionOf).reduceOption(And).getOrElse(Literal.TrueLiteral)
-
-  /** A predicate triple in the catalyst shape [[Collection.candidatePeriods]]
-    * walks; an op or value it cannot bound is `true` (no constraint).
-    * `Literal.create` types the external values (Timestamp / Instant /
-    * LocalDateTime / Date / numbers / strings) the way the walker's
-    * period and stats extraction expects. */
-  private def expressionOf(p: Filters.Pred): Expression = {
-    val a = UnresolvedAttribute(Seq(p.column))
-    def lit(v: Any): Expression = Literal.create(v)
-    try p.op match {
-      case "==" | "=" => EqualTo(a, lit(p.value))
-      case ">"        => GreaterThan(a, lit(p.value))
-      case ">="       => GreaterThanOrEqual(a, lit(p.value))
-      case "<"        => LessThan(a, lit(p.value))
-      case "<="       => LessThanOrEqual(a, lit(p.value))
-      case "in" => p.value match {
-        case vs: Iterable[_] => In(a, vs.toSeq.map(lit))
-        case v               => In(a, Seq(lit(v)))
-      }
-      case _ => Literal.TrueLiteral
-    } catch { case scala.util.control.NonFatal(_) => Literal.TrueLiteral }
   }
 }

@@ -2,7 +2,6 @@ package graft.store
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
-import org.json4s._
 
 /** Shared front door for the two per-file skip indexes
   * ([[BloomIndex]] equality, [[FileStatsIndex]] range): one recursive
@@ -105,31 +104,6 @@ private[graft] object SkipIndexes {
         .filterNot(f => f.startsWith("_") || f.startsWith("."))
         .map(f => s"${Collection.MonthCol}=$p/$f" -> d.resolve(f).toString)
     }.toMap
-
-  /** Period-granularity narrowing for `deleteWhere`'s discovery scan,
-    * through both indexes over one listing: a period survives iff it
-    * might hold a matching row under EVERY usable conjunct (bloom
-    * equality/IN; zonemap comparison). None leaves discovery's own
-    * pruning untouched. Each index lifts its own kept-FILE set to
-    * periods and the period sets intersect — slightly coarser than a
-    * per-file AND across the two indexes (a period can survive on
-    * different files per index), which only ever KEEPS more periods:
-    * safe for a delete's discovery, never under-deletes. */
-  private[store] def candidateDeletePeriods(
-      itemPath: SPath, dataDir: SPath,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      meta: Map[String, JValue],
-      encodedSchema: StructType): Option[Set[String]] = {
-    val once = new ListOnce(dataDir)
-    val byBloom =
-      BloomIndex.candidateDeletePeriods(itemPath, cond, meta, encodedSchema, once)
-    val byStats =
-      FileStatsIndex.candidateDeletePeriods(itemPath, cond, meta, encodedSchema, once)
-    (byBloom, byStats) match {
-      case (Some(a), Some(b)) => Some(a intersect b)
-      case (a, b)             => a.orElse(b)
-    }
-  }
 
   /** Rebuild every sidecar present on an item from its own recorded
     * knobs, keyed to `generation` (the committed generation captured

@@ -195,7 +195,6 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("deleteWhere discovery narrows to bloom-positive periods; IN spans them; never under-deletes") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions.col
     val c = tempCollection("bloom_delprune")
     c.write("item", monthlyData, indexCols = Seq("index"), monthlyLayout = true)
@@ -203,9 +202,7 @@ class BloomIndexSpec extends SparkSpec {
     // a key-equality predicate has NO index-column constraint: without
     // the bloom, discovery reads all 6 periods; with it, exactly k_10's
     def discParts(pred: org.apache.spark.sql.Column): Int =
-      c.deleteDiscoveryFrame("item", pred).queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }
-        .head.selectedPartitions.partitionCount
+      deletePeriodsOpened(c, "item", pred).size
     assert(discParts(col("key") === "k_10") == 1,
       "single-key discovery should read exactly the bloom-positive period")
     // an IN spanning two months keeps both; the delete lands exactly
@@ -637,11 +634,8 @@ class BloomIndexSpec extends SparkSpec {
     val c = tempCollection("bloom_shard_del")
     c.write("item", monthlyData, indexCols = Seq("index"), monthlyLayout = true)
     c.buildBloomIndex("item", Seq("key"), singleDocMaxBytes = 0L)
-    import org.apache.spark.sql.execution.FileSourceScanExec
     def discParts(pred: org.apache.spark.sql.Column): Int =
-      c.deleteDiscoveryFrame("item", pred).queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }
-        .head.selectedPartitions.partitionCount
+      deletePeriodsOpened(c, "item", pred).size
     assert(discParts(col("key") === "k_10") == 1,
       "sharded discovery should read exactly the bloom-positive period")
     assert(c.deleteWhere("item", col("key") === "k_10") == 1L)

@@ -143,7 +143,6 @@ class FileStatsIndexSpec extends SparkSpec {
   }
 
   test("range-predicate deleteWhere narrows discovery to zonemap-positive periods") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     import spark.implicits._
     val c = tempCollection("fstats_delprune")
     // seq grows WITH the month (50 per month over 6 months), so per-
@@ -158,9 +157,7 @@ class FileStatsIndexSpec extends SparkSpec {
     // seq is NOT the index column: without the zonemap, discovery for a
     // seq predicate reads all 6 periods; with it, exactly the covering ones
     def discParts(pred: org.apache.spark.sql.Column): Int =
-      c.deleteDiscoveryFrame("item", pred).queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }
-        .head.selectedPartitions.partitionCount
+      deletePeriodsOpened(c, "item", pred).size
     assert(discParts(col("seq") >= 250L) == 1,
       "range-delete discovery should read exactly the zonemap-positive period")
     assert(discParts(col("seq") >= 100L && col("seq") < 150L) == 1)

@@ -91,11 +91,18 @@ class MonthlyLayoutSpec extends SparkSpec {
     val itemPath = c.path.resolve("item").toString
     val prior = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    def periodsOf(files: Seq[String]) =
+      files.flatMap(_.split('/').find(_.startsWith(Collection.MonthCol + "=")))
+        .map(_.stripPrefix(Collection.MonthCol + "=")).toSet
     try {
-      // a Date bound casts at the SESSION zone's midnight (feb 29 15:00
-      // UTC, inside the UTC february period); a Timestamp bound is an
-      // instant at the UTC month start
+      // a Date bound casts at the SESSION zone's midnight (mar 1 → feb
+      // 29 15:00 UTC, inside the UTC february period; mar 2 → mar 1
+      // 15:00 UTC), a LocalDateTime bound at the session zone's wall
+      // time (mar 1 09:00 → the UTC month start); a Timestamp bound is
+      // an instant at the UTC month start
       for (bound <- Seq[Any](java.sql.Date.valueOf("2024-03-01"),
+                             java.sql.Date.valueOf("2024-03-02"),
+                             java.time.LocalDateTime.parse("2024-03-01T09:00:00"),
                              java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z")))) {
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.select("index", "value").collect().map(r => (r.getTimestamp(0), r.getDouble(1))).toSet
@@ -107,14 +114,36 @@ class MonthlyLayoutSpec extends SparkSpec {
         val v2 = spark.read.format("graft").load(itemPath).filter(col("index") >= lit(bound))
         val viaV2 = rows(v2)
         assert(viaV2 == want, s"V2 read with bound $bound: ${viaV2.size} rows, want ${want.size}")
-        // an instant bound maps to its period in the layout zone whatever
-        // the session zone, so it still prunes
-        if (bound.isInstanceOf[java.sql.Timestamp]) {
-          assertOnlyPeriod(item.inputFiles.toSeq, "2024-03")
-          assertOnlyPeriod(v2InputFiles(v2), "2024-03")
-        }
+        // every bound maps to the instant the row filter compares
+        // against, then to its period in the layout zone: both front
+        // doors open exactly the UTC periods holding matching rows
+        val touched = want.map { case (ts, _) =>
+          java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
+            .format(ts.toInstant.atZone(java.time.ZoneOffset.UTC)) }
+        assert(periodsOf(item.inputFiles.toSeq) == touched, s"Item read with bound $bound")
+        assert(periodsOf(v2InputFiles(v2)) == touched, s"V2 read with bound $bound")
       }
     } finally spark.conf.set("spark.sql.session.timeZone", prior)
+    cleanup(c)
+  }
+
+  test("a date bound on a timestamp index prunes at the midnight the row filter compares against") {
+    import spark.implicits._
+    // twelve-hourly rows across the january/february boundary, under an
+    // instant index and a wall-clock (NTZ) index
+    val c = tempCollection("date_bound")
+    val times = (0 until 8).map(h => java.time.LocalDateTime.parse("2024-01-30T00:00:00").plusHours(12L * h))
+    c.write("ts", times.map(t => (java.sql.Timestamp.valueOf(t), 1.0)).toDF("index", "value"),
+      monthlyLayout = true)
+    c.write("ntz", times.map(t => (t, 1.0)).toDF("index", "value"), monthlyLayout = true)
+    for (item <- Seq("ts", "ntz"); op <- Seq(">", ">=", "<", "<=");
+         bound <- Seq[Any](java.sql.Date.valueOf("2024-01-31"), java.time.LocalDate.parse("2024-02-01"))) {
+      // `index > DATE '2024-01-31'` keeps jan 31 12:00: a strict date
+      // bound tightens by one microsecond past midnight, not by a day
+      val pred = Filters.Pred("index", op, bound)
+      val want = c.item(item).data.filter(Filters.toColumn(pred)).count()
+      assert(c.item(item, filters = Seq(pred)).data.count() == want, s"$item index $op $bound")
+    }
     cleanup(c)
   }
 
@@ -305,21 +334,16 @@ class MonthlyLayoutSpec extends SparkSpec {
     cleanup(c)
   }
 
-  private def condOf(df: org.apache.spark.sql.DataFrame,
-                     pred: org.apache.spark.sql.Column) =
-    df.filter(pred).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.get
-
   test("candidatePeriods bounds the period interval from conjunctive index predicates only") {
     import org.apache.spark.sql.functions._
-    val utc = java.time.ZoneId.of("UTC")
+    // through the delete's path: the analyzed condition translated to
+    // source filters, then the read planner's period pruning
     val months = Seq("2024-01", "2024-02", "2024-03", "2024-04", "2024-05", "2024-06")
     val df = frame("2024-01-01", 10, 1.0)
     def ts(s: String) = lit(java.sql.Timestamp.valueOf(s))
     def cands(pred: org.apache.spark.sql.Column, layout: String = "monthly",
               periods: Seq[String] = months) =
-      Collection.candidatePeriods(periods, condOf(df, pred), "index", layout, utc)
+      deleteCandidates(df, pred, periods, layout)
     // range lower bound (and a non-index conjunct contributes nothing)
     assert(cands(col("index") >= ts("2024-03-10 00:00:00") && col("value") === 9.0)
       == Seq("2024-03", "2024-04", "2024-05", "2024-06"))
@@ -356,24 +380,28 @@ class MonthlyLayoutSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2024-02-10 00:00:00"),
       java.sql.Timestamp.valueOf("2024-04-02 00:00:00")))
       == Seq("2024-02", "2024-03", "2024-04"))
-    // null-safe equality pins like equality
+    // null-safe equality pins like equality, either operand order
     assert(cands(col("index") <=> ts("2024-03-03 00:00:00")) == Seq("2024-03"))
+    assert(cands(ts("2024-03-03 00:00:00") <=> col("index")) == Seq("2024-03"))
+    // literal on the left of a strict bound tightens like its mirror
+    assert(cands(ts("2024-02-01 00:00:00") > col("index")) == Seq("2024-01"))
+    assert(cands(ts("2024-03-31 23:59:59.999999") < col("index"))
+      == Seq("2024-04", "2024-05", "2024-06"))
+    // a negation bounds nothing, alone or inside a conjunction
+    assert(cands(!(col("index") < ts("2024-03-01 00:00:00"))) == months)
+    assert(cands(!(col("index") < ts("2024-03-01 00:00:00")) &&
+      col("index") < ts("2024-02-15 00:00:00")) == Seq("2024-01", "2024-02"))
   }
 
   test("deleteWhere's discovery scan partition-prunes on index range predicates") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val c = tempCollection("delete_pruned")
     c.write("item", frame("2024-01-01", 180, 1.0), monthlyLayout = true) // jan-jun
     val pred = col("index") >= lit(java.sql.Timestamp.valueOf("2024-05-01 00:00:00")) &&
       dayofmonth(col("index")) === 3
-    val disc = c.deleteDiscoveryFrame("item", pred)
-    val scan = disc.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f
-    }.head
-    assert(scan.partitionFilters.nonEmpty, "expected a partition filter on the discovery scan")
-    assert(scan.selectedPartitions.partitionCount == 2, // may + june only
-      s"expected 2 pruned partitions, got ${scan.selectedPartitions.partitionCount}")
+    val opened = deletePeriodsOpened(c, "item", pred)
+    assert(opened == Set("__month=2024-05", "__month=2024-06"), // may + june only
+      s"expected 2 pruned periods, got $opened")
     // the delete itself: only may/june rewritten, earlier months untouched
     val before = monthDirs(c, "item")
     assert(c.deleteWhere("item", pred) == 2L) // may 3 + june 3
@@ -390,7 +418,6 @@ class MonthlyLayoutSpec extends SparkSpec {
 
   test("per-period stats sidecar prunes deleteWhere on non-index range predicates") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val c = tempCollection("period_stats")
     // value grows with the month (jan≈1.x, feb≈2.x, ...), so a range
     // predicate on value maps cleanly onto a period subset
@@ -405,11 +432,8 @@ class MonthlyLayoutSpec extends SparkSpec {
     assert(jan == Seq(1.01, 1.31), jan.toString)
     // a value-range predicate prunes the discovery scan to may+june
     val pred = col("value") >= 5.0
-    val scan = c.deleteDiscoveryFrame("item", pred).queryExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f }.head
-    assert(scan.partitionFilters.nonEmpty)
-    assert(scan.selectedPartitions.partitionCount == 2,
-      s"expected 2 stats-pruned partitions, got ${scan.selectedPartitions.partitionCount}")
+    val opened = deletePeriodsOpened(c, "item", pred)
+    assert(opened.size == 2, s"expected 2 stats-pruned periods, got $opened")
     val before = monthDirs(c, "item")
     assert(c.deleteWhere("item", pred) == 31 + 28) // all of may + june 1-28 (180 days from jan 1)
     for (m <- Seq("2024-01", "2024-02", "2024-03", "2024-04"))
@@ -433,7 +457,6 @@ class MonthlyLayoutSpec extends SparkSpec {
 
   test("date, timestamp_ntz, and string stats columns prune the discovery scan") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val c = tempCollection("period_stats_typed")
     // d (DateType) and nt (NTZ) trail the index by 10 days; s groups by
     // month — all three correlate with the period so ranges prune
@@ -453,9 +476,7 @@ class MonthlyLayoutSpec extends SparkSpec {
     val janNt = jan("nt").asInstanceOf[Seq[Double]]
     assert(janNt.head == java.time.LocalDate.parse("2024-01-11").toEpochDay * 86400e6)
     def prunedCount(pred: org.apache.spark.sql.Column): Int =
-      c.deleteDiscoveryFrame("item", pred).queryExecution.executedPlan
-        .collect { case f: FileSourceScanExec => f }.head
-        .selectedPartitions.partitionCount
+      deletePeriodsOpened(c, "item", pred).size
     // date range: period P records d ∈ [P.start+10, P.end+10]; a bound
     // of may 10 keeps apr (max may 10), may, jun — 3 of 6
     assert(prunedCount(col("d") >= lit(java.sql.Date.valueOf("2024-05-10"))) == 3)
@@ -504,16 +525,15 @@ class MonthlyLayoutSpec extends SparkSpec {
     val orig = spark.conf.get(tzKey)
     try {
       spark.conf.set(tzKey, "America/New_York")
-      // discovery pruning is forfeited (full period list), the delete
-      // itself stays correct — instants compare tz-independently
-      val disc = c.deleteDiscoveryFrame("item",
-        col("index") >= lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")))
-      val scan = disc.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.head
-      assert(scan.partitionFilters.isEmpty,
-        "mismatched session tz must not partition-prune the discovery scan")
+      // an instant bound maps to its period in the recorded zone
+      // whatever the session zone, so discovery opens only 2024-03
+      // onward; the deletes stay exact — instants compare
+      // tz-independently
+      val march = col("index") >= lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))
+      assert(deletePeriodsOpened(c, "item", march) == Set("__month=2024-03"))
       assert(c.deleteWhere("item", dayofmonth(col("index")) === 7) == 3L)
+      assert(c.deleteWhere("item", march) == 29L) // mar 1-30 without the 7th
+      assert(c.item("item").data.count() == 90 - 3 - 29)
       // name-dropping periods under the wrong zone could destroy
       // post-cutoff rows: typed rejection, like appends
       val e = intercept[graft.store.ValidationError](c.expireBefore("item",
@@ -552,6 +572,36 @@ class MonthlyLayoutSpec extends SparkSpec {
     c.convertLayout("item", Some("daily"))
     assert(monthDirs(c, "item").size == 29 + 30) // feb 1-29 + mar 1-30 (90 days started jan 1)
     cleanup(c)
+  }
+
+  test("a stale handle's mutations plan from the sidecar they fence on, not its metadata cache") {
+    import spark.implicits._
+    // two handles on one store root; the first one's TTL cache holds
+    // the layout it read before the second converted the item
+    val root = Files.createTempDirectory("graft_test_stale_handles")
+    val a = GraftStore(spark, "s", root).collection("c")
+    val b = GraftStore(spark, "s", root).collection("c")
+    def rows(days: Range) = days.map { i =>
+      (java.sql.Timestamp.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i).atStartOfDay()),
+        i.toDouble)
+    }
+    def stored(item: String) = b.item(item).data.as[(java.sql.Timestamp, Double)].collect().toSet
+    // deleteWhere after the other handle converted flat → monthly
+    a.write("flat", rows(0 until 90).toDF("index", "value"))
+    assert(a.metadata("flat").get("_layout").map(Meta.unjv).contains("flat"))
+    b.convertLayout("flat", Some("monthly"))
+    assert(a.deleteWhere("flat", col("value") < 10.0) == 10L)
+    assert(stored("flat") == rows(10 until 90).toSet)
+    // append after the other handle converted monthly → flat
+    a.write("monthly", rows(0 until 90).toDF("index", "value"), monthlyLayout = true)
+    assert(a.metadata("monthly").get("_layout").map(Meta.unjv).contains("monthly"))
+    b.convertLayout("monthly")
+    val may = (java.sql.Timestamp.valueOf("2024-05-10 00:00:00"), 999.0)
+    a.append("monthly", Seq(may).toDF("index", "value"))
+    assert(stored("monthly") == rows(0 until 90).toSet + may)
+    assert(!b.path.resolve("monthly").resolve(Item.DataDir)
+      .resolve(Collection.MonthCol + "=2024-05").exists, "a flat item must not grow a period dir")
+    cleanup(a)
   }
 
   test("convertLayout preserves a manifest snapshot taken on the OLD layout") {

@@ -131,9 +131,10 @@ class PropertySpec extends SparkSpec {
     // the months holding predicate-matching rows must ALWAYS be a
     // subset of the driver-derived candidate set (over-approximation
     // is allowed and expected; under-approximation silently
-    // under-deletes, the one unforgivable outcome).
+    // under-deletes, the one unforgivable outcome). The candidates come
+    // through the delete's path: the analyzed condition translated to
+    // source filters, then the read planner's period pruning.
     val rng = new Random(11)
-    val utc = java.time.ZoneId.of("UTC")
     val start = java.time.LocalDate.parse("2024-01-01")
     val rows = (0 until 180).map { i =>
       (java.sql.Timestamp.valueOf(start.plusDays(i).atStartOfDay()),
@@ -150,32 +151,87 @@ class PropertySpec extends SparkSpec {
         m -> Map("value" -> (rs.map(_._2).min, rs.map(_._2).max)) }
     def randTs() = java.sql.Timestamp.valueOf(
       start.plusDays(rng.nextInt(200) - 10).atStartOfDay())
-    def randTerm(): org.apache.spark.sql.Column = rng.nextInt(7) match {
-      case 0 => col("index") >= lit(randTs())
-      case 1 => col("index") < lit(randTs())
-      case 2 => col("index") === lit(randTs())
-      case 3 => col("value") >= lit(rng.nextInt(40).toDouble)
-      case 4 => col("value") < lit(rng.nextInt(40).toDouble)
-      case 5 => dayofmonth(col("index")) === lit(rng.nextInt(28) + 1) // unboundable
-      case 6 => col("index").isin(randTs(), randTs())
-    }
-    def randPred(depth: Int): org.apache.spark.sql.Column =
-      if (depth == 0) randTerm()
-      else if (rng.nextBoolean()) randPred(depth - 1) && randPred(depth - 1)
-      else randPred(depth - 1) || randPred(depth - 1) // must force full widening
-    for (i <- 1 to 40) {
-      val pred = randPred(rng.nextInt(3))
-      val cond = df.filter(pred).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.get
-      val cands = Collection.candidatePeriods(
-        months, cond, "index", "monthly", utc, stats).toSet
+    // the first 40 cases draw from the first seven terms; the next 40
+    // add literal-on-left, null-safe equality and negated terms
+    def randTerm(extended: Boolean): org.apache.spark.sql.Column =
+      rng.nextInt(if (extended) 10 else 7) match {
+        case 0 => col("index") >= lit(randTs())
+        case 1 => col("index") < lit(randTs())
+        case 2 => col("index") === lit(randTs())
+        case 3 => col("value") >= lit(rng.nextInt(40).toDouble)
+        case 4 => col("value") < lit(rng.nextInt(40).toDouble)
+        case 5 => dayofmonth(col("index")) === lit(rng.nextInt(28) + 1) // unboundable
+        case 6 => col("index").isin(randTs(), randTs())
+        case 7 => if (rng.nextBoolean()) lit(randTs()) > col("index")
+                  else lit(rng.nextInt(40).toDouble) <= col("value")
+        case 8 => if (rng.nextBoolean()) col("index") <=> lit(randTs())
+                  else lit(rng.nextInt(40).toDouble) <=> col("value")
+        case 9 => !randTerm(extended)
+      }
+    def randPred(depth: Int, extended: Boolean): org.apache.spark.sql.Column =
+      if (depth == 0) randTerm(extended)
+      else if (rng.nextBoolean()) randPred(depth - 1, extended) && randPred(depth - 1, extended)
+      else randPred(depth - 1, extended) || randPred(depth - 1, extended) // must force full widening
+    for (i <- 1 to 80) {
+      val pred = randPred(rng.nextInt(3), extended = i > 40)
+      val cands = deleteCandidates(df, pred, months, stats = stats).toSet
       val touched = df.filter(pred)
         .select(date_format(col("index"), "yyyy-MM")).distinct()
         .as[String].collect().toSet
       assert(touched.subsetOf(cands),
         s"case $i UNSOUND: pred=$pred touched=$touched cands=$cands")
     }
+  }
+
+  test("property: deleteWhere on an indexed monthly item is exact against a plain Spark filter") {
+    // a monthly item with a bloom index (key), a zonemap (seq) and
+    // declared stats (value): every delete discovers through the read
+    // planner — period interval, stats and both skip indexes — so each
+    // of 8 random predicates must remove exactly the rows a plain
+    // filter over the modelled rows selects, and leave the rest
+    val rng = new Random(29)
+    val start = java.time.LocalDate.parse("2024-01-01")
+    val rows = (0 until 180).map { i =>
+      (java.sql.Timestamp.valueOf(start.plusDays(i).atStartOfDay()),
+        s"k_${i % 45}", i.toLong, (i % 37).toDouble)
+    }
+    val c = tempCollection("prop_delete_exact")
+    c.write("item", rows.toDF("index", "key", "seq", "value"), monthlyLayout = true,
+      statsColumns = Seq("value"))
+    c.buildBloomIndex("item", Seq("key"))
+    c.buildFileStatsIndex("item", Seq("seq"))
+    def randTs() = lit(java.sql.Timestamp.valueOf(
+      start.plusDays(rng.nextInt(200) - 10).atStartOfDay()))
+    def randKey() = lit(s"k_${rng.nextInt(50)}")
+    def randTerm(): org.apache.spark.sql.Column = rng.nextInt(10) match {
+      case 0 => col("index") >= randTs()
+      case 1 => col("index") < randTs()
+      case 2 => col("key") === randKey()
+      case 3 => col("key").isin(s"k_${rng.nextInt(50)}", s"k_${rng.nextInt(50)}")
+      case 4 => col("seq") >= lit(rng.nextInt(190).toLong)
+      case 5 => col("value") < lit(rng.nextInt(40).toDouble)
+      case 6 => randTs() > col("index") // literal on the left
+      case 7 => col("key") <=> randKey()
+      case 8 => !(col("seq") < lit(rng.nextInt(190).toLong))
+      case 9 => dayofmonth(col("index")) === lit(rng.nextInt(28) + 1) // unboundable
+    }
+    def randPred(depth: Int): org.apache.spark.sql.Column =
+      if (depth == 0) randTerm()
+      else if (rng.nextBoolean()) randPred(depth - 1) && randPred(depth - 1)
+      else randPred(depth - 1) || randPred(depth - 1)
+    def asSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("index", "key", "seq", "value")
+        .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
+    var model = asSet(rows.toDF("index", "key", "seq", "value"))
+    for (i <- 1 to 8) {
+      val pred = randPred(rng.nextInt(3))
+      val current = model.toSeq.toDF("index", "key", "seq", "value")
+      val want = current.filter(pred).count()
+      model = asSet(current.filter(!pred))
+      assert(c.deleteWhere("item", pred) == want, s"case $i: pred=$pred")
+      assert(asSet(c.item("item").data) == model, s"case $i: pred=$pred")
+    }
+    cleanup(c)
   }
 
   test("property: interleave_bits is a bijection — deinterleave recovers every rank") {

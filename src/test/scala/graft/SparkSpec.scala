@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{Collection, FsOps, GraftStore}
+import graft.store.{Collection, FsOps, GraftStore, ReadRoots, SPath}
 
 /** Shared one-per-JVM SparkSession + temp-store helpers for all suites. */
 object SparkTestSession {
@@ -49,4 +49,31 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def cleanup(c: Collection): Unit =
     c.path.parent.parent.deleteRecursively()
+
+  /** Period dirs (`__month=<p>`) a `deleteWhere(pred)` on `item` opens
+    * to find its matches — counted from the files its discovery scan
+    * lists, not from plan nodes. */
+  def deletePeriodsOpened(c: Collection, item: String,
+                          pred: org.apache.spark.sql.Column): Set[String] =
+    c.deleteScan(ReadRoots.resolve(spark, c.path.resolve(item), None), pred).inputFiles
+      .flatMap(_.split('/').find(_.startsWith(Collection.MonthCol + "="))).toSet
+
+  /** The periods of `all` a delete of `pred` over rows shaped like `df`
+    * keeps: the analyzed condition translated the way the delete
+    * translates it, then pruned by the read planner, for an item laid
+    * out under `layout` in the session zone with index `index`. */
+  def deleteCandidates(df: DataFrame, pred: org.apache.spark.sql.Column,
+                       all: Seq[String], layout: String = "monthly",
+                       stats: Map[String, Map[String, (Any, Any)]] = Map.empty): Seq[String] = {
+    import org.json4s.JString
+    val cond = df.filter(pred).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.get
+    val unused = SPath.local(java.nio.file.Paths.get("unused"))
+    val t = new ReadRoots.Target(spark, unused, unused, ReadRoots.PinnedPeriods(Nil),
+      pinned = true, Map("_layout" -> JString(layout),
+        "_layout_tz" -> JString(spark.conf.get("spark.sql.session.timeZone")),
+        "schema_json_encoded" -> JString(df.schema.json)))
+    ReadRoots.prunePeriods(spark, t, all, ReadRoots.conditionPreds(cond), stats)
+  }
 }
