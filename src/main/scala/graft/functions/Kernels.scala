@@ -215,6 +215,20 @@ object Kernels {
     acc
   }
 
+  /** The first 8 bytes of `b` as a big-endian long, zero-padded, with
+    * the sign bit flipped so signed long order equals unsigned
+    * byte-lexicographic order: monotone, not strict, in Spark's binary
+    * ordering (values sharing an 8-byte prefix map to one long). */
+  def sortPrefix(b: Array[Byte]): Long = {
+    var v = 0L
+    var i = 0
+    while (i < 8) {
+      v = (v << 8) | (if (i < b.length) b(i) & 0xffL else 0L)
+      i += 1
+    }
+    v ^ Long.MinValue
+  }
+
   /** Morton/Z-order interleave: bit i of dimension j lands at position
     * i·d + j, so a sort by the result alternates locality across ALL
     * dimensions (the space-filling-curve layout multi-column row-group

@@ -425,6 +425,16 @@ object expressions {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
+  /** [[Kernels.sortPrefix]] of a binary value: the 8-byte order key
+    * the flat layout buckets string and binary indexes by. */
+  case class SortPrefix(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = LongType
+    override def nullSafeEval(b: Any): Any = Kernels.sortPrefix(b.asInstanceOf[Array[Byte]])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.sortPrefix($c)")
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
   // ------------------------------------------------------ Column sugar
 
   def shingle_set(tokens: Column, k: Int): Column = column(ShingleSet(expression(tokens), k))
@@ -452,4 +462,5 @@ object expressions {
     column(MarkerCounts(expression(tokens), profiles))
   def interleave_bits(ranks: Column, bits: Int): Column =
     column(InterleaveBits(expression(ranks), bits))
+  def sort_prefix(bytes: Column): Column = column(SortPrefix(expression(bytes)))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.store.Partitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +16,11 @@ import org.apache.spark.sql.functions._
   * Plan shape: ONE stats pass localizes per-column min/max
   * (broadcast-sized scalars) → per-row rank scaling + the
   * [[graft.functions.expressions.interleave_bits]] codegen kernel
-  * (no shuffle) → `repartitionByRange` on the Morton value (one
-  * range-exchange — Spark samples boundaries, the only extra cost) →
-  * `sortWithinPartitions` so parquet writes row groups in curve order.
+  * (no shuffle) → the store's flat layout on the Morton value
+  * ([[graft.store.Partitioner.layout]]: one narrow quantile scan of
+  * the curve value, one carrier exchange, `sortWithinPartitions`), so
+  * files cover disjoint curve ranges and parquet writes row groups in
+  * curve order.
   *
   * Rank scaling is linear min-max (documented trade-off: heavy skew
   * concentrates ranks — the rank-based variant would spend a window
@@ -45,15 +48,12 @@ object ZOrder {
     graft.functions.expressions.interleave_bits(array(ranks: _*), bits)
   }
 
-  /** Re-layout `df` along the Z-curve of `cols`. Write the result with
-    * any parquet/store sink: each output file covers a tight
-    * hyper-rectangle in `cols` space, so later scans with predicates
-    * on ANY subset of the clustered columns prune at file/row-group
-    * granularity. `bits` per dimension (cols.size · bits ≤ 63). */
-  def cluster(df: DataFrame,
-              cols: Seq[String],
-              bits: Int = 16,
-              npartitions: Option[Int] = None): DataFrame = {
+  /** The Morton value column [[withCurve]] adds. */
+  val CurveCol = "__z"
+
+  /** `df` with its Morton value in [[CurveCol]], after ONE stats pass
+    * over `cols` (`bits` per dimension, cols.size · bits ≤ 63). */
+  def withCurve(df: DataFrame, cols: Seq[String], bits: Int): DataFrame = {
     require(cols.size >= 2, "zorder needs at least two columns")
     require(cols.size * bits <= 63, s"${cols.size} cols × $bits bits exceeds 63")
     val aggs = cols.flatMap(c => Seq(min(col(c).cast("double")).as(s"lo_$c"),
@@ -64,10 +64,21 @@ object ZOrder {
       val hi = Option(statsRow.getAs[Any](s"hi_$c")).fold(0.0)(_.asInstanceOf[Double])
       c -> (lo, hi)
     }.toMap
+    df.withColumn(CurveCol, morton(cols, stats, bits))
+  }
+
+  /** Re-layout `df` along the Z-curve of `cols`. Write the result with
+    * any parquet/store sink: each output file covers a tight
+    * hyper-rectangle in `cols` space, so later scans with predicates
+    * on ANY subset of the clustered columns prune at file/row-group
+    * granularity. `bits` per dimension (cols.size · bits ≤ 63). */
+  def cluster(df: DataFrame,
+              cols: Seq[String],
+              bits: Int = 16,
+              npartitions: Option[Int] = None): DataFrame = {
+    val z = withCurve(df, cols, bits)
     val n = npartitions.getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    df.withColumn("__z", morton(cols, stats, bits))
-      .repartitionByRange(n, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
+    Partitioner.layout(z, Seq(CurveCol), n, Partitioner.planFlat(z, CurveCol, n).cuts)
+      .drop(CurveCol)
   }
 }

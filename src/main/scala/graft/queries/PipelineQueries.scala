@@ -1976,7 +1976,7 @@ object PipelineQueries {
     * with a box predicate on BOTH columns and aggregated. The oracle
     * runs the same scan on the RAW table — a green hash proves the
     * re-layout preserves content exactly (no row lost/duplicated
-    * through rank scaling, range exchange, or curve sort). The pruning
+    * through rank scaling, the layout exchange, or curve sort). The pruning
     * benefit is asserted quantitatively in OperatorsSpec: per-file
     * spans shrink on both clustered columns vs the natural layout. */
   def layoutZorderScan(s: SparkSession, dir: String): DataFrame = {

@@ -991,64 +991,24 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     if (isTime && !Partitioner.isTemporal(encoded, indexCols.head))
       throw new ValidationError("time layouts require a timestamp/date index column")
 
-    // The index stats feed two consumers: the auto layout decision
-    // (which needs them BEFORE the write, but only for a temporal
-    // index — a non-temporal index always falls to size-based) and the
-    // metadata sidecar. When a pre-write planning scan runs it is ONE
-    // narrow aggregation (index column only) that ALSO collects the
-    // quantile cuts for the bounds-path exchange — replacing the range
-    // exchange's sampling re-execution of the full write plan (guide
-    // §1.4: one pass, not three). When no planning scan runs at all
-    // (single-partition or unsupported-dtype flat writes, time
-    // layouts), the stats are OBSERVED during the commit's own parquet
-    // job as before.
-    // The input plan must be DETERMINISTIC: a planning scan is a
-    // separate execution from the staging job, so the sidecar's
-    // _rows/min/max and the cuts describe the rows THAT execution saw.
-    // A non-deterministic input (unseeded sample, rand(), a source that
-    // changes between reads) would publish stats of rows never written;
-    // the cuts only skew balance, but the stats feed later appends'
-    // layout decisions.
-    val flatKey: Option[org.apache.spark.sql.Column] =
-      if (isTime || indexCols.size != 1) None
-      else Partitioner.sortKeyExpr(encoded, indexCols.head)
-    val needPreStats = !isTime && npartitions.isEmpty &&
-      Partitioner.isTemporal(encoded, indexCols.head)
-    val prePlan: Option[Partitioner.FlatPlan] =
-      if (needPreStats) Some(Partitioner.planFlat(encoded, indexCols.head, flatKey))
-      else None
-    val (n, strategy) =
-      if (isTime) (0, Partitioner.TimeBased)
-      else npartitions match {
-        case Some(k) => (k, Partitioner.SizeBased)
-        case None    => Partitioner.decide(Partitioner.estimatedBytes(encoded),
-          prePlan.map(_.stats).getOrElse(Partitioner.IndexStats(0, None, None)))
-      }
-    // flat multi-partition writes that skipped the decision scan still
-    // profit from bounds: one narrow cuts+stats job replaces the 1-2
-    // sampling jobs that decode every column
-    val plan: Option[Partitioner.FlatPlan] = prePlan.orElse {
-      if (!isTime && n > 1 && n <= Partitioner.MaxBoundsPartitions &&
-          flatKey.isDefined)
-        Some(Partitioner.planFlat(encoded, indexCols.head, flatKey))
-      else None
-    }
-    val preStats: Option[Partitioner.IndexStats] = plan.map(_.stats)
-    val laidOut0 =
-      if (isTime) withTimeLayout(encoded, indexCols, monthlySalt, layoutName)
-      else Partitioner.layout(encoded, indexCols, n, plan.flatMap(_.cuts))
-    val (laidOut, observed) = preStats match {
-      case Some(s) => (laidOut0, () => s)
-      case None    => observeStats(laidOut0, indexCols.head)
-    }
+    // A flat layout plans from ONE narrow index-column scan before the
+    // write ([[flatPlan]]): it collects the bounds of a multi-file
+    // layout and, for a temporal index under the auto decision, the
+    // stats the decision needs. The sidecar's stats are OBSERVED during
+    // the commit's own parquet job, so they describe the rows written;
+    // a non-deterministic input (unseeded sample, rand()) re-executed
+    // by the planning scan only skews its bounds, i.e. file balance.
+    val (laidOut0, layoutMeta) =
+      if (isTime) (withTimeLayout(encoded, indexCols, monthlySalt, layoutName),
+        Meta.obj("_partitions" -> 0, "_partition_strategy" -> Partitioner.TimeBased.name))
+      else flatPlan(encoded, indexCols, None, npartitions)
+    val (laidOut, observed) = observeStats(laidOut0, indexCols.head)
     // evaluated by publish() AFTER the parquet job ran (meta is by-name)
     def stats: Partitioner.IndexStats = observed()
 
     def extra = Meta.obj(
       "index_names" -> indexCols,
       "index_dtypes" -> indexCols.map(c => indexed.schema(c).dataType.simpleString),
-      "_partitions" -> n,
-      "_partition_strategy" -> strategy.name,
       "_layout" -> layoutName,
       // period keys were derived via date_format in THIS session's tz;
       // recorded so read-side pruning resolves instants in the same
@@ -1063,7 +1023,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       // fallback serves a frame dataRestored can invert exactly like a
       // non-empty read (schema_json above is the PRE-encode logical
       // schema, kept for API introspection)
-      "schema_json_encoded" -> encoded.schema.json) ++ statsMeta(stats) ++
+      "schema_json_encoded" -> encoded.schema.json) ++ layoutMeta ++ statsMeta(stats) ++
       (if (allMarkers.isEmpty) Map.empty
        else Map("_type_info" -> Codecs.markersToMeta(allMarkers))) ++
       (if (statsColumns.isEmpty) Map.empty
@@ -1225,18 +1185,32 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       (indexed, () => { marked.unpersist(blocking = false); () })
     }
 
-  /** Flat re-lay for maintenance rewrites (rebalance, convert-to-flat,
-    * rename-column, purge-dropped): bounds-path layout with cuts from
-    * ONE narrow index-column scan of the item read — replaces the
-    * sampled range exchange's full-width re-read of the item (guide
-    * §1.4); unsupported index dtypes keep the sampled exchange. */
-  private def flatRelayout(df: DataFrame, idx: Seq[String], n: Int): DataFrame = {
-    val cuts =
-      if (n > 1 && n <= Partitioner.MaxBoundsPartitions && idx.size == 1)
-        Partitioner.sortKeyExpr(df, idx.head)
-          .flatMap(k => Partitioner.planFlat(df, idx.head, Some(k)).cuts)
-      else None
-    Partitioner.layout(df, idx, n, cuts)
+  /** The one flat layout plan — write, append, and every flat rewrite
+    * (rebalance, convert-to-flat, rename, purge, z-order): `df` laid
+    * out over `npartitions` files, or over the count
+    * [[Partitioner.decide]] picks from `df`'s Catalyst size estimate
+    * and, for a temporal index, `stats` (the caller's, from the
+    * sidecar; the planning scan's when absent). Files are sorted with
+    * disjoint, ascending ranges of the leading index column
+    * ([[Partitioner.layout]]), bounded by the quantile cuts of ONE
+    * narrow index-column scan of `scanned` (default `df`), run only
+    * when the decision needs its stats or the layout has more than one
+    * file. Returns the laid-out frame and its `_partitions` /
+    * `_partition_strategy` sidecar keys. */
+  private def flatPlan(df: DataFrame, idx: Seq[String],
+                       stats: Option[Partitioner.IndexStats], npartitions: Option[Int],
+                       scanned: Option[DataFrame] = None,
+                       dedupRows: Boolean = false): (DataFrame, Map[String, JValue]) = {
+    lazy val plan = Partitioner.planFlat(scanned.getOrElse(df), idx.head,
+      npartitions.getOrElse(Partitioner.MaxPartitions))
+    val (n, strategy) = npartitions match {
+      case Some(k) => (k, Partitioner.SizeBased)
+      case None => Partitioner.decide(Partitioner.estimatedBytes(df), stats.getOrElse(
+        if (Partitioner.isTemporal(df, idx.head)) plan.stats
+        else Partitioner.IndexStats(0L, None, None)))
+    }
+    (Partitioner.layout(df, idx, n, if (n > 1) plan.cuts else Nil, dedupRows),
+      Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name))
   }
 
   /** `df` with its row count (and, for a temporal index, the index
@@ -1682,8 +1656,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * deletes its staging dir and commits nothing). A temporal index
     * adds one batch-only stats scan, since the time-based layout
     * decision needs the batch span first; a multi-file layout adds one
-    * narrow (item ∪ batch) index scan for its bounds
-    * ([[Partitioner.planAppend]]). Shuffle budget: the layout exchange,
+    * narrow (item ∪ batch) index-column scan for its bounds, whatever
+    * the index dtype ([[flatPlan]]). Shuffle budget: the layout exchange,
     * which clusters on the index, so D1 dedups behind it without a
     * shuffle of its own ([[Partitioner.layout]]), plus, under
     * KeepFirst/KeepLast, the anti-join on the index (broadcast when the
@@ -1771,13 +1745,13 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
             s"new ${newDf.columns.sorted.mkString(",")}")
     }
 
-    val temporal = Partitioner.isTemporal(newDf, idx.head)
     // A time-based layout decision needs the batch's span before the
     // layout: one batch-only scan. Every other append observes the
     // batch stats on the one branch of the combined plan that carries
     // each raw batch row exactly once, during the staging job.
     val preStats =
-      if (temporal && npartitions.isEmpty) Some(Partitioner.computeStats(newDf, idx.head))
+      if (!monthly && npartitions.isEmpty && Partitioner.isTemporal(newDf, idx.head))
+        Some(Partitioner.computeStats(newDf, idx.head))
       else None
     if (preStats.exists(_.rows == 0)) return
     val (carried, batchStats) = preStats match {
@@ -1797,26 +1771,20 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
 
     // Layout decision WITHOUT executing the combined plan: Catalyst's
     // size estimate, plus, for a temporal index, the stored item stats
-    // (sidecar) merged with the batch's. A non-temporal index always
-    // lays out by size. Bounds for a multi-file layout come from one
-    // narrow (item ∪ batch) index scan; the sampled range exchange
-    // would re-execute the combined dedup plan to learn them (guide
-    // §1.4).
-    val prevStats = t.indexStats.getOrElse(Partitioner.computeStats(old, idx.head))
-    val (n, strategy) = npartitions match {
-      case Some(k) => (k, Partitioner.SizeBased)
-      case None    => Partitioner.decide(Partitioner.estimatedBytes(combined),
-        preStats.fold(Partitioner.IndexStats(0, None, None))(prevStats.merge))
-    }
-    val cuts =
-      if (monthly || idx.size != 1 || n <= 1 || n > Partitioner.MaxBoundsPartitions) None
-      else Partitioner.planAppend(old, newDf, idx.head)
+    // (sidecar) merged with the batch's. Bounds for a multi-file layout
+    // come from one narrow (item ∪ batch) index scan: an upper-bound
+    // distribution of the combined plan's output (dedup only removes
+    // rows), so the combined dedup plan runs once, in the staging job
+    // (guide §1.4).
     // D1 (reference collection.py:520): identical FULL rows collapse;
     // same-index-different-value rows survive (regression
     // tests/test_append.py:218-234).
-    val laidOut =
-      if (monthly) withTimeLayout(combined, idx, t.salt, t.layout.get, dedupRows = true)
-      else Partitioner.layout(combined, idx, n, cuts, dedupRows = true)
+    val (laidOut, layoutMeta) =
+      if (monthly) (withTimeLayout(combined, idx, t.salt, t.layout.get, dedupRows = true),
+        Map.empty[String, JValue])
+      else flatPlan(combined, idx, preStats.flatMap(b => t.indexStats.map(_.merge(b))),
+        npartitions, Some(old.select(idx.head).unionByName(newDf.select(idx.head))),
+        dedupRows = true)
 
     val staged = stage(item, laidOut, monthly)
     val batch = batchStats()
@@ -1824,10 +1792,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       staged.deleteRecursively()
       return
     }
-    val stats = prevStats.merge(batch)
-    val prevMeta = storedMeta ++
-      Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name) ++
-      statsMeta(stats) ++
+    // a sidecar without stats (none this store writes) stays without
+    val prevMeta = storedMeta ++ layoutMeta ++
+      t.indexStats.fold(Map.empty[String, JValue])(s => statsMeta(s.merge(batch))) ++
       // a full rewrite re-derives every period key in THIS session's
       // tz — record it, or later sessions would prune against dirs
       // keyed in a zone the sidecar no longer describes
@@ -1941,10 +1908,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
 
     val combined = combineOnIndex(item, oldTouched, newDf, newDf, idx, duplicateHandling)
 
-    val prevStats = t.indexStats.getOrElse(
-      Partitioner.computeStats(t.read(t.allRoots), idx.head))
-    val prevMeta = t.meta ++ statsMeta(prevStats.merge(batchStats)) ++ extraMeta ++
-      Collection.opTag("append")
+    val prevMeta = t.meta ++
+      t.indexStats.fold(Map.empty[String, JValue])(s => statsMeta(s.merge(batchStats))) ++
+      extraMeta ++ Collection.opTag("append")
     publish(item, stage(item, withTimeLayout(combined, idx, t.salt, layout, dedupRows = true),
         partitioned = true),
       Periods(months), prevMeta, expectedGen = Some(Snapshots.generationOf(t.meta)),
@@ -2529,8 +2495,8 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
           expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
         Collection.ExpireResult(toRemove, boundaryDeleted)
       case None =>
-        Collection.ExpireResult(Nil,
-          deleteWhere(item, col(idx.head) < lit(cutoff)))
+        // this attempt's resolution, inside expireBefore's own retry
+        Collection.ExpireResult(Nil, deleteWhereOnce(item, t, col(idx.head) < lit(cutoff)))
     }
   }
 
@@ -2557,13 +2523,15 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // publish, and the retry re-applies the predicate to the fresh
     // state — a legal serialization (the delete ran after that commit)
     Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-      deleteWhereOnce(item, predicate) }
+      deleteWhereOnce(item, resolveLive(item), predicate) }
 
-  private def deleteWhereOnce(item: String,
+  private def deleteWhereOnce(item: String, t: ReadRoots.Target,
                               predicate: org.apache.spark.sql.Column): Long = {
-    val t = resolveLive(item)
     val baseGen = Snapshots.generationOf(t.meta)
     val matches = deleteScan(t, predicate)
+    // a row is deleted only where the predicate is TRUE (SQL DELETE):
+    // one where it is NULL is kept, as `!predicate` would not
+    val keep = !coalesce(predicate, lit(false))
     t.layout match {
       case Some(_) =>
         // the discovery scan already reads exactly the matching rows
@@ -2577,7 +2545,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
         val months = monthRows.map(_.getString(0)).toSeq.sorted
         if (months.isEmpty) return 0L
         val touched = t.read(ReadRoots.dirRoots(t, Some(months)), period = true)
-        publish(item, stage(item, clusterPeriods(touched.filter(!predicate), t.indexCols, t.salt),
+        publish(item, stage(item, clusterPeriods(touched.filter(keep), t.indexCols, t.salt),
             partitioned = true),
           Periods(months), t.meta ++ Collection.opTag("delete_where"),
           expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
@@ -2585,7 +2553,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       case None =>
         val deleted = matches.count()
         if (deleted == 0L) return 0L
-        publish(item, stage(item, t.read(t.allRoots).filter(!predicate), partitioned = false),
+        publish(item, stage(item, t.read(t.allRoots).filter(keep), partitioned = false),
           Full(partitioned = false), t.meta ++ Collection.opTag("delete_where"),
           expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
         deleted
@@ -3037,64 +3005,13 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     } finally if (NF.exists(staging)) FsOps.deleteRecursively(staging)
   }
 
+  /** Re-lay an item in place through its own layout (always rewritten):
+    * a flat item over `npartitions` files or the auto count — the
+    * number it returns — and a time-layout item one file per period ×
+    * salt, returning its data file count. */
   def rebalance(item: String, npartitions: Option[Int] = None,
-                reindex: Boolean = false): Int = {
-    // fenced + retried like every read-modify-write (see append): a
-    // commit landing mid-rebalance must not be clobbered by the re-lay
-    val out = Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-    if (!hasItem(item))
-      throw new ItemNotFoundError(s"item '$item' does not exist")
-    val t = resolveLive(item)
-    val baseGen = Snapshots.generationOf(t.meta)
-    val idx = t.indexCols
-    val df = t.read(t.allRoots)
-    // Read fully before the swap overwrites the source files: the
-    // write job streams from the old files into the tmp dir, and the
-    // swap happens only after the job completes — safe.
-    t.layout match {
-      case Some(layout) =>
-        // a time-layout item re-lays THROUGH its layout (partitioned
-        // commit): a flat rewrite would silently destroy the period
-        // dirs the incremental append/expire machinery lists. The
-        // period clustering dictates partitioning — an explicit
-        // npartitions cannot be honored, so reject it (typed, matching
-        // the rebalanceZOrder precedent) rather than silently dropping
-        // the request; compaction value = one file per period × salt.
-        if (npartitions.isDefined)
-          throw new ValidationError(
-            s"rebalance: item '$item' has a time layout; npartitions cannot be " +
-              "honored (the period clustering dictates partitioning) — omit it")
-        val laidOut = withTimeLayout(df, idx, t.salt, layout)
-        // the re-lay re-keys every period in THIS session's tz: record
-        // it so later period-name pruning resolves against the zone the
-        // dirs are actually keyed in
-        publish(item, stage(item, laidOut, partitioned = true), Full(partitioned = true),
-          t.meta ++ Meta.obj(
-            "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC")) ++
-            Collection.opTag("rebalance"),
-          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
-        dataDirFileCount(item)
-      case None =>
-        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
-        val (n, strategy) = npartitions match {
-          case Some(k) => (k, Partitioner.SizeBased)
-          case None    => Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-        }
-        val laidOut = flatRelayout(df, idx, n)
-        val prevMeta = t.meta ++
-          Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name)
-        publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
-          prevMeta ++ Collection.opTag("rebalance"),
-          expectedGen = Some(baseGen), expectedMeta = Some(t.meta))
-        n
-    }
-    }
-    // the rewrite moved the generation, retiring every skip index; the
-    // opt-in re-arm rebuilds them against the NEW layout (outside the
-    // fence — a racing commit just retires the fresh build again)
-    if (reindex) rebuildIndexes(item)
-    out
-  }
+                reindex: Boolean = false): Int =
+    relayItem(item, None, npartitions, reindex, "rebalance")
 
   private def dataDirFileCount(item: String): Int =
     path.fs.listFilesRecursively(
@@ -3112,64 +3029,89 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     * snapshot serves) all survive; only the layout keys change.
     * Converting to the CURRENT layout (same salt) is a no-op. */
   def convertLayout(item: String, timeLayout: Option[String] = None,
-                    monthlySalt: Int = 1, reindex: Boolean = false): Unit = {
+                    monthlySalt: Int = 1, reindex: Boolean = false): Unit =
+    relayItem(item, Some((timeLayout.getOrElse("flat"), monthlySalt)), None, reindex,
+      "convert_layout")
+
+  /** The full re-lay behind [[rebalance]] (`to` = None: the item's own
+    * layout and salt, always rewritten) and [[convertLayout]] (`to` =
+    * layout name and salt; a no-op when the item already has both), as
+    * one read-modify-write committed under history verb `op`. A time
+    * layout re-keys every row in THIS session's zone, recorded as
+    * `_layout_tz`; a flat one goes through [[flatPlan]]. Returns the
+    * flat file count, the time layout's data file count, or 0 for a
+    * no-op. */
+  private def relayItem(item: String, to: Option[(String, Int)],
+                        npartitions: Option[Int], reindex: Boolean, op: String): Int = {
     if (!hasItem(item))
       throw new ItemNotFoundError(s"item '$item' does not exist")
-    val target = timeLayout.getOrElse("flat")
-    val isTime = target != "flat"
-    if (isTime && !TimeLayouts.contains(target))
+    to.map(_._1).filter(l => l != "flat" && !TimeLayouts.contains(l)).foreach { l =>
       throw new ValidationError(
-        s"unknown time layout '$target' (supported: ${TimeLayouts.mkString(",")})")
-    // fenced + retried like every read-modify-write (see append)
-    val converted = Collection.retryOnConflict(genProbe = genProbeFor(item)) {
-    val t = resolveLive(item)
-    // converting to the current layout (same salt) is a no-op
-    val changes = t.layout.getOrElse("flat") != target || (isTime && t.salt != monthlySalt)
-    if (changes) {
-      val idx = t.indexCols
-      val df = t.read(t.allRoots)
-      if (isTime && !Partitioner.isTemporal(df, idx.head))
-        throw new ValidationError("time layouts require a timestamp/date index column")
-      val prevMeta = t.meta
-      val baseGen = Snapshots.generationOf(prevMeta)
-      if (isTime) {
-        val newMeta = prevMeta ++ Meta.obj(
-          "_layout" -> target,
-          "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC"),
-          "_monthly_salt" -> monthlySalt,
-          "_partitions" -> 0,
-          "_partition_strategy" -> Partitioner.TimeBased.name)
-        publish(item, stage(item, withTimeLayout(df, idx, monthlySalt, target),
-            partitioned = true), Full(partitioned = true),
-          newMeta ++ Collection.opTag("convert_layout"),
-          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
-      } else {
-        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
-        val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-        // stale period bookkeeping must not survive a flat conversion
-        val newMeta = (prevMeta - "_layout_tz" - "_period_gens" - "_period_stats") ++ Meta.obj(
-          "_layout" -> "flat",
-          "_monthly_salt" -> 1,
-          "_partitions" -> n,
-          "_partition_strategy" -> strategy.name)
-        publish(item, stage(item, flatRelayout(df, idx, n), partitioned = false),
-          Full(partitioned = false), newMeta ++ Collection.opTag("convert_layout"),
-          expectedGen = Some(baseGen), expectedMeta = Some(prevMeta))
+        s"unknown time layout '$l' (supported: ${TimeLayouts.mkString(",")})")
+    }
+    // fenced + retried like every read-modify-write (see append): a
+    // commit landing mid-rewrite must not be clobbered by the re-lay
+    val out = Collection.retryOnConflict(genProbe = genProbeFor(item)) {
+      val t = resolveLive(item)
+      val current = t.layout.getOrElse("flat")
+      val (layout, salt) = to.getOrElse((current, t.salt))
+      val isTime = layout != "flat"
+      if (to.isDefined && layout == current && (!isTime || salt == t.salt)) None
+      else {
+        val idx = t.indexCols
+        // Read fully before the swap overwrites the source files: the
+        // write job streams from the old files into the tmp dir, and
+        // the swap happens only after the job completes — safe.
+        val df = t.read(t.allRoots)
+        def commit(laidOut: DataFrame, partitioned: Boolean, meta: Map[String, JValue]): Unit =
+          publish(item, stage(item, laidOut, partitioned), Full(partitioned),
+            meta ++ Collection.opTag(op),
+            expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
+        if (isTime) {
+          // the period clustering dictates partitioning — an explicit
+          // npartitions cannot be honored, so reject it (typed, matching
+          // the rebalanceZOrder precedent) rather than silently dropping
+          // the request
+          if (npartitions.isDefined)
+            throw new ValidationError(
+              s"rebalance: item '$item' has a time layout; npartitions cannot be " +
+                "honored (the period clustering dictates partitioning) — omit it")
+          if (!Partitioner.isTemporal(df, idx.head))
+            throw new ValidationError("time layouts require a timestamp/date index column")
+          commit(withTimeLayout(df, idx, salt, layout), partitioned = true, t.meta ++ Meta.obj(
+            "_layout" -> layout,
+            "_layout_tz" -> spark.conf.get("spark.sql.session.timeZone", "UTC"),
+            "_monthly_salt" -> salt,
+            "_partitions" -> 0,
+            "_partition_strategy" -> Partitioner.TimeBased.name))
+          Some(dataDirFileCount(item))
+        } else {
+          val (laidOut, layoutMeta) = flatPlan(df, idx, t.indexStats, npartitions)
+          // stale period bookkeeping must not survive a flat conversion
+          val meta = if (current == "flat") t.meta
+            else (t.meta - "_layout_tz" - "_period_gens" - "_period_stats") ++
+              Meta.obj("_layout" -> "flat", "_monthly_salt" -> 1)
+          commit(laidOut, partitioned = false, meta ++ layoutMeta)
+          Some(Meta.unjv(layoutMeta("_partitions")).asInstanceOf[Long].toInt)
+        }
       }
     }
-    changes
-    }
-    if (reindex && converted) rebuildIndexes(item) // see rebalance
+    // the rewrite moved the generation, retiring every skip index; the
+    // opt-in re-arm rebuilds them against the NEW layout (outside the
+    // fence — a racing commit just retires the fresh build again)
+    if (reindex && out.isDefined) rebuildIndexes(item)
+    out.getOrElse(0)
   }
 
   /** Z-order rebalance — the `OPTIMIZE ... ZORDER BY` analogue: re-lay
     * an item along the Morton curve of `cols` so row-group min/max
     * stats prune on EVERY listed column, not just the sort index
     * (multi-dimensional pruning is what a filter on a non-index column
-    * needs at 100 TB). One stats pass + one range exchange on the
-    * curve value (graft.operators.ZOrder.cluster), committed
-    * atomically with the clustering recorded in the sidecar. Reads and
-    * probes are unchanged — this is a physical-layout-only rewrite. */
+    * needs at 100 TB). One stats pass, then the flat layout of the
+    * curve value ([[flatPlan]], as graft.operators.ZOrder.cluster lays
+    * it out), committed atomically with the clustering recorded in the
+    * sidecar. Reads and probes are unchanged — this is a
+    * physical-layout-only rewrite. */
   def rebalanceZOrder(item: String, cols: Seq[String],
                       bits: Int = 16,
                       npartitions: Option[Int] = None,
@@ -3179,7 +3121,7 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     // fenced + retried like every read-modify-write (see append)
     Collection.retryOnConflict(genProbe = genProbeFor(item)) {
     val t = resolveLive(item)
-    // z-order's range exchange and a period-partitioned write are
+    // z-order's curve-range layout and a period-partitioned write are
     // incompatible layouts (each range partition would splinter across
     // period dirs): reject rather than silently flatten the item and
     // orphan the incremental append/expire machinery
@@ -3187,14 +3129,15 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
       throw new ValidationError(
         s"rebalanceZOrder: item '$item' has a time layout; z-order applies to " +
           "flat items (use rebalance() to compact a time-layout item)")
-    val df = t.read(t.allRoots)
-    val laidOut = graft.operators.ZOrder.cluster(df, cols, bits,
-      Some(npartitions.getOrElse(
-        Partitioner.decide(Partitioner.estimatedBytes(df),
-          t.indexStats.getOrElse(Partitioner.computeStats(df, t.indexCols.head)))._1)))
-    val prevMeta = t.meta ++
+    // the Morton value is the flat layout's index: files cover
+    // disjoint curve ranges, their count decided by size
+    val curve = graft.operators.ZOrder.CurveCol
+    val (laidOut, layoutMeta) = flatPlan(
+      graft.operators.ZOrder.withCurve(t.read(t.allRoots), cols, bits), Seq(curve), None,
+      npartitions)
+    val prevMeta = t.meta ++ layoutMeta ++
       Meta.obj("_zorder_cols" -> cols.mkString(","), "_zorder_bits" -> bits)
-    publish(item, stage(item, laidOut, partitioned = false), Full(partitioned = false),
+    publish(item, stage(item, laidOut.drop(curve), partitioned = false), Full(partitioned = false),
       prevMeta ++ Collection.opTag("zorder"),
       expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))
     }
@@ -3524,13 +3467,9 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
   private def relay(item: String, t: ReadRoots.Target, df: DataFrame,
                     meta: Map[String, JValue]): Unit = {
     val idx = t.indexCols
-    val (laidOut, partitioned, layoutMeta) = t.layout match {
-      case Some(_) => (clusterPeriods(df, idx, t.salt), true, Map.empty[String, JValue])
-      case None =>
-        val stats = t.indexStats.getOrElse(Partitioner.computeStats(df, idx.head))
-        val (n, strategy) = Partitioner.decide(Partitioner.estimatedBytes(df), stats)
-        (flatRelayout(df, idx, n), false,
-          Meta.obj("_partitions" -> n, "_partition_strategy" -> strategy.name))
+    val ((laidOut, layoutMeta), partitioned) = t.layout match {
+      case Some(_) => ((clusterPeriods(df, idx, t.salt), Map.empty[String, JValue]), true)
+      case None    => (flatPlan(df, idx, t.indexStats, None), false)
     }
     publish(item, stage(item, laidOut, partitioned), Full(partitioned), meta ++ layoutMeta,
       expectedGen = Some(Snapshots.generationOf(t.meta)), expectedMeta = Some(t.meta))

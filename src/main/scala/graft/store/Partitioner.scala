@@ -1,7 +1,10 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.types.{TimestampType, TimestampNTZType, DateType, LongType}
+import graft.functions.expressions.sort_prefix
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.CollationKey
+import org.apache.spark.sql.types._
 
 /** Physical-layout policy: how many output files / how rows are
   * distributed across them.
@@ -17,18 +20,21 @@ import org.apache.spark.sql.types.{TimestampType, TimestampNTZType, DateType, Lo
   *    data with >10k rows (collection.py:272-301), falling back to
   *    size-based when it would exceed maxPartitions.
   *
-  * Spark realization: `repartitionByRange(n, col(index))` +
-  * `sortWithinPartitions(index)` — one shuffle that yields globally
+  * Spark realization ([[layout]]): bucket bounds the driver derives
+  * from quantile cuts of the leading index column ([[planFlat]], one
+  * narrow `percentile_approx` in the column's own type), one hash
+  * exchange on a carrier value that gives every bucket its own
+  * partition, then `sortWithinPartitions(index)` — globally
   * range-ordered output like Dask divisions (SURVEY §2.7 D3), so every
   * part-file covers a disjoint index range and Parquet row-group
   * min/max stats give O(files-touched) time-range scans.
   *
   * Scale note (100 TB): range partitioning keeps time-locality so a
-  * day/month query prunes to a few files; `repartitionByRange` samples
-  * the index to compute balanced boundaries, which also absorbs skew.
-  * At cluster scale the same policy applies per item with n in the
-  * thousands; nothing here is driver-bound except the tiny size
-  * estimate.
+  * day/month query prunes to a few files; the quantile sketch balances
+  * the files, which also absorbs skew, from a scan of the index column
+  * alone. At cluster scale the same policy applies per item with n in
+  * the thousands; nothing here is driver-bound except the tiny size
+  * estimate and the n−1 bounds.
   */
 object Partitioner {
 
@@ -127,26 +133,16 @@ object Partitioner {
       case None    => (sizeBasedCount(bytes), SizeBased)
     }
 
-  /** Apply a chosen layout: range-partition on the index and sort
-    * within partitions so the on-disk files are globally index-ordered.
-    */
-  def apply(df: DataFrame, indexCols: Seq[String], n: Int): DataFrame =
-    layout(df, indexCols, n, None)
+  // ------------------------------------------------------------ layout
+  // Bounds the driver holds, not Spark's range exchange: that one
+  // learns its bounds by sampling, an extra execution of the whole
+  // child plan (every column decoded; for an append, the dedup
+  // subtree's reduce side re-run), where the cuts ride the narrow
+  // index-column aggregation the layout stats need anyway (guide §1.4).
 
-  // ------------------------------------------------ bounds-path layout
-  // `repartitionByRange` learns its boundaries by SAMPLING: an extra
-  // execution of the whole child plan (every column decoded; for an
-  // append, the dedup subtree's reduce side re-run) before the real
-  // exchange reads it again. When the boundaries can be computed on
-  // the driver from a quantile sketch riding the SAME narrow
-  // aggregation that already computes the layout stats (guide §1.4),
-  // the exchange becomes a plain hash repartition on a carrier value
-  // chosen so every bucket owns exactly one shuffle partition — same
-  // file count, same per-file disjoint index ranges, same low-to-high
-  // file order, no sampling pass.
-
-  /** Resolution of the quantile cuts collected by [[planFlat]]; any
-    * n ≤ [[MaxBoundsPartitions]] derives its n−1 boundaries from them. */
+  /** Resolution of the quantile cuts collected by [[planFlat]] for up
+    * to [[MaxBoundsPartitions]] files; a layout of more files collects
+    * two cuts per file, so any n derives its n−1 boundaries from them. */
   val BoundsCuts: Int = 256
   val MaxBoundsPartitions: Int = 128
   /** Sketch accuracy for the cut quantiles: bounds only steer file
@@ -154,75 +150,65 @@ object Partitioner {
     * the default 10000 costs ~6× the aggregation time for nothing. */
   val BoundsAccuracy: Int = 1000
 
-  /** LONG lift of the index column whose ordering equals the column's
-    * Spark sort ordering — the domain the driver-held range bounds live
-    * in. None = unsupported dtype (float/string/decimal — NaN ordering
-    * and collation make a lifted comparison unsafe) or a TIMESTAMP_NTZ
-    * session outside UTC (the NTZ→TZ cast is order-preserving only in
-    * a DST-free zone): those writes keep the sampled range exchange. */
-  def sortKeyExpr(df: DataFrame, indexCol: String): Option[org.apache.spark.sql.Column] =
+  /** The value the leading index column buckets by, ordered as Spark
+    * sorts the column. Every type `percentile_approx` takes is its own
+    * key, compared natively: numerics (the sketch sorts NaN last and
+    * −0.0 with 0.0, as `<=` does), dates, timestamps in either flavour,
+    * intervals. Strings and binaries lift to the big-endian 8-byte
+    * prefix of their collation key (Spark's `CollationKey`: the UTF-8
+    * bytes under UTF8_BINARY, the collator's sort key otherwise), so a
+    * collated string buckets in its own order; the lift is monotone
+    * but not strict — values sharing a prefix share a bucket, which is
+    * enough because bounds only steer balance. Booleans bucket as 0/1.
+    * None: no quantile domain (structs, arrays), laid out as one file. */
+  private def sortKey(df: DataFrame, indexCol: String): Option[Column] =
     df.schema.find(_.name == indexCol).map(_.dataType).flatMap {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | LongType =>
-        Some(F.col(indexCol).cast(LongType))
-      case TimestampType => Some(F.unix_micros(F.col(indexCol)))
-      case TimestampNTZType
-          if df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC") == "UTC" =>
-        Some(F.unix_micros(F.col(indexCol).cast(TimestampType)))
-      case DateType => Some(F.unix_date(F.col(indexCol)).cast(LongType))
-      case _ => None
+      case _: NumericType | DateType | TimestampType | TimestampNTZType |
+           _: DayTimeIntervalType | _: YearMonthIntervalType => Some(F.col(indexCol))
+      case _: StringType => Some(sort_prefix(column(CollationKey(expression(F.col(indexCol))))))
+      case BinaryType    => Some(sort_prefix(F.col(indexCol)))
+      case BooleanType   => Some(F.col(indexCol).cast(ByteType))
+      case _             => None
     }
 
-  final case class FlatPlan(stats: IndexStats, cuts: Option[Seq[Long]])
+  /** Layout stats plus the quantile cuts of the index's sort key, in
+    * the key's own type (empty when it has no non-null value). */
+  final case class FlatPlan(stats: IndexStats, cuts: Seq[Any])
 
   /** ONE narrow aggregation job (guide §1.4) carrying BOTH the layout
     * stats (count, plus index min/max when temporal — value-identical
-    * to [[computeStats]]) and the fine-grained quantile cuts of the
-    * sort key. The scan reads only the index column. */
-  def planFlat(df: DataFrame, indexCol: String,
-               key: Option[org.apache.spark.sql.Column]): FlatPlan = key match {
-    case None => FlatPlan(computeStats(df, indexCol), None)
-    case Some(k) =>
-      val pa = F.percentile_approx(k, cutPercentages, F.lit(BoundsAccuracy))
-      if (!isTemporal(df, indexCol)) {
-        val row = df.agg(F.count(F.lit(1)), pa).head()
-        FlatPlan(IndexStats(row.getLong(0), None, None), cutsOf(row, 1))
-      } else {
-        val row = df.agg(F.count(F.lit(1)),
-          F.min(F.col(indexCol)), F.max(F.col(indexCol)), pa).head()
-        val lo = if (row.isNullAt(1)) None else Some(toEpochMs(row.get(1)))
-        val hi = if (row.isNullAt(2)) None else Some(toEpochMs(row.get(2)))
-        FlatPlan(IndexStats(row.getLong(0), lo, hi), cutsOf(row, 3))
+    * to [[computeStats]]) and the quantile cuts of the sort key, fine
+    * enough for a layout of up to `n` files. The scan reads only the
+    * index column. */
+  def planFlat(df: DataFrame, indexCol: String, n: Int): FlatPlan = {
+    val resolution = if (n <= MaxBoundsPartitions) BoundsCuts else 2 * n
+    val cuts = sortKey(df, indexCol).map { k =>
+      val sketch = F.percentile_approx(k,
+        F.typedLit((1 until resolution).map(_.toDouble / resolution)), F.lit(BoundsAccuracy))
+      // the sketch works in doubles: a decimal cut rounded past the
+      // column's precision comes back NULL, so its array must admit nulls
+      df.schema(indexCol).dataType match {
+        case d: DecimalType => sketch.cast(ArrayType(d, containsNull = true))
+        case _              => sketch
       }
+    }
+    val temporal = isTemporal(df, indexCol)
+    val aggs = F.count(F.lit(1)) +:
+      ((if (temporal) Seq(F.min(F.col(indexCol)), F.max(F.col(indexCol))) else Nil) ++ cuts)
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    def ms(i: Int) = if (!temporal || row.isNullAt(i)) None else Some(toEpochMs(row.get(i)))
+    val at = if (temporal) 3 else 1
+    FlatPlan(IndexStats(row.getLong(0), ms(1), ms(2)),
+      if (cuts.isEmpty || row.isNullAt(at)) Nil else row.getSeq[Any](at).filter(_ != null))
   }
-
-  /** Quantile cuts for an append's bounds-path layout, from ONE narrow
-    * scan of (item ∪ batch) index values: an upper-bound distribution
-    * of the combined dedup plan's output (dedup only removes rows),
-    * balanced enough for bounds and far cheaper than the sampling pass,
-    * which re-executes the dedup plan itself. An append runs it only
-    * when the cuts are used (1 < n ≤ [[MaxBoundsPartitions]]); the
-    * batch stats come from its staging job, or from a batch-only
-    * [[computeStats]] when a time-based decision needs the span first.
-    * None = an index dtype [[sortKeyExpr]] cannot lift. */
-  def planAppend(old: DataFrame, batch: DataFrame, indexCol: String): Option[Seq[Long]] = {
-    val u = old.select(indexCol).unionByName(batch.select(indexCol))
-    sortKeyExpr(u, indexCol).flatMap(k => planFlat(u, indexCol, Some(k)).cuts)
-  }
-
-  private def cutPercentages =
-    F.typedLit((1 until BoundsCuts).map(_.toDouble / BoundsCuts))
-
-  private def cutsOf(row: org.apache.spark.sql.Row, i: Int): Option[Seq[Long]] =
-    if (row.isNullAt(i)) None else Some(row.getSeq[Long](i))
 
   /** Bucket boundaries for n partitions from the fine cuts: the i/n
     * quantile for i in 1..n−1, deduplicated (a single value owning more
-    * than a 1/BoundsCuts mass span collapses adjacent boundaries — the
-    * sampled RangePartitioner collapses duplicate candidates the same
-    * way, emitting fewer, larger partitions). */
-  def boundsFromCuts(cuts: Seq[Long], n: Int): Seq[Long] =
-    (1 until n).map { i =>
+    * than one cut's mass span collapses adjacent boundaries, emitting
+    * fewer, larger partitions). */
+  def boundsFromCuts[T](cuts: Seq[T], n: Int): Seq[T] =
+    if (cuts.isEmpty) Nil
+    else (1 until n).map { i =>
       val k = math.max(1L, math.min(cuts.size.toLong,
         math.round(i.toDouble * (cuts.size + 1) / n)))
       cuts(k.toInt - 1)
@@ -232,8 +218,7 @@ object Partitioner {
     * carrier(i) Murmur3-hashes (seed 42, pmod b — HashPartitioning's
     * exact partitionIdExpression for an int key) to shuffle partition
     * i, so `repartition(b, carrier(bucket))` gives every bucket its
-    * OWN output partition, preserving the one-sorted-range-per-file
-    * layout the sampled range exchange produced. */
+    * OWN output partition: one sorted range per file. */
   private[graft] def carrierValues(b: Int): IndexedSeq[Int] = {
     val out = new Array[Int](b); val seen = new Array[Boolean](b)
     var found = 0; var v = 0
@@ -246,50 +231,48 @@ object Partitioner {
     out.toIndexedSeq
   }
 
-  /** Flat layout via driver-held bounds when available (from
-    * [[planFlat]]/[[planAppend]]); the sampled range exchange otherwise.
-    * Bucket assignment `count(bounds < key)` is RangePartitioner's
-    * exact rule (nulls → bucket 0, boundary ties go left), so files
-    * stay sorted with disjoint index ranges — the D3 invariant.
+  /** Flat layout over up to n files from the `cuts` of [[planFlat]]:
+    * bucket `count(bounds < key)` on the leading index column (nulls →
+    * bucket 0, boundary ties go left, as Spark's range partitioner
+    * places them), one carrier hash exchange, then a sort on every
+    * index column, so files are sorted with disjoint, ascending index
+    * ranges — the D3 invariant. A multi-column index buckets on its
+    * leading column: tuples tied on it share a bucket, so files stay
+    * disjoint in tuple order. One bucket (n = 1, no cuts, no sort key)
+    * is a single-partition exchange.
     *
     * `dedupRows` collapses identical full rows (the append's D1)
-    * between the exchange and the sort. Every exchange here clusters
-    * on the index (a range partitioning, a single partition, or the
-    * bounds carrier — kept as a column through the dedup and dropped
-    * after it) and identical rows share their index, so the dedup's
-    * clustering is already met and the plan shuffles once. */
+    * between the exchange and the sort. The exchange clusters on the
+    * index (a single partition, or the carrier — kept as a column
+    * through the dedup and dropped after it) and identical rows share
+    * their index, so the dedup's clustering is already met and the
+    * plan shuffles once. */
   def layout(df: DataFrame, indexCols: Seq[String], n: Int,
-             cuts: Option[Seq[Long]], dedupRows: Boolean = false): DataFrame = {
+             cuts: Seq[Any], dedupRows: Boolean = false): DataFrame = {
     def dedup(d: DataFrame) = if (dedupRows) d.dropDuplicates() else d
     val sortable = indexCols.filter(c => df.columns.contains(c))
-    if (sortable.isEmpty) return dedup(df).repartition(n)
-    val keyOpt =
-      if (sortable.size == 1 && n > 1 && n <= MaxBoundsPartitions)
-        cuts.filter(_.nonEmpty).flatMap(_ => sortKeyExpr(df, sortable.head))
-      else None
-    val clustered = keyOpt match {
-      case None => dedup(df.repartitionByRange(n, sortable.map(F.col): _*))
-      case Some(k) =>
-        val bounds = boundsFromCuts(cuts.get, n)
+    val key = sortable.headOption.flatMap(sortKey(df, _))
+    val bounds = if (key.isEmpty) Nil else boundsFromCuts(cuts, n)
+    val clustered =
+      if (bounds.isEmpty) dedup(df.repartition(1))
+      else {
         val b = bounds.size + 1
         val carriers = carrierValues(b)
+        val k = key.get
         // Chained CASE WHEN, not array filter/aggregate: higher-order
         // functions fall out of whole-stage codegen and run interpreted
         // per row — a 3× map-stage hit measured at sf0.1. Nulls take
-        // the FIRST branch (bucket 0), RangePartitioner's null-first
-        // rule; boundary ties go left via <=.
+        // the FIRST branch (bucket 0); boundary ties go left via <=.
         val carrier = bounds.zipWithIndex
-          .foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-            case (acc, (bd, i)) =>
-              val cond =
-                if (i == 0) k.isNull || (k <= F.lit(bd)) else k <= F.lit(bd)
-              val branch = F.lit(carriers(i))
-              Some(acc.fold(F.when(cond, branch))(_.when(cond, branch)))
+          .foldLeft(Option.empty[Column]) { case (acc, (bd, i)) =>
+            val cond = if (i == 0) k.isNull || (k <= F.lit(bd)) else k <= F.lit(bd)
+            val branch = F.lit(carriers(i))
+            Some(acc.fold(F.when(cond, branch))(_.when(cond, branch)))
           }.get.otherwise(F.lit(carriers(b - 1)))
         if (!dedupRows) df.repartition(b, carrier)
         else df.withColumn(CarrierCol, carrier).repartition(b, F.col(CarrierCol))
           .dropDuplicates().drop(CarrierCol)
-    }
+      }
     clustered.sortWithinPartitions(sortable.map(F.col): _*)
   }
 

@@ -3,16 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan-evidence dumper for the round-19 write-side and verify-side
-  * optimizations, whose DECLARED-query top-level plans are unchanged
-  * by design (a store query returns its read-back frame; the dedup
-  * verify is stats-adaptive and keeps the classic plan at bench
-  * scale). This dumps the exact subplans that changed, under BOTH
-  * regimes, so the before/after diff is reproducible from code:
-  *   - flat write layout: sampled range exchange (before) vs
-  *     driver-held-bounds carrier hash exchange (after);
-  *   - dedup verify: direct two-tokenize join (small-corpus branch)
-  *     vs candidate-localized single-tokenize join (big-corpus branch).
+/** Plan-evidence dumper for the dedup verify, whose DECLARED-query
+  * top-level plan is unchanged by design (the verify is stats-adaptive
+  * and keeps the classic plan at bench scale). This dumps both
+  * regimes' subplans, so the diff is reproducible from code: the
+  * direct two-tokenize join (small-corpus branch) vs the
+  * candidate-localized single-tokenize join (big-corpus branch).
   * Usage: tools/run_main.sh graft.tools.LayoutPlans plans/r19 */
 object LayoutPlans {
   def main(args: Array[String]): Unit = {
@@ -36,16 +32,6 @@ object LayoutPlans {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"dumped $name")
     }
-
-    // ---- flat write layout (store_write_read's commit child plan)
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val idx = Seq("l_shipdate")
-    dump("write_layout_before",
-      graft.store.Partitioner.apply(li, idx, 7))
-    val key = graft.store.Partitioner.sortKeyExpr(li, "l_shipdate")
-    val plan = graft.store.Partitioner.planFlat(li, "l_shipdate", key)
-    dump("write_layout_after",
-      graft.store.Partitioner.layout(li, idx, 7, plan.cuts))
 
     // ---- dedup verify branches (dedup_minhash_lsh / dedup_simhash corpus)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

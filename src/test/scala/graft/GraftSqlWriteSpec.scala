@@ -141,6 +141,27 @@ class GraftSqlWriteSpec extends SparkSpec {
     cleanup(c)
   }
 
+  test("deleteWhere and DELETE FROM keep the rows where the predicate is NULL") {
+    import spark.implicits._
+    val c = tempCollection("sql_del_null")
+    registerCatalog("wdel3", c)
+    val rows = Seq(("2024-01-01", Some(1.0)), ("2024-01-02", None), ("2024-02-01", Some(9.0)))
+      .map { case (d, v) => (java.sql.Timestamp.valueOf(s"$d 00:00:00"), v) }
+      .toDF("index", "value")
+    for (monthly <- Seq(false, true)) {
+      val (api, sql) = (s"api_$monthly", s"sql_$monthly")
+      c.write(api, rows, monthlyLayout = monthly)
+      c.write(sql, rows, monthlyLayout = monthly)
+      assert(c.deleteWhere(api, col("value") > 5.0) == 1L, api)
+      spark.sql(s"DELETE FROM wdel3.c.$sql WHERE value > 5")
+      for (item <- Seq(api, sql)) {
+        val left = c.item(item).data.select("value").collect().map(r => Option(r.get(0))).toSet
+        assert(left == Set(Some(1.0), None), s"$item kept $left")
+      }
+    }
+    cleanup(c)
+  }
+
   test("TRUNCATE TABLE empties the item through delete-all") {
     val c = tempCollection("sql_trunc")
     c.write("item", frame("2024-01-01", 40), monthlyLayout = true)

@@ -698,4 +698,71 @@ class PropertySpec extends SparkSpec {
     assert(after.filter($"name".startsWith("x")).count() == 10)
     cleanup(c)
   }
+
+  test("property: Partitioner.layout keeps the rows in sorted files, range-disjoint and ascending, for every index dtype") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.expressions.Window
+    val rng = new Random(97)
+    def pick[T](xs: IndexedSeq[T]): T = xs(rng.nextInt(xs.size))
+    val t0 = java.time.LocalDateTime.of(2024, 3, 10, 0, 0) // a New York DST gap
+    val nines = new java.math.BigDecimal("9" * 38)
+    // small domains: every frame has ties
+    val gens: Seq[(DataType, () => Any)] = Seq(
+      IntegerType -> (() => Int.box(rng.nextInt(41) - 20)),
+      LongType -> (() => Long.box(pick(IndexedSeq(Long.MinValue, Long.MaxValue,
+        rng.nextInt(60) * 1000003L - 30000000L)))),
+      DoubleType -> (() => Double.box(pick(IndexedSeq(Double.NaN, -0.0, 0.0,
+        Double.NegativeInfinity, Double.PositiveInfinity, Double.MinPositiveValue,
+        rng.nextInt(40) / 4.0 - 5.0)))),
+      DecimalType(38, 0) -> (() => pick(IndexedSeq(nines, nines.negate,
+        java.math.BigDecimal.valueOf(rng.nextInt(50) - 25L).scaleByPowerOfTen(rng.nextInt(30))))),
+      StringType -> (() => pick(IndexedSeq("", "a", "ab", "a\u0000", "b", "z", "é", "éa",
+        "日本", "日本語", "Ω", "\uD83D\uDE00", "prefix__", "prefix__a", "prefix__b",
+        "prefix__ab", "PREFIX__"))),
+      DateType -> (() => java.sql.Date.valueOf(
+        java.time.LocalDate.of(2024, 1, 1).plusDays(rng.nextInt(80) * 5L - 200))),
+      TimestampType -> (() => java.sql.Timestamp.valueOf(t0.plusMinutes(rng.nextInt(90) * 7L - 300))),
+      TimestampNTZType -> (() => t0.plusMinutes(rng.nextInt(90) * 7L - 300)))
+    def frame(dts: Seq[DataType], gen: Seq[() => Any], rows: Int): DataFrame = {
+      val schema = StructType(dts.zipWithIndex.map { case (dt, i) => StructField(s"k$i", dt) } :+
+        StructField("id", LongType, nullable = false))
+      val data = (0 until rows).map { id =>
+        Row.fromSeq(gen.map(g => if (rng.nextInt(10) == 0) null else g()) :+ id.toLong)
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+    }
+    def check(df: DataFrame, n: Int): Unit = {
+      val idx = df.columns.filter(_ != "id").toSeq
+      val tag = s"${df.schema(idx.head).dataType.simpleString} × ${idx.size}, n = $n"
+      val out = Partitioner.layout(df, idx, n, Partitioner.planFlat(df, idx.head, n).cuts)
+        .withColumn("p", spark_partition_id()).withColumn("j", monotonically_increasing_id())
+        .localCheckpoint(true)
+      // the row multiset is preserved (values compared as the JVM renders them)
+      def rows(d: DataFrame) = d.select(("id" +: idx).map(col): _*).collect()
+        .map(r => r.toSeq.map(String.valueOf)).sortBy(_.head.toLong).toSeq
+      assert(rows(out) == rows(df), tag)
+      // files in Spark's order: the physical (partition, position) order
+      // is the order by index; no leading value spans two partitions;
+      // nulls sort first into partition 0
+      val got = out.select(col("p"), col("j"), col(idx.head).isNull.as("null"),
+          row_number().over(Window.orderBy((idx :+ "p" :+ "j").map(col): _*)).as("r"),
+          dense_rank().over(Window.orderBy(col(idx.head))).as("v"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2), r.getInt(3), r.getInt(4)))
+        .sortBy(r => (r._1, r._2))
+      assert(got.map(_._4).toSeq == (1 to got.length), s"$tag: files unsorted or out of order")
+      assert(got.groupBy(_._5).forall(_._2.map(_._1).distinct.size == 1),
+        s"$tag: a value spans partitions")
+      assert(got.filter(_._3).forall(_._1 == 0), s"$tag: nulls outside partition 0")
+    }
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      for ((dt, g) <- gens; _ <- 1 to 2) check(frame(Seq(dt), Seq(g), 240), rng.nextInt(9) + 1)
+      // a two-column index buckets on its leading column
+      check(frame(Seq(IntegerType, StringType), Seq(gens(0)._2, gens(4)._2), 240),
+        rng.nextInt(8) + 2)
+      // past the standard cut resolution
+      check(frame(Seq(LongType), Seq(() => Long.box(rng.nextInt(100000).toLong)), 3000), 150)
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+  }
 }

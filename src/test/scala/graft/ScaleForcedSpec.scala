@@ -264,20 +264,18 @@ class ScaleForcedSpec extends SparkSpec {
         when(col("id") % 1000 === 0, lit(null).cast("long"))
           .otherwise(pmod(col("id") * col("id"), lit(1000003L))).as("k"),
         (col("id") % 97).cast("double").as("value"))
-      .localCheckpoint(true) // pin content: the twin comparison needs one dataset
-    val plan = Partitioner.planFlat(df, "k", Partitioner.sortKeyExpr(df, "k"))
-    assert(plan.stats.rows == 100000 && plan.cuts.exists(_.nonEmpty))
+      .localCheckpoint(true) // pin content: the comparison needs one dataset
+    val plan = Partitioner.planFlat(df, "k", 8)
+    assert(plan.stats.rows == 100000 && plan.cuts.nonEmpty)
     val bounded = Partitioner.layout(df, Seq("k"), 8, plan.cuts)
-    val legacy = Partitioner.apply(df, Seq("k"), 8)
-    // plan shape: hash exchange on the carrier, NOT a sampled range exchange
+    // plan shape: hash exchange on the carrier, no range exchange anywhere
     val phys = bounded.queryExecution.executedPlan.toString
     assert(phys.contains("hashpartitioning") && !phys.contains("rangepartitioning"),
       s"expected the carrier hash exchange:\n$phys")
-    assert(legacy.queryExecution.executedPlan.toString.contains("rangepartitioning"))
-    // twin-equal content
+    // the layout moves rows, never changes them
     def content(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (Option(r.get(0)), r.getDouble(1))).sortBy(_.toString).toSeq
-    assert(content(bounded) == content(legacy))
+    assert(content(bounded) == content(df))
     // per-partition: sorted, ranges disjoint in partition order, nulls in p0
     val perPart = bounded
       .select(spark_partition_id().as("p"), col("k"))
